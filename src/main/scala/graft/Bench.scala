@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 import java.io.{FileWriter, PrintWriter}
 import java.nio.file.{Files, Paths}
@@ -18,24 +18,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match core/Sessions: AQE right-sizes persisted O(change)
-      // intermediates (merge candidates, keysets) instead of pinning
-      // them at the static shuffle-partition count
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B hatch for isolating catalog/extension overhead in local runs;
-    // the driver never sets it — extensions are on by default
-    val b =
-      if (sys.env.contains("SPARK_GRAFT_NO_EXT")) b0
-      else b0
-        .config("spark.sql.extensions", "graft.sources.GraftExtensions")
-        .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val spark = b.getOrCreate()
+    val spark = Sessions.build("graft-bench", Some(s"local[$cpus]"), cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     // min of 2 runs: the host shows multi-x background-load noise; the
     // second pass is JIT- and page-cache-warm, i.e. the steady-state number
@@ -176,23 +159,21 @@ object Bench {
     // per-query rows from the stdout artifact (PERF r18/r19: n_common 0 —
     // the separate "slowest" chunk lines never reached it). The driver
     // keeps only a 2000-char stdout TAIL, and a beheaded JSON line parses
-    // as null (r6–r9), so the map is filled GREEDILY slowest-first until
-    // the whole line reaches ~1880 chars: the queries that can explain a
-    // total are always present (~60 at current name lengths, a superset of
-    // the old 48-slowest surface) and the line always parses. The COMPLETE
+    // as null (r6–r9), so the map holds the slowest-first PREFIX that
+    // keeps the whole line within ~1880 chars: the queries that can
+    // explain a total are always present (~60 at current name lengths, a
+    // superset of the old 48-slowest surface), the line always parses,
+    // and a query is listed only if every slower one is. The COMPLETE
     // map still lands in target/bench_progress.jsonl + bench_total.json.
     val lineBudget = 1880
     val prefix = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"queries":{"""
     val suffix = s"""},"cpu_total":${r3(totalCpu)},"gc_total":${r3(totalGc)},""" +
       s""""failed_runs":$failedRuns,"failed_queries":$failedJson,"sf":"$sfDir"}"""
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = prefix.length + suffix.length
-    results.sortBy(-_._2).foreach { case (k, v, _, _, _) =>
-      val e = "\"" + k + "\":" + r3(v)
-      val cost = e.length + (if (entries.isEmpty) 0 else 1) // comma
-      if (used + cost <= lineBudget) { entries += e; used += cost }
-    }
-    val short = prefix + entries.mkString(",") + suffix
+    val ranked = results.sortBy(-_._2).map { case (k, v, _, _, _) => "\"" + k + "\":" + r3(v) }
+    // line length with the first i entries (comma-joined), i = 0..n
+    val lengths = ranked.scanLeft(prefix.length + suffix.length - 1)(_ + _.length + 1)
+    val fit = lengths.tail.takeWhile(_ <= lineBudget).size
+    val short = prefix + ranked.take(fit).mkString(",") + suffix
     spark.stop()
     chunks.foreach(println)
     println(short)

@@ -1,11 +1,7 @@
 package graft
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.build("graft-entry-smoke", Some("local[4]"), 4)
     val df = SparkEntry.entry(spark)
     println(s"[entry-smoke] rows=${df.count()}")
     df.show(5)

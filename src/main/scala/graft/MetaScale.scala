@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.Sessions
 import graft.core.Skipping.FileStats
 import graft.jobs.Snapshots
 
@@ -51,14 +50,7 @@ object MetaScale {
   def main(args: Array[String]): Unit = {
     val out = args.headOption
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sources.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build("graft-metascale", Some(s"local[$cpus]"), cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Plan inspector: prints `explain("formatted")` for selected queries so the
   * physical shape (PushedFilters, ReadSchema pruning, broadcast joins,
@@ -12,14 +12,7 @@ object Plans {
                 else Seq("s1_scan_pruned", "j2_revenue_by_nation", "q1_pricing", "a5_top_users",
                   "j_range_tiers", "w_sessionize", "q3_shipping_priority", "j_asof_rates_merge")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sources.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.ui.enabled", "false")
-    val spark = b.getOrCreate()
+    val spark = Sessions.build("graft-plans", Some("local[4]"), 4)
     spark.sparkContext.setLogLevel("ERROR")
     // Dump co-located join plans under the same no-broadcast window their
     // oracles assert in (bucket_join_agg pins ZERO exchanges with

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Sessions
 
 /** Derive an N×-scaled bench dataset from a driver-generated SF directory
   * (events / documents / embeddings — the tables the expensive registry
@@ -36,14 +38,8 @@ object ScaleUp {
     val factor = if (args.length > 2) args(2).toInt else 10
     val saltMode = if (args.length > 3) args(3) else "translate"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build("graft-scaleup", Some(s"local[$cpus]"), cpus.toInt)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =

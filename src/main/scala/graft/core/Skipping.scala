@@ -199,12 +199,13 @@ object Skipping {
     * queue, so a pool-wide stall (one slow read) serializes all commits
     * (r19 ADVICE). CPU-bound fan-outs stay on the common pool, where
     * work-stealing is the right tool. Daemon threads, idle out. */
+  private val metaIoThreadPrefix = "graft-meta-io-"
   private lazy val metaIoPool: java.util.concurrent.ThreadPoolExecutor = {
     val n = math.min(32, math.max(4, Runtime.getRuntime.availableProcessors))
     val tf = new java.util.concurrent.ThreadFactory {
       private val seq = new java.util.concurrent.atomic.AtomicInteger()
       override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-meta-io-${seq.incrementAndGet()}")
+        val t = new Thread(r, s"$metaIoThreadPrefix${seq.incrementAndGet()}")
         t.setDaemon(true)
         t
       }
@@ -218,10 +219,14 @@ object Skipping {
 
   /** Run `f(i)` for i in [0, n) on the metadata-I/O pool; order of the
     * side effects is the caller's to index, the first failure rethrows
-    * its cause (parallel-stream parity). */
+    * its cause (parallel-stream parity). A call made FROM a pool thread
+    * runs inline: queueing it would park that thread on tasks that wait
+    * for a free thread, and enough nested callers deadlock the pool. */
   private[graft] def metaIoParallel(n: Int)(f: Int => Unit): Unit = {
     if (n <= 0) return
-    if (n == 1) { f(0); return }
+    if (n == 1 || Thread.currentThread.getName.startsWith(metaIoThreadPrefix)) {
+      (0 until n).foreach(f); return
+    }
     import scala.jdk.CollectionConverters._
     val tasks: java.util.List[java.util.concurrent.Callable[Unit]] =
       (0 until n).map { i =>

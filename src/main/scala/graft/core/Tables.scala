@@ -33,23 +33,26 @@ object Tables {
     * times per bench/verify run, and equally wasted work on a static
     * 100 TB table. The memo stores only the schema (metadata), never
     * rows; the first read still infers under the timestamp-compat confs
-    * so the cached value is exactly what inference would return. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
+    * so the cached value is exactly what inference would return.
+    * One entry per path, stamped with the file's (mtime, length): a
+    * stamp mismatch re-infers and replaces only that path's entry. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureTimestampCompat(spark)
     val path = s"$dir/$name.parquet"
-    // keyed on (path, mtime) so testdata regenerated IN-PROCESS with a
-    // different schema re-infers instead of silently misreading under the
-    // stale schema (r19 ADVICE). One getFileStatus per read — driver
+    // stamped with (mtime, length) so testdata regenerated IN-PROCESS
+    // with a different schema re-infers instead of silently misreading
+    // under the stale schema — also when the rewrite keeps the mtime
+    // (coarse filesystem clocks). One getFileStatus per read — driver
     // metadata, never a job.
     val p = new org.apache.hadoop.fs.Path(path)
-    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-    if (schemaCache.size > 256) schemaCache.clear()
-    val schema =
-      schemaCache.computeIfAbsent((path, mtime), _ => spark.read.parquet(path).schema)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val stamp = (st.getModificationTime, st.getLen)
+    val (_, schema) = schemaCache.compute(path, (_, old) =>
+      if (old != null && old._1 == stamp) old
+      else (stamp, spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

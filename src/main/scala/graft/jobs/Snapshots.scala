@@ -2467,7 +2467,7 @@ object Snapshots {
     * output committer's job-commit rename fan (v2 promotes task output
     * directly; a crash leaves partial files in an unreferenced dir that
     * `vacuumDebris` already owns — the exact guarantee v1 gives this
-    * protocol). Measured on the engine's own write shape (WriteProf):
+    * protocol). Measured on the engine's own write shape:
     * warm append floor 0.23 → 0.18 s at sf0.1; at scale each skipped
     * rename/create is a per-file object-store RPC. */
   private val internalWriteOptions = Map(
@@ -4248,15 +4248,6 @@ object Snapshots {
       // across cores. r16 shape (row-at-a-time decode + single-threaded
       // sortBy) was 78 s at 10⁷ files; blobs + parallel build +
       // parallelSort target ≲10 s.
-      def t0 = System.nanoTime()
-      var mark = t0
-      def lap(tag: String): Unit =
-        if (sys.env.contains("SPARK_GRAFT_TIMING")) {
-          val now = System.nanoTime()
-          System.err.println(f"[timing] $tag: ${(now - mark) / 1e9}%.2f s")
-          mark = now
-        }
-      lap("start")
       val packed = kept.select(col("path"),
           coalesce(col("fsize"), lit(-1L)), coalesce(col("mtime"), lit(-1L)))
         .as[(String, Long, Long)](
@@ -4276,7 +4267,6 @@ object Snapshots {
         }(org.apache.spark.sql.Encoders.product[
           (Array[Byte], Array[Int], Array[Long], Array[Long])])
         .collect()
-      lap("packed-collect")
       val starts = packed.scanLeft(0)(_ + _._2.length)
       val out = new Array[LiveFileMeta](starts.last)
       java.util.stream.IntStream.range(0, packed.length).parallel().forEach { pi =>
@@ -4296,9 +4286,7 @@ object Snapshots {
           prev = offs(i); i += 1
         }
       }
-      lap("build")
       java.util.Arrays.parallelSort(out, Ordering.by((m: LiveFileMeta) => m.path))
-      lap("sort")
       scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
     } catch {
       // a vanished checkpoint or dropped tail delta (vacuum racing this

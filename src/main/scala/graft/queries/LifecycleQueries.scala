@@ -3269,10 +3269,10 @@ object LifecycleQueries {
         try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         catch { case _: Throwable => () }
         // state partitioning sized to the workload (see
-        // StreamingJobs.withStatePartitions — the r9 StreamDiag
-        // measurement: 4 stores/partition × 32 partitions = 128 store
-        // commits per micro-batch, warm 5.9 s; at 8 partitions 2.9 s,
-        // identical results)
+        // StreamingJobs.withStatePartitions — the r9 measurement:
+        // 4 stores/partition × 32 partitions = 128 store commits per
+        // micro-batch, warm 5.9 s; at 8 partitions 2.9 s, identical
+        // results)
         def src = StreamingJobs.tableStream(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"),
             col("event_type"), col("value"))

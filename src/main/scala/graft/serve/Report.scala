@@ -91,17 +91,26 @@ object Report {
       // counts): equal order keys land in one range, so tie handling
       // matches the old single-partition sort, and long addition is
       // associative. (A double metric would see benign reassociation.)
-      val ranged = df.repartitionByRange(col(orderKey))
+      // The windowed frame is checkpointed — ONE RDD behind ONE range
+      // exchange — and the per-range totals are taken from it: range
+      // bounds come from a sampling pass seeded per RDD, so two
+      // independently planned range exchanges may cut different ranges,
+      // and `spark_partition_id()` would then disagree between the rows
+      // and their totals whenever the exchange is not reused
+      // (spark.sql.exchange.reuse=false). The input is also read once
+      // instead of three times. Lazy: no extra count job.
+      val local = df.repartitionByRange(col(orderKey))
         .withColumn("__part", spark_partition_id())
-      val local = ranged.withColumn("cum0",
-        sum(col(metric)).over(Window.partitionBy(col("__part"))
-          .orderBy(col(orderKey))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("cum0",
+          sum(col(metric)).over(Window.partitionBy(col("__part"))
+            .orderBy(col(orderKey))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .localCheckpoint(eager = false)
       // per-range totals (≤ shuffle-partition-count rows); the prefix
       // offsets come from a triangular self-join — O(ranges²) pairs of a
       // config-bounded frame, and NO window at all, so nothing in this
       // plan ever logs the single-partition WindowExec warning
-      val ptots = ranged.groupBy(col("__part"))
+      val ptots = local.groupBy(col("__part"))
         .agg(sum(col(metric)).as("__ptot"))
       val offsets = ptots.as("a")
         .join(ptots.select(col("__part").as("__bp"), col("__ptot").as("__bt")),

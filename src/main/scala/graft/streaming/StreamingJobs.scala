@@ -423,7 +423,7 @@ object StreamingJobs {
     * stores PER state partition and commit every one of them each
     * micro-batch — a fixed per-store cost (file create + fsync on the
     * checkpoint) that dwarfs the data term on all but huge state
-    * (graft.StreamDiag, r9: the stream-stream join at 32 partitions
+    * (r9: the stream-stream join at 32 partitions
     * paid 128 store commits/batch, ~33 s cumulative commitMs, warm
     * wall-clock 5.9 s; at 8 partitions 2.9 s, identical results). The
     * count is FROZEN into the checkpoint at query start, so it must be

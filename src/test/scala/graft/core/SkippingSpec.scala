@@ -290,4 +290,22 @@ class SkippingSpec extends AnyFunSuite {
     assert(idx.head.mins("ts") == actual.getLong(0))
     assert(idx.head.maxs("ts") == actual.getLong(1))
   }
+
+  test("a nested metaIoParallel call from a pool thread runs inline (no deadlock)") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // more outer tasks than the pool has threads: queued inner tasks
+    // would wait on threads that are all parked on their own inner calls
+    val threads = math.min(32, math.max(4, Runtime.getRuntime.availableProcessors))
+    val outer = threads + 4
+    val hits = new java.util.concurrent.atomic.AtomicInteger()
+    val run = Future {
+      Skipping.metaIoParallel(outer) { _ =>
+        Skipping.metaIoParallel(3)(_ => hits.incrementAndGet())
+      }
+    }
+    Await.result(run, 60.seconds)
+    assert(hits.get == outer * 3)
+  }
 }

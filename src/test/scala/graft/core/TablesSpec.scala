@@ -43,4 +43,26 @@ class TablesSpec extends AnyFunSuite {
     assert(raw.schema("ts").dataType == TimestampType)
     assert(raw.schema("ts").dataType != TimestampNTZType)
   }
+
+  test("the schema memo re-infers a file rewritten with a new schema and the same mtime") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-memo")
+    val target = dir.resolve("t.parquet")
+    // one parquet FILE at <dir>/t.parquet, the testdata layout
+    def writeFile(df: org.apache.spark.sql.DataFrame): Unit = {
+      val staged = dir.resolve(s"staged-${System.nanoTime()}").toString
+      df.coalesce(1).write.parquet(staged)
+      val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, target,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFile(Seq(1L, 2L).toDF("a"))
+    val mtime = target.toFile.lastModified()
+    assert(Tables.read(spark, dir.toString, "t").schema.fieldNames.toSeq == Seq("a"))
+    writeFile(Seq((1L, "x"), (2L, "y")).toDF("a", "b"))
+    assert(target.toFile.setLastModified(mtime))
+    val again = Tables.read(spark, dir.toString, "t")
+    assert(again.schema.fieldNames.toSeq == Seq("a", "b"))
+    assert(again.orderBy("a").as[(Long, String)].collect().toSeq == Seq((1L, "x"), (2L, "y")))
+  }
 }

@@ -1,5 +1,6 @@
 package graft.serve
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +32,34 @@ class ReportSpec extends AnyFunSuite {
       .select("cum_pct").collect().map(_.getDouble(0))
     assert(out.last == 100.0)
     assert(out.sameElements(out.sorted))
+  }
+
+  test("A15 global cumulative share is exact when exchanges are not reused") {
+    // 20k distinct order keys over several range partitions: the prefix
+    // offsets must line up with the rows they shift even when every
+    // exchange in the plan is planned and sampled independently. AQE
+    // coalescing is off so the small frame keeps all its ranges.
+    val confs = Seq("spark.sql.exchange.reuse" -> "false",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = spark.range(0, 20000)
+        .select((($"id" * 7919) % 20000).as("k"), ($"id" % 13 + 1).as("n"))
+      val got = Report.cumulativeShare(df, "k", "n")
+        .select("k", "cum", "cum_pct").as[(Long, Long, Double)]
+        .collect().sortBy(_._1).toSeq
+      val total = df.agg(sum("n")).head.getLong(0)
+      val want = df.coalesce(1)
+        .withColumn("cum", sum($"n").over(Window.orderBy($"k")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("cum_pct", $"cum" * lit(100.0) / lit(total))
+        .select("k", "cum", "cum_pct").as[(Long, Long, Double)]
+        .collect().sortBy(_._1).toSeq
+      assert(got.size == want.size)
+      val bad = got.zip(want).filter { case (g, w) => g != w }
+      assert(bad.isEmpty, s"${bad.size} rows differ, first: ${bad.headOption}")
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("A14 argmax picks peak and trough") {

@@ -54,7 +54,11 @@ print(f"gate ok: {n} oracle SQLs (floor {floor})")
 EOF
 
 echo "== entry smoke =="
-sbt -batch "runMain graft.EntrySmoke" 2>&1 | grep entry-smoke
+SMOKE=$(sbt -batch "runMain graft.EntrySmoke" 2>&1 | grep entry-smoke || true)
+echo "$SMOKE"
+# the flagship entry must return rows: a missing line or rows=0 fails
+[[ "$SMOKE" =~ rows=([0-9]+) ]] && (( BASH_REMATCH[1] > 0 )) || {
+  echo "ENTRY SMOKE FAILED (need rows>0)"; exit 1; }
 
 echo "== bench ($SF_BENCH, min-of-2 inside Bench) =="
 SPARK_GRAFT_SF_DIR=$SF_BENCH SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Bench" 2>&1 \
