@@ -400,17 +400,18 @@ object Snapshots {
   private[jobs] def sidecarsOn(props: Map[String, String]): Boolean =
     props.get(checkpointSidecarsProp).contains("true")
 
-  /** `format = auto`'s SECOND flip (r17): past this live-file count an
-    * auto table starts writing sidecar MANIFESTS — the plain parquet
+  /** `format = auto`'s SECOND flip (r17): an auto table whose live-file
+    * count reaches this writes sidecar MANIFESTS — the plain parquet
     * codec's full-row rewrite is the trap a default-config user falls
     * into at scale (38.7 s per checkpoint at 10⁷ files vs the
-    * manifest's O(change) ~2 s). Same discipline as the text→parquet
-    * flip: the reader feature stamps IMMEDIATELY on auto tables (any
-    * later commit may flip, possibly under a concurrently-following
-    * legacy reader), readers dispatch on the checkpoint FILES present,
-    * and once flipped the table stays in manifests (no thrash around
-    * the threshold) until the user disables with `-1`, which exits via
-    * one full plain rewrite. */
+    * manifest's O(change) ~2 s). The count is the previous checkpoint's
+    * `shape` header row rolled forward (`ckptLayout`, the one layout
+    * rule), and a previous `manifest` layout keeps the table in
+    * manifests (no thrash around the threshold) until the user disables
+    * with `-1`, which exits via one full plain rewrite. The reader
+    * feature stamps IMMEDIATELY on auto tables (any later commit may
+    * flip, possibly under a concurrently-following legacy reader), and
+    * readers dispatch on the checkpoint FILES present. */
   private val autoSidecarsAtProp = "graft.checkpoint.auto.sidecarsAt"
   private val autoSidecarsAtDefault = 100000L
 
@@ -421,14 +422,14 @@ object Snapshots {
     else Some(props.get(autoSidecarsAtProp).flatMap(_.toLongOption)
       .getOrElse(autoSidecarsAtDefault)).filter(_ >= 0)
 
-  /** Below this live-file count (known pre-write from the aggr
-    * roll-forward / the full build) a parquet checkpoint is ONE write
-    * job with headers inline — the two-job `_headers/` split exists so
-    * BIG tables' header lookups skip the file-row parts, and costs a
-    * whole extra Spark job that dominates from-scratch small-table
-    * workloads (the r16 `agg_metadata_only_pq` regression). Above it,
-    * file rows and header-side rows write separately and lookups read
-    * `_headers/` alone. Overridable per table. */
+  /** The small-checkpoint bound of the one layout rule (`ckptLayout`): a
+    * parquet checkpoint is ONE part file, encoded and written on the
+    * driver (no Spark job), when its live-file count AND its
+    * copied-identity count — the previous checkpoint's `shape` header
+    * row rolled forward through the tail — are both at most this.
+    * Otherwise, or when either count is unknown, file rows and
+    * header-side rows write separately and lookups read `_headers/`
+    * alone. Overridable per table. */
   private val inlineHeadersProp = "graft.checkpoint.inlineBelow"
   private val inlineHeadersDefault = 20000L
 
@@ -462,15 +463,14 @@ object Snapshots {
     * plain manifest's "no sidecars here" answer costs ZERO extra jobs
     * after the first read of any (version, query) stream. Bounded +
     * purged like the sibling caches. */
-  private val manifestMetaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Seq[SidecarRef], Seq[(String, Long)])]()
+  private val manifestMetaCache =
+    new LruCache[(String, Long), (Seq[SidecarRef], Seq[(String, Long)])](256)
 
   private def manifestMeta(
       spark: SparkSession, qroot: Path, cv: Long)
       : (Seq[SidecarRef], Seq[(String, Long)]) = {
     val key = (qroot.toString, cv)
-    val hit = manifestMetaCache.get(key)
-    if (hit != null) return hit
+    manifestMetaCache.get(key).foreach(hit => return hit)
     val rows = readCkptMetaRows(spark, parquetCheckpointPath(qroot, cv))
       .filter(col("kind") === "sidecar" || col("kind") === "tomb")
       .select(col("kind"), col("path"), col("hkey"), col("hval"), col("rows"))
@@ -480,10 +480,8 @@ object Snapshots {
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
     val tombs = rows.filter(_.getString(0) == "tomb")
       .map(r => (r.getString(1), r.getString(2).toLong)).toSeq
-    val computed = (refs, tombs)
-    if (manifestMetaCache.size > 256) manifestMetaCache.clear()
-    manifestMetaCache.put(key, computed)
-    computed
+    manifestMetaCache.put(key, (refs, tombs))
+    (refs, tombs)
   }
 
   /** The sidecar references of the parquet checkpoint at `cv` (empty on
@@ -573,8 +571,9 @@ object Snapshots {
     * the text codec, so unsigned-lex byte order survives as plain string
     * order) or one header (`kind = "header"`: schema, protocol, rfeat,
     * wfeat, maxtxn, copied — the text checkpoint's `#key:value` lines as
-    * (hkey, hval) rows). `rows = None` means the log recorded no stats
-    * for the file (kept by every pruning family). */
+    * (hkey, hval) rows — plus the parquet-only aggr and shape).
+    * `rows = None` means the log recorded no stats for the file (kept by
+    * every pruning family). */
   private[jobs] final case class CkptRow(
       kind: String, path: String, rows: Option[Long],
       lmin: Map[String, Long], lmax: Map[String, Long],
@@ -590,6 +589,40 @@ object Snapshots {
 
   private implicit lazy val ckptEnc: org.apache.spark.sql.Encoder[CkptRow] =
     org.apache.spark.sql.Encoders.product[CkptRow]
+
+  /** A parquet checkpoint's layout (chosen by `ckptLayout` alone):
+    * `Inline` — the plain live set and every header-side row in ONE part
+    * file written on the driver; `Split` — the plain live set plus the
+    * `_headers/` side directory, two write jobs; `Manifest` — a sidecar
+    * manifest, written either way (`oneFile`). */
+  private[jobs] sealed abstract class CkptLayout(val name: String) {
+    def oneFile: Boolean
+  }
+  private[jobs] object CkptLayout {
+    case object Inline extends CkptLayout("inline") { val oneFile = true }
+    case object Split extends CkptLayout("split") { val oneFile = false }
+    final case class Manifest(oneFile: Boolean) extends CkptLayout("manifest")
+    // how a recorded manifest was written never steers the next layout
+    val byName: Map[String, CkptLayout] =
+      Seq(Inline, Split, Manifest(oneFile = false)).map(l => l.name -> l).toMap
+  }
+
+  /** What a parquet checkpoint records about itself in its `shape`
+    * header row (`layout,live,copied`): its layout, its live-file count
+    * (None when unknown) and its copied-identity count (exact, or an
+    * upper bound when the identities stayed distributed). */
+  private[jobs] final case class CkptShape(
+      layout: CkptLayout, live: Option[Long], copied: Long) {
+    def render: String = s"${layout.name},${live.getOrElse("")},$copied"
+  }
+
+  private def parseShape(hval: String): Option[CkptShape] =
+    hval.split(",", -1) match {
+      case Array(l, n, c) if n.isEmpty || n.toLongOption.isDefined =>
+        for (layout <- CkptLayout.byName.get(l); copied <- c.toLongOption)
+          yield CkptShape(layout, n.toLongOption, copied)
+      case _ => None
+    }
 
   /** One file row for the parquet checkpoint. On partitioned tables the
     * path-encoded partition values are BAKED IN as point envelopes (the
@@ -632,16 +665,14 @@ object Snapshots {
     }
   }
 
-  /** The checkpoint's header-side rows (headers, sidecar refs, tombs,
-    * copied identities) live in a `_headers/` SUB-DIRECTORY since r17 —
-    * Spark's parquet reader ignores underscore-prefixed paths, so the
-    * main directory reads as pure file rows, and header/manifest
-    * lookups read the tiny side directory alone: O(1) in the table's
-    * file count instead of footer-skipping every file-row part (the
-    * r16 `partsc` size_cold gap). Checkpoints below `inlineBelow` live
-    * files write everything inline in ONE job instead (no `_headers`);
-    * readers dispatch on the directory's presence, so both layouts —
-    * and pre-r17 checkpoints — read identically. */
+  /** A checkpoint that is not one part file (`CkptLayout.oneFile`) keeps
+    * its header-side rows (headers — the `shape` row among them —
+    * sidecar refs, tombs, copied identities) in this SUB-DIRECTORY,
+    * which Spark's parquet reader ignores: the main directory reads as
+    * pure file rows, and header/manifest lookups read the side directory
+    * alone, O(1) in the table's file count (the r16 `partsc` size_cold
+    * gap). Readers dispatch on its presence, so every layout reads
+    * identically. */
   private val ckptHeadersDirName = "_headers"
 
   /** The rows a header/manifest lookup needs: the `_headers` side
@@ -657,6 +688,11 @@ object Snapshots {
       spark.read.schema(ckptEnc.schema).parquet(hdrs.toString).as[CkptRow]
     else readCkptRows(spark, pq)
   }
+
+  /** The COPY INTO identities the parquet checkpoint at `cv` records. */
+  private def ckptCopiedRows(spark: SparkSession, qroot: Path, cv: Long) =
+    readCkptMetaRows(spark, parquetCheckpointPath(qroot, cv))
+      .filter(col("kind") === "header" && col("hkey") === "copied")
 
   /** A checkpoint parquet directory as `Dataset[CkptRow]` — the main
     * file-row parts plus the `_headers` side directory when present.
@@ -939,8 +975,8 @@ object Snapshots {
     * O(1) and O(optimizer iterations × queries) log round trips.
     * Invalidation: a table re-created at the same path restarts at
     * version 0 — `writeDelta` purges the root's entries on any v0
-    * publish (the only way a fresh log can begin). Bounded wholesale,
-    * same discipline as `indexCache`. */
+    * publish (the only way a fresh log can begin). Bounded wholesale, not
+    * LRU: every resolve reads it once per tail delta, lock-free. */
   private val deltaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Delta]()
 
@@ -1011,13 +1047,13 @@ object Snapshots {
     * (root, version) key means. */
   private def purgeRootCaches(qroot: String): Unit = {
     deltaCache.keySet.removeIf(_._1 == qroot)
-    indexCache.keySet.removeIf(_._1 == qroot)
-    reconstructCache.keySet.removeIf(_._1 == qroot)
-    envelopeSummaryCache.keySet.removeIf(_._1 == qroot)
+    indexCache.removeKeysIf(_._1 == qroot)
+    reconstructCache.removeKeysIf(_._1 == qroot)
+    envelopeSummaryCache.removeKeysIf(_._1 == qroot)
     liveMetaCache.removeKeysIf(_._1 == qroot)
     liveAggrCache.removeKeysIf(_._1 == qroot)
     ckptMetaCache.removeKeysIf(_._1 == qroot)
-    manifestMetaCache.keySet.removeIf(_._1 == qroot)
+    manifestMetaCache.removeKeysIf(_._1 == qroot)
   }
 
   /** Explicit cache invalidation for OUT-OF-BAND log surgery (manual
@@ -1377,11 +1413,12 @@ object Snapshots {
     * `auto` by live-file count against the threshold — text below (a
     * distributed write costs more than a small render), parquet above
     * (the text render/parse is the O(table) driver wall). The count is
-    * a distributed `count()` when the table is already in its parquet
-    * regime, the (memoized, small-by-induction) driver reconstruct
-    * while still in text. Flips ride the existing format-transition
-    * machinery: readers dispatch on the checkpoint FILES present, not
-    * the property. */
+    * the nearest parquet checkpoint's recorded shape rolled forward
+    * (O(tail change)) when the table has been in its parquet regime
+    * within the staleness bound, the (memoized, small-by-induction)
+    * driver reconstruct otherwise. Flips ride the existing
+    * format-transition machinery: readers dispatch on the checkpoint
+    * FILES present, not the property. */
   private def shouldWriteParquetCheckpoint(
       spark: SparkSession, root: String, v: Long): Boolean = {
     val props = readDelta(spark, root, v).props
@@ -1390,14 +1427,13 @@ object Snapshots {
       case Some("auto") =>
         val threshold = props.get(autoThresholdProp).flatMap(_.toLongOption)
           .getOrElse(autoThresholdDefault)
-        // the codec decision needs only the COUNT: the aggr header
-        // answers it O(tail change); the full distributed assembly is
-        // the fallback, the (memoized, small-by-induction) driver
-        // reconstruct serves the text regime
-        val liveCount = liveAggregate(spark, root, v).map(_._1)
-          .orElse(checkpointFileFrame(spark, root, v).map(_.count()))
-          .getOrElse(reconstruct(spark, root, v)._1.size.toLong)
-        liveCount >= threshold
+        val qroot = fsOf(spark, root)._2
+        // a vanished checkpoint (vacuum race) just falls back
+        val recorded = scala.util.Try(
+          logVersions(spark, root, ".checkpoint.parquet").filter(_ <= v)
+            .lastOption.filter(cv => v - cv <= checkpointEvery * 4)
+            .flatMap(cv => rolledLive(spark, root, qroot, cv, v))).toOption.flatten
+        recorded.getOrElse(reconstruct(spark, root, v)._1.size.toLong) >= threshold
       case _ => false
     }
   }
@@ -1560,15 +1596,12 @@ object Snapshots {
   private[graft] final class InvariantViolation(msg: String)
     extends IllegalStateException(msg)
 
-  /** Full (non-incremental) live row build: `reconstruct` + whatever
-    * fmeta the surviving deltas carry; missing fmeta is backfilled by a
-    * DISTRIBUTED stat pass — a ONE-TIME cost, after which every later
-    * incremental checkpoint inherits the values. */
-  private def fullLiveRows(
-      spark: SparkSession, root: String, v: Long,
-      fs: org.apache.hadoop.fs.FileSystem, qroot: Path)
-      : org.apache.spark.sql.Dataset[CkptRow] =
-    fullLiveRowsWithAggr(spark, root, v, fs, qroot)._1
+  /** A checkpoint's file rows plus what their builder knows: header-side
+    * rows (a manifest's refs, tombstones), the live count and the
+    * (liveFiles, totalBytes) aggregate — None when only a job could tell. */
+  private final case class BuiltRows(
+      rows: org.apache.spark.sql.Dataset[CkptRow], extra: Seq[CkptRow],
+      live: Option[Long], aggr: Option[(Long, Long)])
 
   /** The live rows of `v` assembled WITHOUT the driver ever holding the
     * file list, from a TEXT checkpoint base: the checkpoint's lines
@@ -1656,20 +1689,19 @@ object Snapshots {
       }
   }
 
-  /** `fullLiveRows` plus the (liveFiles, totalBytes) aggregate the
-    * build already knows on the driver (every size is in the fmeta
-    * fold / backfill result) — lets a from-scratch checkpoint of a
-    * small table write its aggr header WITHOUT an observation pass or
-    * a second job. None when any live file's size is unrecorded. */
-  private def fullLiveRowsWithAggr(
+  /** Full (non-incremental) live row build: `reconstruct` + whatever
+    * fmeta the surviving deltas carry; missing fmeta is backfilled by a
+    * DISTRIBUTED stat pass — a ONE-TIME cost, after which every later
+    * incremental checkpoint inherits the values. The driver build also
+    * knows the live count. */
+  private def fullLiveRows(
       spark: SparkSession, root: String, v: Long,
-      fs: org.apache.hadoop.fs.FileSystem, qroot: Path)
-      : (org.apache.spark.sql.Dataset[CkptRow], Option[(Long, Long)]) = {
+      fs: org.apache.hadoop.fs.FileSystem, qroot: Path): BuiltRows = {
     // the distributed text-base assembly first: the conversion path of
     // a big text table never materializes the list on the driver (its
-    // aggr comes from the write's observation instead)
+    // counts come from the write's observation instead)
     try distributedTextLiveRows(spark, root, v, fs, qroot) match {
-      case Some(rows) => return (rows, None)
+      case Some(rows) => return BuiltRows(rows, Nil, None, None)
       case None => ()
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -1710,13 +1742,9 @@ object Snapshots {
     val fmAll = fmetaAll ++ backfilled
     val pc = graft.core.HivePartitions.columnsOf(
       readDelta(spark, root, v).props)
-    val aggr =
-      if (files.forall(fmAll.contains))
-        Some((files.size.toLong, files.iterator.map(f => fmAll(f)._1).sum))
-      else None
-    (spark.createDataset(
+    BuiltRows(spark.createDataset(
       files.map(rel => ckptRowOf(rel, stats.get(rel), fmAll.get(rel), pc))),
-      aggr)
+      Nil, Some(files.size.toLong), None)
   }
 
   /** DEBUG-mode invariant check (`spark.graft.debug.invariants = true`):
@@ -1769,6 +1797,82 @@ object Snapshots {
           "follow a remove); this writer would silently duplicate live rows")
   }
 
+  private def inlineBelow(props: Map[String, String]): Long =
+    props.get(inlineHeadersProp).flatMap(_.toLongOption).getOrElse(inlineHeadersDefault)
+
+  /** THE layout rule for a parquet checkpoint, from the counts it will
+    * record (`live` None when unknown): a sidecar manifest when the table
+    * asks for sidecars, or an armed `auto` table reaches `autoSidecarsAt`
+    * live files or was in manifests already (hysteresis); ONE
+    * driver-written part file when both counts are known and at most
+    * `inlineBelow` — at this size the scheduler round trip is the whole
+    * cost; else file rows plus `_headers/`. Arithmetic over recorded
+    * counts, never induction over earlier layouts. */
+  private def ckptLayout(
+      props: Map[String, String], prior: Option[CkptLayout],
+      live: Option[Long], copied: Long): CkptLayout = {
+    val small = live.exists(_ <= inlineBelow(props)) && copied <= inlineBelow(props)
+    val manifest = sidecarsOn(props) || autoSidecarsAt(props).exists(th =>
+      prior.exists(_.isInstanceOf[CkptLayout.Manifest]) || live.exists(_ >= th))
+    if (manifest) CkptLayout.Manifest(oneFile = small)
+    else if (small) CkptLayout.Inline
+    else CkptLayout.Split
+  }
+
+  /** What the next boundary refreshes from the parquet checkpoint at `cv`:
+    * its shape, its maxtxn and — when driver-known and within
+    * `inlineBelow` — its copied identities. The writer memoizes its own
+    * at publish; a miss reads the `shape`, `maxtxn` and `aggr` header
+    * rows in ONE pushed-filter lookup (the aggr seeds `liveAggregate`). */
+  private final case class CkptMeta(
+      shape: CkptShape, maxTxn: Long, copiedIds: Option[Seq[String]])
+
+  private def ckptMeta(spark: SparkSession, qroot: Path, cv: Long): CkptMeta = {
+    val key = (qroot.toString, cv)
+    ckptMetaCache.get(key).getOrElse {
+      val hdr = readCkptMetaRows(spark, parquetCheckpointPath(qroot, cv))
+        .filter(col("kind") === "header" && col("hkey").isin("shape", "maxtxn", "aggr"))
+        .select(col("hkey"), col("hval")).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val aggr = hdr.get("aggr").map { h =>
+        val parts = h.split(',')
+        (parts(0).toLong, parts(1).toLong)
+      }
+      aggr.foreach(a => liveAggrCache.put(key, Some(a)))
+      val shape = hdr.get("shape").flatMap(parseShape)
+        .getOrElse(legacyShape(spark, qroot, cv, aggr.map(_._1)))
+      val meta = CkptMeta(shape, hdr.get("maxtxn").map(_.toLong).getOrElse(-1L), None)
+      ckptMetaCache.put(key, meta)
+      meta
+    }
+  }
+
+  /** The one fallback for a checkpoint written before the `shape` row:
+    * layout from its sidecar refs and `_headers/`, live count from its
+    * aggr header or its assembled rows, copied count from its rows. */
+  private def legacyShape(
+      spark: SparkSession, qroot: Path, cv: Long, aggrLive: Option[Long]): CkptShape = {
+    val fs = qroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val layout =
+      if (manifestMeta(spark, qroot, cv)._1.nonEmpty) CkptLayout.Manifest(oneFile = false)
+      else if (fs.exists(new Path(parquetCheckpointPath(qroot, cv), ckptHeadersDirName)))
+        CkptLayout.Split
+      else CkptLayout.Inline
+    val live = aggrLive.getOrElse(assembleCheckpointRows(spark, qroot, cv).count())
+    CkptShape(layout, Some(live), ckptCopiedRows(spark, qroot, cv).count())
+  }
+
+  /** `cv`'s recorded live-file count rolled forward to `v` (adds −
+    * removes): exact under the invariants the distributed tier leans on
+    * (an add names a non-live path, a remove a live one); every plain
+    * boundary re-records it from its rows, so a breach never compounds. */
+  private def rolledLive(
+      spark: SparkSession, root: String, qroot: Path, cv: Long, v: Long): Option[Long] =
+    ckptMeta(spark, qroot, cv).shape.live.map(_ + ((cv + 1) to v).map { w =>
+      val d = readDelta(spark, root, w)
+      d.adds.size.toLong - d.removes.size
+    }.sum)
+
   private def writeCheckpointParquetOnce(
       spark: SparkSession, root: String, v: Long,
       allowIncremental: Boolean): Unit = {
@@ -1782,114 +1886,56 @@ object Snapshots {
       else None
     if (spark.conf.getOption("spark.graft.debug.invariants").contains("true"))
       prevPq.foreach(cv => assertAddsNotLive(spark, root, qroot, cv, v))
-    // THIS checkpoint's layout: manifests when the prop demands them, OR
-    // when an auto table crossed the flip threshold (count O(tail) from
-    // the aggr header; the distributed count / memoized reconstruct are
-    // the bootstrap fallbacks), OR — hysteresis — when the previous
-    // manifest already holds refs and the flip is still armed, so a
-    // table oscillating around the threshold never thrashes layouts
-    val useSidecars = sidecarsOn(hd.props) || autoSidecarsAt(hd.props).exists { th =>
-      // hysteresis probe first: does the PREVIOUS manifest actually
-      // reference sidecars (manifestMeta-cached — one tiny `_headers`
-      // read per cold boundary)? A flipped table always does; the user
-      // exits via `-1`, which skips this whole branch. Probing bare
-      // `_log/_sidecars` existence instead would let stale debris (a
-      // leftover directory from an earlier explicit-sidecars era) force
-      // an armed auto table into manifest layout forever.
-      prevPq.exists(cv => sidecarRefsOf(spark, qroot, cv).nonEmpty) || {
-        val liveCount = liveAggregate(spark, root, v).map(_._1)
-          .orElse(scala.util.Try(
-            checkpointFileFrame(spark, root, v).map(_.count())).toOption.flatten)
-          .getOrElse(reconstruct(spark, root, v)._1.size.toLong)
-        liveCount >= th
-      }
+    // the previous checkpoint's facts rolled forward through the tail; a
+    // bootstrap (none, or the full-rebuild retry) counts the full build
+    val prior = prevPq.map(cv => ckptMeta(spark, qroot, cv))
+    val tail = prevPq.toSeq.flatMap(cv => ((cv + 1) to v).map(readDelta(spark, root, _)))
+    val tailCopied = tail.flatMap(_.copied).distinct
+    val maxTxn = prior.fold(lastTxnUpTo(spark, root, v))(p =>
+      (p.maxTxn +: tail.flatMap(_.txn)).max)
+    lazy val full = fullLiveRows(spark, root, v, fs, qroot)
+    val live = prevPq.fold(full.live)(cv => rolledLive(spark, root, qroot, cv, v))
+    // copied identities come to the driver when the previous checkpoint's
+    // are memoized or within `inlineBelow`; past it they stay a
+    // distributed frame (O(10⁶) at scale) and only their count is known —
+    // an upper bound (a re-recorded identity counts twice, never zero times)
+    val copiedIds: Option[Seq[String]] = (prevPq, prior) match {
+      case (Some(cv), Some(p)) =>
+        p.copiedIds
+          .orElse(if (p.shape.copied == 0L) Some(Nil) else None)
+          .orElse(if (p.shape.copied > inlineBelow(hd.props)) None
+            else Some(ckptCopiedRows(spark, qroot, cv).collect().map(_.hval).toSeq))
+          .map(prev => (prev ++ tailCopied).distinct.sorted)
+      case _ => Some(copiedUpTo(spark, root, v).toSeq.sorted)
     }
-    val inlineBelow = hd.props.get(inlineHeadersProp).flatMap(_.toLongOption)
-      .getOrElse(inlineHeadersDefault)
-    // sidecar manifests split the file rows three ways (fresh rows here,
-    // reference + tombstone rows alongside); plain checkpoints carry the
-    // complete live set as file rows
-    val (fileRows, extraRows, scAggr) =
-      if (useSidecars)
-        sidecarManifestRows(spark, root, v, fs, qroot, prevPq)
-      else {
-        // a SMALL table (live count ≤ inlineBelow, known O(tail) from
-        // the aggr roll-forward) skips the incremental frame outright:
-        // that plan — previous-checkpoint scan plus one union/filter
-        // node per tail delta — schedules hundreds of near-empty tasks
-        // and compiles a codegen branch per delta, while the driver
-        // build is a memoized reconstruct into one flat LocalRelation.
-        // Driver memory stays bounded by the same threshold that
-        // already gates the inline layout.
-        val smallInline =
-          liveAggregate(spark, root, v).exists(_._1 <= inlineBelow)
-        // the full build knows its aggregate on the driver already —
-        // carried in the same slot the sidecar spill uses, so a
-        // from-scratch checkpoint can skip the observation pass
-        val (rows, fullAggr) =
-          (if (allowIncremental && !smallInline)
-            checkpointFileFrame(spark, root, v)
-              .map(fr => (fr, Option.empty[(Long, Long)]))
-          else None)
-            .getOrElse(fullLiveRowsWithAggr(spark, root, v, fs, qroot))
-        (rows, Seq.empty[CkptRow], fullAggr)
-      }
-    // `copiedSmall`: is the copied-identity row count ALSO bounded, so
-    // the single-task small-checkpoint layout below stays safe? (r19
-    // ADVICE: the inlineBelow bound covers LIVE rows only; COPY INTO
-    // identities are unbounded.) Exactly known with no parquet base
-    // (driver-resident set); with a base, inductively bounded when the
-    // base itself used the inline small layout (no `_headers` side dir —
-    // a layout this gate has admitted) and the tail adds few.
-    // copied ids when driver-known (memo hit / bootstrap) — recorded
-    // into ckptMetaCache after publish so the NEXT boundary refreshes
-    // driver-side; None when the prior copied rows stayed distributed
-    var memoIds: Option[Seq[String]] = None
-    val (copiedRows, maxTxn, copiedSmall) = prevPq match {
-      case Some(cv) =>
-        val tailCopied = ((cv + 1) to v)
-          .flatMap(w => readDelta(spark, root, w).copied).distinct
-        val tailMax = ((cv + 1) to v)
-          .flatMap(w => readDelta(spark, root, w).txn)
-          .foldLeft(-1L)(math.max)
-        ckptMetaCache.get((qroot.toString, cv)) match {
-          case Some((prevIds, prevMax)) =>
-            // the previous SMALL checkpoint's header families were
-            // recorded at its write — the refresh is pure driver
-            // arithmetic, zero reads of the previous checkpoint
-            val ids = (prevIds ++ tailCopied).distinct.sorted
-            memoIds = Some(ids)
-            (spark.createDataset(ids.map(headerRowOf("copied", _))),
-              math.max(prevMax, tailMax), ids.size <= inlineBelow)
-          case None =>
-            // headers refresh incrementally: prior `copied` rows stay a
-            // distributed frame (COPY INTO identities can be O(10⁶) at
-            // scale), maxtxn is one pushed-filter lookup + the tail's max
-            val prevHdr = readCkptMetaRows(spark, parquetCheckpointPath(qroot, cv))
-              .filter(col("kind") === "header")
-            val copied = prevHdr.filter(col("hkey") === "copied")
-              .unionByName(spark.createDataset(tailCopied.map(headerRowOf("copied", _))))
-              .dropDuplicates("hkey", "hval")
-            val prevMax = prevHdr.filter(col("hkey") === "maxtxn")
-              .select(col("hval")).as[String](org.apache.spark.sql.Encoders.STRING)
-              .collect().headOption.map(_.toLong).getOrElse(-1L)
-            val prevInline = !fs.exists(
-              new Path(parquetCheckpointPath(qroot, cv), ckptHeadersDirName))
-            (copied, math.max(prevMax, tailMax),
-              prevInline && tailCopied.size <= inlineBelow)
-        }
-      case None =>
-        val ids = copiedUpTo(spark, root, v).toSeq.sorted
-        memoIds = Some(ids)
-        (spark.createDataset(ids.map(headerRowOf("copied", _))),
-          lastTxnUpTo(spark, root, v), ids.size <= inlineBelow)
+    val copiedCount = copiedIds.fold(
+      prior.fold(0L)(_.shape.copied) + tailCopied.size)(_.size.toLong)
+    val layout = ckptLayout(hd.props, prior.map(_.shape.layout), live, copiedCount)
+    val built = layout match {
+      case CkptLayout.Manifest(_) =>
+        sidecarManifestRows(spark, root, v, fs, qroot, prevPq, full.rows)
+      // a one-file checkpoint skips the incremental frame outright: that
+      // plan — previous-checkpoint scan plus one union/filter node per
+      // tail delta — schedules hundreds of near-empty tasks and compiles
+      // a codegen branch per delta, while the driver build is a
+      // memoized reconstruct into one flat LocalRelation
+      case CkptLayout.Inline => full
+      case CkptLayout.Split =>
+        prevPq.flatMap(_ => checkpointFileFrame(spark, root, v))
+          .map(BuiltRows(_, Nil, None, None)).getOrElse(full)
+    }
+    def copiedRows: org.apache.spark.sql.Dataset[CkptRow] = copiedIds match {
+      case Some(ids) => spark.createDataset(ids.map(headerRowOf("copied", _)))
+      case None => ckptCopiedRows(spark, qroot, prevPq.get)
+        .unionByName(spark.createDataset(tailCopied.map(headerRowOf("copied", _))))
+        .dropDuplicates("hkey", "hval")
     }
     val tmp = new Path(qroot,
       f"_log/.v$v%08d-ckpt-pq-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    // either write job failing must not leak the half-written tmp
-    // directory in _log forever (the full-rebuild retry allocates a
-    // fresh UUID tmp) — delete it before rethrowing; `vacuumDebris`
-    // remains the backstop for a crash BETWEEN the jobs
+    // a failed write must not leak the half-written tmp directory in
+    // _log forever (the full-rebuild retry allocates a fresh UUID tmp) —
+    // delete it before rethrowing; `vacuumDebris` remains the backstop
+    // for a crash BETWEEN the jobs
     def cleanupOnFailure[A](body: => A): A =
       try body
       catch {
@@ -1898,182 +1944,130 @@ object Snapshots {
           catch { case scala.util.control.NonFatal(_) => () }
           throw e
       }
-    def headerRowsOf(aggr: Option[(Long, Long)]): Seq[CkptRow] =
+    def headerRowsOf(aggr: Option[(Long, Long)], liveN: Option[Long]): Seq[CkptRow] =
       hd.schema.map(headerRowOf("schema", _)).toSeq ++
         Seq(headerRowOf("protocol", s"${hd.minReader},${hd.minWriter}"),
-          headerRowOf("maxtxn", maxTxn.toString)) ++
+          headerRowOf("maxtxn", maxTxn.toString),
+          headerRowOf("shape", CkptShape(layout, liveN, copiedCount).render)) ++
         hd.rfeat.map(headerRowOf("rfeat", _)) ++
         hd.wfeat.map(headerRowOf("wfeat", _)) ++
-        aggr.map { case (c, b) => headerRowOf("aggr", s"$c,$b") }.toSeq
-    // the aggr value known BEFORE any write runs: the spill/full-build's
-    // precomputed value, or the previous header rolled forward O(tail)
-    val preAggr: Option[(Long, Long)] = scAggr.orElse(liveAggregate(spark, root, v))
-    // rows of a LocalRelation-planned dataset are ALREADY encoded on the
-    // driver (`createDataset` eagerly serializes) — surface them so the
-    // small-checkpoint branch below can skip the Spark job entirely; any
-    // distributed plan (incremental frame, sidecar fresh rows, text-base
-    // assembly, prev-checkpoint copied reads) answers None and keeps the
-    // job path
-    def localRowsOf(ds: org.apache.spark.sql.Dataset[_]): Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-      ds.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          Some(lr.data)
-        case _ => None
-      }
-    val aggr: Option[(Long, Long)] =
-      if (preAggr.exists(_._1 <= inlineBelow) && copiedSmall) {
-        // SMALL checkpoint (live count known pre-write and under the
-        // inline threshold, copied identities bounded too — see
-        // copiedSmall): ONE job writes file rows + headers + refs
-        // + copied together — the two-job split buys nothing when a
-        // header lookup reads the whole (tiny) directory anyway, and
-        // the extra job was the r16 `agg_metadata_only_pq` regression.
-        // coalesce(1): the threshold bounds the row count, so one task
-        // writes one part file — readers list/footer-read one object
-        // instead of up to defaultParallelism near-empty ones.
-        //
-        // r20: when EVERY row group is driver-resident (bootstrap /
-        // driver-built small assembly — the common bench/ingest shape),
-        // even that one job is pure overhead: the rows are already
-        // encoded InternalRows inside LocalRelations, so the driver
-        // writes the single part file itself through Spark's own
-        // OutputWriter (prepareWrite supplies the full parquet conf
-        // contract — byte-compatible with the 1-task write, minus the
-        // scheduler round-trip and commit protocol).
-        val headerRows = spark.createDataset(headerRowsOf(preAggr) ++ extraRows)
-        val driverRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-          for {
-            f <- localRowsOf(fileRows)
-            c <- localRowsOf(copiedRows)
-            h <- localRowsOf(headerRows)
-          } yield f ++ c ++ h
-        try cleanupOnFailure {
-          driverRows match {
-            case Some(rows) =>
-              fs.mkdirs(tmp)
-              org.apache.spark.sql.execution.datasources.parquet
-                .GraftParquetDriverWriter.writeFile(
-                  spark, ckptEnc.schema, rows.iterator, tmp.toString,
-                  f"part-00000-${java.util.UUID.randomUUID.toString}")
-              ()
-            case None =>
-              fileRows.toDF().unionByName(copiedRows.toDF())
-                .unionByName(headerRows.toDF())
-                .coalesce(1)
-                .write.options(internalWriteOptions).mode("overwrite")
-                .parquet(tmp.toString)
+        aggr.map { case (c, b) => headerRowOf("aggr", s"$c,$b") }.toSeq ++
+        built.extra
+    val isManifest = layout.isInstanceOf[CkptLayout.Manifest]
+    val (aggr, liveN) =
+      try cleanupOnFailure {
+        // the file rows: collected for a one-file layout (which bounds
+        // them), else JOB 1 — written with (count, sized, bytes) OBSERVED
+        // on the write action itself, so the aggr costs no extra pass
+        val (fileRows, (n, nb, b)) =
+          if (layout.oneFile) {
+            val rows = built.rows.collect().toSeq
+            (rows, (rows.size.toLong, rows.count(_.fsize.isDefined).toLong,
+              rows.flatMap(_.fsize).sum))
+          } else {
+            val obs = new org.apache.spark.sql.Observation(
+              f"graft-ckpt-aggr-v$v%08d-${java.util.UUID.randomUUID.toString.take(8)}")
+            built.rows.observe(obs, count(lit(1)).as("n"),
+                sum(col("fsize")).as("b"), count(col("fsize")).as("nb"))
+              .write.options(internalWriteOptions).mode("overwrite")
+              .parquet(tmp.toString)
+            val m = obs.get
+            (Nil, (m("n").asInstanceOf[Long], m("nb").asInstanceOf[Long],
+              m("b").asInstanceOf[Long]))
           }
-        } finally fileRows.unpersist()
-        preAggr
-      } else {
-        // JOB 1 — the file rows, OBSERVED: (liveFiles, totalBytes)
-        // metrics ride the write action itself, so the plain codec's
-        // aggr header costs ZERO extra passes (and the frame needs no
-        // persist — it is consumed exactly once). Sidecar manifests'
-        // fresh-only rows can't yield the live aggregate; they use the
-        // roll-forward / the spill's precomputed value.
-        val obs = new org.apache.spark.sql.Observation(
-          f"graft-ckpt-aggr-v$v%08d-${java.util.UUID.randomUUID.toString.take(8)}")
-        try cleanupOnFailure {
-          fileRows.observe(obs, count(lit(1)).as("n"),
-              sum(col("fsize")).as("b"), count(col("fsize")).as("nb"))
-            .write.options(internalWriteOptions).mode("overwrite")
-            .parquet(tmp.toString)
-        } finally fileRows.unpersist() // no-op unless the sidecar path persisted it
-        // the (liveFiles, totalBytes) header: the pre-write value when
-        // known, else the observed metrics (plain codec — the frame IS
-        // the live set). Omitted when any live file's size is
-        // unrecorded (hand-edited legacy logs) — readers fall back to
-        // per-file statuses exactly then.
-        val computed: Option[(Long, Long)] = cleanupOnFailure {
-          val observed: Option[(Long, Long)] =
-            if (useSidecars) None
-            else {
-              val m = obs.get
-              validAggr(m("n").asInstanceOf[Long], m("nb").asInstanceOf[Long],
-                m("b").asInstanceOf[Long])
-            }
-          // plain-codec boundaries prefer the OBSERVED metrics: they ride
-          // the live frame that was ACTUALLY WRITTEN (free — no extra
-          // pass), so any roll-forward drift (an external writer
-          // violating the adds-never-name-live invariant, an
-          // adjustAggregate bug) self-heals every boundary instead of
-          // silently steering the auto-sidecar flip, the inline-layout
-          // decision, and planner sizing forever. A disagreement is an
-          // invariant breach: loud under debug mode, WARN-noted (via the
-          // fallback ring — a pathology signal, not amortized
-          // maintenance) otherwise (r18 ADVICE).
-          for (o <- observed; p <- preAggr; if o != p) {
-            val msg = s"checkpoint aggr drift on $root@v$v: rolled-forward " +
-              s"header says $p, the written live frame observes $o — " +
-              "repairing to the observed value this boundary"
-            if (spark.conf.getOption("spark.graft.debug.invariants")
-                .contains("true"))
-              throw new InvariantViolation(msg)
-            noteFallback(msg)
-          }
-          observed.orElse(preAggr)
-            .orElse {
-              // legacy sidecar manifests (written before aggr existed)
-              // have no header to roll forward: ONE distributed assembly
-              // agg re-seeds it, after which every later boundary is
-              // incremental
-              if (!useSidecars) None
-              else scala.util.Try {
-                (if (allowIncremental) checkpointFileFrame(spark, root, v)
-                 else None).getOrElse(fullLiveRows(spark, root, v, fs, qroot))
-              }.toOption.flatMap { fr =>
-                val r = fr.agg(count(lit(1)), sum(col("fsize")),
-                  count(col("fsize"))).head
-                validAggr(r.getLong(0), r.getLong(2), r.getLong(1))
-              }
-            }
+        // a plain live set's WRITTEN metrics beat the roll-forward (the
+        // spill's or `liveAggregate`'s), so drift — an external writer
+        // violating the adds-never-name-live invariant, an
+        // adjustAggregate bug — self-heals every boundary. A disagreement
+        // is an invariant breach: loud under debug mode, WARN-noted (the
+        // fallback ring) otherwise (r18 ADVICE). The header is omitted
+        // when any live file's size is unrecorded — readers fall back to
+        // per-file statuses exactly then. A manifest's fresh rows are not
+        // its live set.
+        val observed = if (isManifest) None else validAggr(n, nb, b)
+        lazy val preAggr = built.aggr.orElse(liveAggregate(spark, root, v))
+        for (o <- observed; p <- preAggr; if o != p) {
+          val msg = s"checkpoint aggr drift on $root@v$v: rolled-forward " +
+            s"header says $p, the written live frame observes $o — " +
+            "repairing to the observed value this boundary"
+          if (spark.conf.getOption("spark.graft.debug.invariants").contains("true"))
+            throw new InvariantViolation(msg)
+          noteFallback(msg)
         }
-        // JOB 2 — headers + sidecar refs/tombs + copied identities into
-        // the `_headers/` SIDE DIRECTORY (hidden from the main parquet
-        // read): header/manifest lookups read this tiny directory alone
-        // — O(1) in the table's file count, never footer-skipping the
-        // file-row parts (the r16 partsc size_cold gap). Nothing
-        // references `tmp` until the rename below publishes it.
-        cleanupOnFailure {
+        val aggr = observed.orElse(preAggr).orElse {
+          // legacy sidecar manifests (written before aggr existed) have
+          // no header to roll forward: ONE distributed assembly agg
+          // re-seeds it, after which every later boundary is incremental
+          if (!isManifest) None
+          else scala.util.Try {
+            (if (allowIncremental) checkpointFileFrame(spark, root, v)
+             else None).getOrElse(full.rows)
+          }.toOption.flatMap { fr =>
+            val r = fr.agg(count(lit(1)), sum(col("fsize")),
+              count(col("fsize"))).head
+            validAggr(r.getLong(0), r.getLong(2), r.getLong(1))
+          }
+        }
+        val liveN =
+          if (isManifest) built.live.orElse(aggr.map(_._1)).orElse(live) else Some(n)
+        if (layout.oneFile) {
+          // ONE part file, written on the driver through Spark's own
+          // OutputWriter — byte-compatible with a 1-task Spark write,
+          // minus the scheduler round trip and commit protocol — with
+          // every row encoded by CkptRow's own encoder
+          val toRow = org.apache.spark.sql.catalyst.encoders.encoderFor(ckptEnc)
+            .createSerializer()
+          val rows = fileRows ++ copiedIds.get.map(headerRowOf("copied", _)) ++
+            headerRowsOf(aggr, liveN)
+          fs.mkdirs(tmp)
+          org.apache.spark.sql.execution.datasources.parquet
+            .GraftParquetDriverWriter.writeFile(
+              spark, ckptEnc.schema, rows.iterator.map(toRow), tmp.toString,
+              f"part-00000-${java.util.UUID.randomUUID.toString}")
+        } else {
+          // JOB 2 — headers + sidecar refs/tombs + copied identities into
+          // the `_headers/` SIDE DIRECTORY (hidden from the main parquet
+          // read): header/manifest lookups read this tiny directory alone
+          // — O(1) in the table's file count. Nothing references `tmp`
+          // until the rename below publishes it.
           copiedRows
-            .unionByName(spark.createDataset(headerRowsOf(computed) ++ extraRows))
+            .unionByName(spark.createDataset(headerRowsOf(aggr, liveN)))
             .write.options(internalWriteOptions).mode("overwrite")
             .parquet(new Path(tmp, ckptHeadersDirName).toString)
         }
-        computed
-      }
+        (aggr, liveN)
+      } finally built.rows.unpersist() // no-op unless the sidecar path persisted it
     // a concurrent checkpointer may have landed first: same derived
     // content, so losing this race is a silent no-op
     if (fs.exists(dest) || !fs.rename(tmp, dest)) fs.delete(tmp, true)
-    // overwrite any pre-publish cache entry for THIS version (the
+    // overwrite any pre-publish cache entries for THIS version (the
     // bootstrap path caches None before its header exists; a lost race's
-    // winner derived the identical value, so unconditional is safe)
+    // winner derived the identical values, so unconditional is safe)
     liveAggrCache.put((qroot.toString, v), aggr)
-    // same moment, same key discipline: the header families a future
-    // boundary's incremental refresh needs (bounded — only recorded
-    // under the inline threshold; a lost publish race derived the
-    // identical value)
-    memoIds.filter(_.size <= inlineBelow).foreach(ids =>
-      ckptMetaCache.put((qroot.toString, v), (ids, maxTxn)))
+    ckptMetaCache.put((qroot.toString, v),
+      CkptMeta(CkptShape(layout, liveN, copiedCount), maxTxn,
+        copiedIds.filter(_.size <= inlineBelow(hd.props))))
   }
 
-  /** The three row groups of a SIDECAR manifest at checkpoint `v`:
-    * returns (fresh file rows — a distributed frame, O(change since the
-    * last spill)) and (sidecar-reference + tombstone rows — driver-small
-    * by the caps). Incremental from the previous manifest when one
+  /** The row groups of a SIDECAR manifest at checkpoint `v`: fresh file
+    * rows — a distributed frame, O(change since the last spill) — and
+    * sidecar-reference + tombstone rows (`extra`, driver-small by the
+    * caps); a spill of the whole live set also knows its count and
+    * aggregate. Incremental from the previous manifest when one
     * exists: carry its refs, fold the tail deltas' per-path FINAL ops
     * into fresh'/tombstones', then SPILL fresh to a new immutable
     * sidecar once it outgrows the spill threshold, or COMPACT everything
     * into one sidecar when the ref count or tombstone set hits its cap
     * (amortized O(table)/K). Bootstrap (no previous parquet checkpoint,
     * or the full-rebuild retry) spills the complete live set as the
-    * first sidecar — the manifest itself stays O(headers). */
+    * first sidecar — the manifest itself stays O(headers). `full` is
+    * the full live build, forced only by a bootstrap or a full fold
+    * without a checkpoint frame. */
   private def sidecarManifestRows(
       spark: SparkSession, root: String, v: Long,
       fs: org.apache.hadoop.fs.FileSystem, qroot: Path,
-      prevPq: Option[Long])
-      : (org.apache.spark.sql.Dataset[CkptRow], Seq[CkptRow], Option[(Long, Long)]) = {
+      prevPq: Option[Long], full: => org.apache.spark.sql.Dataset[CkptRow])
+      : BuiltRows = {
     val props = readDelta(spark, root, v).props
     val spillRows = props.get(sidecarSpillRowsProp).flatMap(_.toLongOption)
       .getOrElse(sidecarSpillRowsDefault)
@@ -2177,8 +2171,7 @@ object Snapshots {
           // duplicates descend from the same path's re-add).
           val t0 = System.nanoTime()
           val (all, n) = persistCount(checkpointFileFrame(spark, root, v)
-            .getOrElse(fullLiveRows(spark, root, v, fs, qroot))
-            .dropDuplicates("path").as[CkptRow])
+            .getOrElse(full).dropDuplicates("path").as[CkptRow])
           val agg = aggOf(all, n)
           val ref = try spill(all, v, n) finally all.unpersist()
           SidecarMaintenance.folds.incrementAndGet()
@@ -2187,7 +2180,7 @@ object Snapshots {
           noteMaintenance(s"sidecar FULL fold on $root@v$v: ${refs0.size} " +
             s"refs + ${tombs1.size} tombs -> 1 ref ($n rows, " +
             f"${(System.nanoTime() - t0) / 1e9}%.2f s)")
-          (spark.emptyDataset[CkptRow], Seq(sidecarRefRowOf(ref)), agg)
+          BuiltRows(spark.emptyDataset[CkptRow], Seq(sidecarRefRowOf(ref)), Some(n), agg)
         } else {
           val (refs1, tombs2) =
             if (refs0.size < sidecarMaxRefs) (refs0, tombs1)
@@ -2240,23 +2233,23 @@ object Snapshots {
           val (freshP, freshN) = persistCount(fresh1)
           if (freshN >= spillRows) {
             val ref = try spill(freshP, v, freshN) finally freshP.unpersist()
-            (spark.emptyDataset[CkptRow],
+            BuiltRows(spark.emptyDataset[CkptRow],
               (refs1 :+ ref).map(sidecarRefRowOf) ++
-                tombs2.toSeq.map { case (p, g) => tombRowOf(p, g) }, None)
+                tombs2.toSeq.map { case (p, g) => tombRowOf(p, g) }, None, None)
           } else {
             // freshP stays persisted: the caller's checkpoint write
             // consumes it and unpersists afterwards
-            (freshP,
+            BuiltRows(freshP,
               refs1.map(sidecarRefRowOf) ++
-                tombs2.toSeq.map { case (p, g) => tombRowOf(p, g) }, None)
+                tombs2.toSeq.map { case (p, g) => tombRowOf(p, g) }, None, None)
           }
         }
       case None =>
         // bootstrap / full rebuild: the whole live set becomes sidecar #1
-        val (all, n) = persistCount(fullLiveRows(spark, root, v, fs, qroot))
+        val (all, n) = persistCount(full)
         val agg = aggOf(all, n)
         val ref = try spill(all, v, n) finally all.unpersist()
-        (spark.emptyDataset[CkptRow], Seq(sidecarRefRowOf(ref)), agg)
+        BuiltRows(spark.emptyDataset[CkptRow], Seq(sidecarRefRowOf(ref)), Some(n), agg)
     }
   }
 
@@ -2349,8 +2342,7 @@ object Snapshots {
     // under the parquet codec a cold read is a Spark job, not a line
     // parse, which this memo keeps off the per-query path
     val key = (qroot.toString, v)
-    val hit = reconstructCache.get(key)
-    if (hit != null) return hit
+    reconstructCache.get(key).foreach(hit => return hit)
     val ckpts = checkpointVersions(spark, root).filter(_ <= v).reverse
     def attempt(candidates: Seq[Long]): (Seq[String], Map[String, graft.core.Skipping.FileStats]) = {
       val base = candidates.headOption
@@ -2377,21 +2369,19 @@ object Snapshots {
       }
     }
     val r = attempt(ckpts)
-    if (reconstructCache.size > 64) reconstructCache.clear()
     reconstructCache.put(key, r)
     r
   }
 
-  /** Reconstructed (files, stats) memoized per (qualified root, version)
-    * — bounded wholesale, purged on v0 publish, same discipline as
-    * `deltaCache`/`indexCache`. */
   /** Inferred schema per (immutable) staged-feed directory — metadata
-    * only, crudely size-bounded like the other memos. */
-  private val feedSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    * only, LRU-bounded like the other memos. */
+  private val feedSchemaCache = new LruCache[String, StructType](256)
 
-  private val reconstructCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Seq[String], Map[String, graft.core.Skipping.FileStats])]()
+  /** Reconstructed (files, stats) memoized per (qualified root, version)
+    * — LRU-bounded, purged on v0 publish, same discipline as
+    * `indexCache`. */
+  private val reconstructCache = new LruCache[
+    (String, Long), (Seq[String], Map[String, graft.core.Skipping.FileStats])](64)
 
   private def versionFileList(spark: SparkSession, root: String, v: Long): Seq[String] = {
     // parquet-checkpoint tables: answer from the (cached) distributed
@@ -2401,8 +2391,7 @@ object Snapshots {
     // either cache are free; the driver reconstruct remains for text
     // tables and for consumers that need the stats maps.
     val key = (fsOf(spark, root)._2.toString, v)
-    val rHit = reconstructCache.get(key)
-    if (rHit != null) return rHit._1
+    reconstructCache.get(key).foreach(hit => return hit._1)
     liveFileMeta(spark, root, v) match {
       case Some(metas) => metas.map(_.path)
       case None => reconstruct(spark, root, v)._1
@@ -3085,9 +3074,7 @@ object Snapshots {
         try {
           val tail = ((cv + 1) to v)
             .flatMap(w => readDelta(spark, root, w).copied).toSet
-          val prevHdr = spark.read
-            .parquet(parquetCheckpointPath(qroot, cv).toString)
-            .filter(col("kind") === "header" && col("hkey") === "copied")
+          val prevHdr = ckptCopiedRows(spark, qroot, cv)
           // a huge landing set (tens of thousands of source files) must
           // not become a driver-built literal IN — same >1000 valve as
           // checkpointFileFrame's removes: broadcast-semi-join instead
@@ -3748,17 +3735,16 @@ object Snapshots {
     * the driver index) or the checkpoint vanished mid-read. */
   /** Envelope summaries memoized per immutable (root, version, cols) —
     * the optimizer batch hosting MetadataAggRule may iterate, and each
-    * miss is a Spark job. Bounded wholesale like the other caches. */
-  private val envelopeSummaryCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String), Option[EnvelopeSummary]]()
+    * miss is a Spark job. LRU-bounded like the other caches. */
+  private val envelopeSummaryCache =
+    new LruCache[(String, Long, String), Option[EnvelopeSummary]](64)
 
   private[graft] def distributedEnvelopeSummary(
       spark: SparkSession, root: String, version: Long,
       cols: Seq[String]): Option[EnvelopeSummary] = {
     val (_, qroot0) = fsOf(spark, root)
     val key = (qroot0.toString, version, cols.distinct.sorted.mkString("|"))
-    val hit = envelopeSummaryCache.get(key)
-    if (hit != null) return hit
+    envelopeSummaryCache.get(key).foreach(hit => return hit)
     val computed =
       try Some(computeEnvelopeSummary(spark, root, version, cols))
       catch {
@@ -3771,7 +3757,6 @@ object Snapshots {
               s"(transient, not cached): ${e.getMessage}")
           return None
       }
-    if (envelopeSummaryCache.size > 64) envelopeSummaryCache.clear()
     envelopeSummaryCache.put(key, computed.flatten)
     computed.flatten
   }
@@ -3916,17 +3901,10 @@ object Snapshots {
   private val liveAggrCache =
     new LruCache[(String, Long), Option[(Long, Long)]](64)
 
-  /** (copied identities, maxtxn) of a SMALL parquet checkpoint, recorded
-    * at write time — the two header families the NEXT boundary's
-    * incremental refresh needs. A hit makes the whole refresh driver
-    * arithmetic (prev value ∪ tail deltas) instead of two filtered reads
-    * of the previous checkpoint; a miss (cold process, big checkpoint —
-    * entries are only recorded under the same `inlineBelow` bound that
-    * gates the inline layout) keeps the distributed path. Metadata per
-    * immutable (root, version), never data rows — the deltaCache
-    * discipline. */
-  private val ckptMetaCache =
-    new LruCache[(String, Long), (Seq[String], Long)](64)
+  /** `CkptMeta` per parquet checkpoint, recorded by the writer at publish
+    * and read back by `ckptMeta` on a miss. Metadata per immutable
+    * (root, version), never data rows — the deltaCache discipline. */
+  private val ckptMetaCache = new LruCache[(String, Long), CkptMeta](64)
 
   /** (liveFiles, totalBytes) of an immutable (root, version) WITHOUT
     * materializing the per-file list anywhere: the nearest parquet
@@ -5345,9 +5323,11 @@ object Snapshots {
         // per-version batches) re-read the same feed several times and
         // paid a footer-inference job each time otherwise
         val p = new Path(qroot, s"_changes/${d.cdf.get}").toString
-        val sch = feedSchemaCache.computeIfAbsent(
-          p, q => spark.read.parquet(q).schema)
-        if (feedSchemaCache.size > 256) feedSchemaCache.clear()
+        val sch = feedSchemaCache.get(p).getOrElse {
+          val inferred = spark.read.parquet(p).schema
+          feedSchemaCache.put(p, inferred)
+          inferred
+        }
         Some(spark.read.schema(sch).parquet(p))
       }
       else if (d.op.contains("optimize")) None // same rows, different files
@@ -6771,11 +6751,11 @@ object Snapshots {
     * committed versions are IMMUTABLE, so an index built once is valid
     * forever — the repeated-footer-sweep cost the r7 ADVICE flagged
     * (pruneOn rebuilding the index on every load) pays once per version
-    * instead. Bounded: cleared wholesale past 64 tables×versions (each
-    * entry is O(files) small structs; vacuumed versions age out with the
-    * clear — their reads fail anyway). */
+    * instead. LRU-bounded at 64 tables×versions (each entry is O(files)
+    * small structs; vacuumed versions age out — their reads fail
+    * anyway). */
   private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[graft.core.Skipping.FileStats]]()
+    new LruCache[(String, Long), Seq[graft.core.Skipping.FileStats]](64)
 
   /** The file-stats index of (root, version) — the planning-time input
     * for file-level pruning in both `SnapshotReader.pruneOn` and the
@@ -6792,9 +6772,7 @@ object Snapshots {
     val v = if (version < 0) latestVersion(spark, root) else version
     val (_, qroot) = fsOf(spark, root)
     val key = (qroot.toString, v)
-    val hit = indexCache.get(key)
-    if (hit != null) hit
-    else {
+    indexCache.get(key).getOrElse {
       val (files, logStats) = reconstruct(spark, root, v)
       val (have, missing) = files.partition(logStats.contains)
       val fromLog = have.map(f => logStats(f).copy(path = new Path(qroot, f).toString))
@@ -6803,7 +6781,6 @@ object Snapshots {
         else graft.core.Skipping.buildIndexDistributed(
           spark, missing.map(f => new Path(qroot, f).toString))
       val idx = (fromLog ++ fromFooters).sortBy(_.path)
-      if (indexCache.size > 64) indexCache.clear()
       indexCache.put(key, idx)
       idx
     }
@@ -6843,11 +6820,13 @@ object Snapshots {
   def table(spark: SparkSession, root: String): SnapshotReader =
     new SnapshotReader(spark, root)
 
-  /** Builder for `Snapshots.table`. `pruneOn` consults footer statistics
-    * over the version's EXPLICIT file list (executor-distributed reads,
-    * cached per immutable version — `statsIndex`), so the pruned scan
-    * never lists a directory and never reads a data page of a skipped
-    * file. */
+  /** Builder for `Snapshots.table`. `pruneOn` is a range filter read
+    * through the `graft-snapshot` front door: the version's stats index
+    * (`statsIndex`, cached per immutable version) prunes its EXPLICIT
+    * file list at plan time, so the scan never lists a directory and
+    * never reads a data page of a skipped file, and the version's
+    * deletion vectors, recorded schema and column mapping apply as on
+    * every other read. */
   final class SnapshotReader private[jobs] (spark: SparkSession, root: String) {
     private var versionOpt: Option[Long] = None
     private var changesOpt: Option[(Long, Long)] = None
@@ -6869,8 +6848,12 @@ object Snapshots {
       case None =>
         val v = versionOpt.getOrElse(latestVersion(spark, root))
         pruneOpt match {
+          // through the `graft-snapshot` front door, which prunes on the
+          // same stats index and applies the version's deletion vectors,
+          // recorded schema and physical column names
           case Some((c, lo, hi)) =>
-            graft.core.Skipping.scanPruned(spark, statsIndex(spark, root, v), c, lo, hi)
+            spark.read.format("graft-snapshot").option("versionAsOf", v).load(root)
+              .where(col(c).between(lo, hi))
           case None => readVersion(spark, root, v)
         }
     }

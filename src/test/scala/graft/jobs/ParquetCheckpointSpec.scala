@@ -340,6 +340,50 @@ class ParquetCheckpointSpec extends AnyFunSuite {
     assert(Snapshots.readVersion(spark, root).count() == 15)
   }
 
+  test("a copied-identity set past inlineBelow leaves the one-file layout across cold boundaries") {
+    // COPY INTO batches each under the bound must not accumulate a
+    // copied set past it in the one-file layout, even when every
+    // boundary misses the in-process memo: the layout follows the
+    // copied COUNT each checkpoint records
+    val base = Files.createTempDirectory("pqcopyind").toFile.getAbsolutePath
+    val root = s"$base/t"
+    val bound = 5
+    Snapshots.init(spark, root, Seq((0L, 0.0)).toDF("k", "v").coalesce(1),
+      Map(Snapshots.checkpointFormatProp -> "parquet",
+        "graft.checkpoint.inlineBelow" -> bound.toString))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val boundaries = (1 to 3).map { b =>
+      // one COPY INTO batch of 3 identities, then compaction keeps the
+      // LIVE count small, so only the copied count can steer the layout
+      (1 to 3).foreach(i => Seq((b * 10L + i, 1.0)).toDF("k", "v").coalesce(1)
+        .write.parquet(s"$base/landing/b$b-$i"))
+      assert(Snapshots.copyInto(spark, root, s"$base/landing").filesLoaded == 3L)
+      Snapshots.optimizeCompact(spark, root, 1L << 30)
+      while ((Snapshots.latestVersion(spark, root) + 1) % 10 != 0)
+        Snapshots.setProperties(spark, root, Map("comment" -> "pad"))
+      // every boundary misses the in-process memo
+      Snapshots.invalidateCaches(spark, root)
+      val v = Snapshots.setProperties(spark, root, Map("comment" -> s"boundary $b"))
+      val copied = Snapshots.copiedUpTo(spark, root, v).size
+      val split = fs.exists(new Path(root, f"_log/v$v%08d.checkpoint.parquet/_headers"))
+      assert(split == (copied > bound),
+        s"v$v holds $copied copied identities (bound $bound): split layout = $split")
+      (v, copied, split)
+    }
+    assert(boundaries.map(_._2) == Seq(3, 6, 9))
+    boundaries.foreach { case (v, copied, split) =>
+      val pq = f"$root/_log/v$v%08d.checkpoint.parquet"
+      val shape = spark.read.parquet(if (split) s"$pq/_headers" else pq)
+        .filter(col("kind") === "header" && col("hkey") === "shape")
+        .select("hval").as[String].collect()
+      assert(shape.length == 1, s"v$v must record one shape row: ${shape.toSeq}")
+      val Array(layout, _, recorded) = shape.head.split(",", -1)
+      assert(layout == (if (split) "split" else "inline") && recorded.toLong == copied,
+        s"v$v shape ${shape.head} vs $copied copied identities")
+    }
+    assert(Snapshots.readVersion(spark, root).count() == 10L)
+  }
+
   test("the streaming tail replays a parquet-checkpoint table exactly") {
     val root = tmp()
     Snapshots.init(spark, root,

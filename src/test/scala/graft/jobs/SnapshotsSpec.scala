@@ -555,6 +555,22 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(pruned.select("k").as[Long].collect().toSet == (100L to 199L).toSet)
   }
 
+  test("pruneOn never returns rows a merge-on-read delete removed") {
+    val root = Files.createTempDirectory("snap").toFile.getAbsolutePath + "/t"
+    Snapshots.init(spark, root,
+      (1L to 100L).map(i => (i, i * 1.0)).toDF("k", "v")
+        .repartitionByRange(2, col("k")).sortWithinPartitions("k"))
+    // deletion vectors only: the deleted rows stay in the data files
+    val v1 = Snapshots.deleteWhereMor(spark, root, "k BETWEEN 10 AND 19")
+    assert(Snapshots.readDelta(spark, root, v1).dvAdd.isDefined)
+    val got = Snapshots.table(spark, root).pruneOn("k", 1L, 30L).load()
+      .select("k").as[Long].collect().toSet
+    assert(got == (1L to 30L).toSet -- (10L to 19L))
+    // time travel to before the delete still sees them
+    assert(Snapshots.table(spark, root).versionAsOf(0).pruneOn("k", 1L, 30L)
+      .load().count() == 30L)
+  }
+
   test("streaming ingest commits one version per batch, replay-idempotent") {
     val root = Files.createTempDirectory("snap").toFile.getAbsolutePath + "/t"
     val src = Files.createTempDirectory("snap-src").toFile.getAbsolutePath

@@ -17,8 +17,8 @@ CPUS=${SPARK_GRAFT_CPUS:-8}
 # Regression floors (VERDICT r4 item #7): the gate FAILS if the spec count
 # drops or any registry query loses its oracle SQL — a `None` oracle would
 # silently demote a query to the weaker rows-only check.
-ORACLE_FLOOR=${ORACLE_FLOOR:-152}
-SPEC_FLOOR=${SPEC_FLOOR:-400}
+ORACLE_FLOOR=${ORACLE_FLOOR:-194}
+SPEC_FLOOR=${SPEC_FLOOR:-639}
 
 echo "== compile =="
 sbt -batch compile | tail -1
