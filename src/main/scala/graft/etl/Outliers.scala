@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   *   - `approxQuantile` is the Greenwald-Khanna sketch — one distributed pass
   *     per call, constant driver memory. Fine at 100 TB.
   *   - The sequential mode re-executes the upstream plan once per column; the
-  *     caller should `.cache()` (or checkpoint) the input frame first — see
-  *     `sequentialCached`. The single-pass mode computes all columns' bands in
-  *     ONE sketch pass over the unfiltered frame (different, looser semantics;
-  *     3x fewer scans).
+  *     caller should `.cache()` (or checkpoint) the input frame first and keep
+  *     it until the filtered frame's last use (`Jobs.etl` keeps it through
+  *     the curated write). The single-pass mode computes all columns' bands
+  *     in ONE sketch pass over the unfiltered frame (different, looser
+  *     semantics; 3x fewer scans).
   */
 object Outliers {
 
@@ -34,20 +35,6 @@ object Outliers {
       val Array(lo, hi) = acc.stat.approxQuantile(c, Array(pLow, pHigh), relErr)
       acc.filter(col(c) >= lo && col(c) <= hi)
     }
-
-  /** Sequential mode with the input cached across the per-column sketch jobs
-    * (perf-only change; identical results to `sequential`). */
-  def sequentialCached(
-      df: DataFrame,
-      cols: Seq[String],
-      pLow: Double = 0.01,
-      pHigh: Double = 0.99,
-      relErr: Double = 0.01
-  ): DataFrame = {
-    val cached = df.cache()
-    try sequential(cached, cols, pLow, pHigh, relErr)
-    finally cached.unpersist(blocking = false)
-  }
 
   /** Single-pass mode: one sketch job for ALL columns on the unfiltered frame,
     * then one conjunctive filter. Bands are computed jointly, not sequentially

@@ -1,5 +1,9 @@
 package graft.jobs
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,10 +18,15 @@ import graft.marts.Marts
   *   - partitioned writes use dynamic partition overwrite (set in
   *     graft.core.Sessions) so month re-runs are idempotent without
   *     clobbering sibling partitions (`/root/reference/scripts/02_spark_etl.py:65`);
-  *   - the curated frame is cached once and reused by all marts — the
-  *     reference re-scans parquet 11 times (`03_spark_eda_agg.py:220-240`),
-  *     which at 100 TB is 11 full-table scans; one cache + 11 aggregates is
-  *     the same answers with one scan;
+  *   - the ETL caches the pre-outlier frame once: the outlier sketches and
+  *     the curated write all read that cache, so raw is scanned once;
+  *   - all 11 marts come from one grouping-sets query over the curated
+  *     frame (`Marts.evaluateAll`): one scan for all marts and one shuffle
+  *     per aggregate (two: the percentile sets apart), where the reference
+  *     re-scans parquet 11 times (`03_spark_eda_agg.py:220-240`), which at
+  *     100 TB is 11 full-table scans. Only the marts' own rows reach the
+  *     driver (the top-k cut runs in the plan), so driver memory is
+  *     O(mart output), and each mart is written there as one parquet file;
   *   - `coalesce(1)` single-file sinks are presentation-layer only (small
   *     mart outputs), never applied to data-scale frames.
   */
@@ -58,39 +67,29 @@ object Jobs {
     val sampled = sampleFrac.filter(f => f > 0 && f < 1)
       .fold(featured)(f => featured.sample(withReplacement = false, f, 42L))
     val capped = maxRows.filter(_ > 0).fold(sampled)(sampled.limit)
-    val cleaned =
-      if (removeOutliers)
-        Outliers.sequentialCached(capped,
-          Seq("trip_distance", "fare_amount", "trip_duration_min"), pLow, pHigh)
-      else capped
-    val curated = Features.withPartitions(cleaned, year, month)
-    curated.write.mode(SaveMode.Overwrite).partitionBy("year", "month").parquet(out)
-    curated
+    // the outlier sketches and the curated write all read one cache of
+    // the pre-outlier frame, so the raw input is scanned once
+    val cached = if (removeOutliers) Some(capped.cache()) else None
+    try {
+      val cleaned = cached.fold(capped)(c =>
+        Outliers.sequential(c, Seq("trip_distance", "fare_amount", "trip_duration_min"), pLow, pHigh))
+      val curated = Features.withPartitions(cleaned, year, month)
+      curated.write.mode(SaveMode.Overwrite).partitionBy("year", "month").parquet(out)
+      curated
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
-  /** S4/S7 + §3.2: the 11 marts off ONE cached curated frame. */
+  /** S4/S7 + §3.2: the 11 marts from one grouping-sets pass over the
+    * curated frame, each written as one parquet file under `outRoot`.
+    * Returns the marts as local frames. */
   def marts(spark: SparkSession, curated: DataFrame, outRoot: String): Map[String, DataFrame] = {
-    val c = curated.cache()
-    val fare = Marts.fareColumn(c)
-    val m: Map[String, DataFrame] = Map(
-      "kpis" -> Marts.kpis(c, "trip_duration_min", fare),
-      "viajes_por_hora_dia" -> Marts.tripsByHourDow(c, "pickup_hour", "pickup_dow"),
-      "duracion_promedio_hora" -> Marts.avgByHour(c, "pickup_hour", "trip_duration_min", "duracion_promedio_min"),
-      "tarifa_promedio_hora" -> Marts.avgByHour(c, "pickup_hour", fare, "tarifa_promedio"),
-      "top_origen" -> Marts.topZones(c, "pu_location", "trip_distance", "trip_duration_min", fare),
-      "top_destino" -> Marts.topZones(c, "do_location", "trip_distance", "trip_duration_min", fare),
-      "pagos" -> Marts.byCategory(c, "payment_type", "trip_duration_min", fare),
-      "vendor" -> Marts.byCategory(c, "vendor_id", "trip_duration_min", fare),
-      "distancia_bins" -> Marts.distanceBins(c, "trip_distance", "trip_duration_min", fare),
-      "variabilidad_hora" -> Marts.variability(c, "pickup_hour", "trip_duration_min", fare),
-      "variabilidad_dia" -> Marts.variability(c, "pickup_dow", "trip_duration_min", fare)
-    )
-    m.foreach { case (name, df) =>
-      val sink = if (name == "kpis") df.coalesce(1) else df
-      sink.write.mode(SaveMode.Overwrite).parquet(s"$outRoot/$name")
-    }
-    c.unpersist(blocking = false)
-    m
+    val marts = Marts.evaluateAll(curated, Marts.tripMarts(Marts.fareColumn(curated)))
+    // each write is tens of ms of fixed cost on one driver thread, so the
+    // 11 run side by side; all finish before a failure is rethrown
+    val writes = marts.map(m => Future(Sinks.writeDriverParquet(spark, m.schema, m.rows, s"$outRoot/${m.name}")))
+    writes.foreach(Await.ready(_, Duration.Inf))
+    writes.foreach(_.value.get.get)
+    marts.map(m => m.name -> spark.createDataFrame(java.util.Arrays.asList(m.rows: _*), m.schema)).toMap
   }
 
   /** §3.4 training job body (`/root/reference/scripts/04_train_sparkml.py:76-156`):

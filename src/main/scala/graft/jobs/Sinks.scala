@@ -1,7 +1,11 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetDriverWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Scale-aware write helpers — the small-files / giant-files dials for the
   * 100 TB write path.
@@ -57,5 +61,26 @@ object Sinks {
     val clustered =
       if (clusterBy.isEmpty) df else df.sortWithinPartitions(clusterBy.map(col): _*)
     clustered.write.mode(SaveMode.Overwrite).parquet(out)
+  }
+
+  /** Overwrite `out` with `rows` (already on the driver, and few — the
+    * caller bounds them) as ONE parquet file written on the driver by
+    * Spark's own `OutputWriter`: no job, no task, no commit protocol. The
+    * file and a `_SUCCESS` marker are written into a hidden sibling
+    * directory that a rename then publishes, so `out` holds what a
+    * one-task `df.write.mode(Overwrite).parquet(out)` leaves. */
+  def writeDriverParquet(spark: SparkSession, schema: StructType, rows: Seq[Row], out: String): Unit = {
+    val dest = new Path(out)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(dest.getParent, s"_tmp-${dest.getName}-${java.util.UUID.randomUUID}")
+    fs.mkdirs(tmp)
+    try {
+      val toRow = ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
+      GraftParquetDriverWriter.writeFile(spark, schema, rows.iterator.map(toRow), tmp.toString,
+        s"part-00000-${java.util.UUID.randomUUID}-c000")
+      fs.create(new Path(tmp, "_SUCCESS")).close()
+      fs.delete(dest, true)
+      if (!fs.rename(tmp, dest)) throw new java.io.IOException(s"could not publish $tmp as $dest")
+    } finally fs.delete(tmp, true)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 class JobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -61,6 +61,20 @@ class JobsSpec extends AnyFunSuite {
     val narrowBand = Jobs.etl(spark, wide, out2, 2024, 1, pLow = 0.25, pHigh = 0.75).count()
     assert(narrowBand < defaultBand)
     assert(narrowBand <= n / 2 + 10)
+  }
+
+  test("S3 etl with outliers scans the raw files once") {
+    val raw = Files.createTempDirectory("etl-raw").toString + "/raw"
+    spark.range(1, 2001).selectExpr(
+      "timestamp '2024-01-05 10:00:00' + make_interval(0,0,0,0,0,0,id) as tpep_pickup_datetime",
+      "timestamp '2024-01-05 10:00:00' + make_interval(0,0,0,0,0,id % 90 + 1,id) as tpep_dropoff_datetime",
+      "cast(id % 300 as double) / 10 + 0.1 as trip_distance",
+      "cast(id % 700 as double) / 10 + 1.0 as fare_amount").write.parquet(raw)
+    val out = Files.createTempDirectory("etl-once").toString
+    val (curated, events) = SparkEvents.record(spark)(Jobs.etl(spark, spark.read.parquet(raw), out, 2024, 1))
+    assert(events.scanStages == 1, s"${events.scanStages} raw scan stages")
+    // the write read the cache; re-derived from raw, the frame is the same
+    assert(spark.read.parquet(out).count() == curated.count())
   }
 
   test("S5 exportCsv writes a single part file with header") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 import graft.core.Tables
 import graft.serve.Report
 
@@ -37,8 +37,16 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     assert(new java.io.File(s"$etlOut/year=2024/month=01").isDirectory)
 
     val martsOut = Files.createTempDirectory("pipe-marts").toString
-    val m = Jobs.marts(spark, curatedBack, martsOut)
+    val (m, events) = SparkEvents.record(spark)(Jobs.marts(spark, curatedBack, martsOut))
     assert(m.size == 11)
+    // one grouping-sets pass: a fixed handful of jobs, not a few per mart,
+    // and no more rows on the driver than the marts hold
+    assert(events.jobs <= 6, s"${events.jobs} Spark jobs")
+    assert(events.scanStages == 1, s"${events.scanStages} curated scans")
+    val martRows = m.values.map(_.count()).sum
+    assert(events.collectedRows > 0 && events.collectedRows <= martRows,
+      s"collected ${events.collectedRows} rows for $martRows mart rows")
+    assert(m("top_origen").count() == math.min(20L, curatedBack.select("pu_location").distinct().count()))
 
     // export the KPI mart to single-file CSV and re-read it (serve path)
     val csvOut = Files.createTempDirectory("pipe-csv").toString + "/kpis"
