@@ -4,6 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -149,11 +150,24 @@ object Jobs {
       month: String,
       sampleFrac: Option[Double] = None,
       maxRows: Option[Int] = None
+  ): DataFrame =
+    score(spark, curated, graft.ml.Pipelines.load(modelPath), predictionsOut, year, month,
+      sampleFrac, maxRows)
+
+  /** `score` with the model already loaded. */
+  def score(
+      spark: SparkSession,
+      curated: DataFrame,
+      model: PipelineModel,
+      predictionsOut: String,
+      year: Int,
+      month: String,
+      sampleFrac: Option[Double],
+      maxRows: Option[Int]
   ): DataFrame = {
     val sampled = sampleFrac.filter(f => f > 0 && f < 1)
       .fold(curated)(f => curated.sample(withReplacement = false, f, 42L))
     val df = maxRows.filter(_ > 0).fold(sampled)(sampled.limit)
-    val model = graft.ml.Pipelines.load(modelPath)
     val pred0 = model.transform(df)
     val pred1 = if (pred0.columns.contains("year")) pred0
       else pred0.withColumn("year", lit(year.toString))

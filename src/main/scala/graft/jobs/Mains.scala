@@ -112,8 +112,8 @@ object ScoreMain {
                   .warn(s"model missing, skipping: $modelPath (${e.getMessage})")
                 None
             }
-          loaded.foreach { _ =>
-            Jobs.score(spark, curated, modelPath,
+          loaded.foreach { model =>
+            Jobs.score(spark, curated, model,
               predictionsOut = cfg.uri(cfg.predictionsRoot),
               year = cfg.year, month = mm,
               sampleFrac = cfg.sampleFrac, maxRows = cfg.maxRows)

@@ -1,10 +1,10 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
+import org.apache.spark.ml.{GraftMlShim, Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression.{GBTRegressor, RandomForestRegressor}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** ML pipeline factory + evaluation, mirroring the reference's training
   * stack (`/root/reference/src/ml/pipeline.py:5-47`, `src/ml/metrics.py:3-8`,
@@ -18,7 +18,8 @@ import org.apache.spark.sql.DataFrame
   *     handleInvalid="keep" (NaN passthrough — `pipeline.py:25`);
   *   - M4 GBTRegressor maxIter=50 maxDepth=5 seed=42 (default algo) /
   *     M5 RandomForestRegressor numTrees=100 maxDepth=10 seed=42;
-  *   - M8 RegressionEvaluator rmse/mae/r2.
+  *   - M8 RegressionEvaluator rmse/mae/r2;
+  *   - M9 save in Spark's format, load on the driver (`load`).
   *
   * These are the same JVM classes PySpark delegates to, so fitted models and
   * metrics reproduce the reference bit-for-bit given identical input splits.
@@ -89,7 +90,12 @@ object Pipelines {
     RegressionMetrics(m("rmse"), m("mae"), m("r2"))
   }
 
-  /** M9: overwrite-save / load round trip. */
+  /** M9: overwrite-save / load round trip. The model is saved in Spark's
+    * own format (`model.write`, what PySpark writes too) and loaded on the
+    * driver with no Spark job (`GraftMlShim.loadPipelineModel`): the five
+    * stage classes `regression` fits are rebuilt from their metadata and
+    * data files; any other stage, and any stage saved by Spark < 3, is read
+    * by Spark's own reader for that stage alone. */
   def save(model: PipelineModel, path: String): Unit = model.write.overwrite().save(path)
-  def load(path: String): PipelineModel = PipelineModel.load(path)
+  def load(path: String): PipelineModel = GraftMlShim.loadPipelineModel(SparkSession.active, path)
 }

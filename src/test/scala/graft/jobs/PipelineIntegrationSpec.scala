@@ -2,6 +2,7 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -102,10 +103,27 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     assert(mrow.getAs[Double]("rmse") >= 0.0)
     assert(mrow.getAs[Long]("rows_train") > 0L)
 
-    ScoreMain.run(spark, cfg)
+    // the month's model is loaded once, on the driver, so Spark runs only
+    // the curated read's schema job and the one predictions write (two
+    // jobs: its row cap adds a shuffle stage)
+    val (_, scoreEvents) = SparkEvents.record(spark)(ScoreMain.run(spark, cfg))
+    val writes = scoreEvents.queries.collect { case ("command", qe) => qe.logical }
+    assert(writes.size == 1, s"score writes: $writes")
+    writes.head match {
+      case w: InsertIntoHadoopFsRelationCommand => assert(w.outputPath.toString.endsWith("/predictions"))
+      case w => fail(s"not a predictions write: $w")
+    }
+    assert(scoreEvents.jobs <= 3, s"ScoreMain ran ${scoreEvents.jobs} Spark jobs for one month")
     val pred = spark.read.parquet(predRoot)
     assert(pred.columns.contains("prediction"))
     assert(pred.count() > 0)
+    // a month whose curated data exists but whose model does not: skipped
+    // with --skip-missing, an error without
+    val noModel = cfg.copy(modelRoot = Files.createTempDirectory("m-no-model").toString,
+      predictionsRoot = Files.createTempDirectory("m-no-pred").toString + "/predictions")
+    ScoreMain.run(spark, noModel.copy(skipMissing = true))
+    assert(!new java.io.File(noModel.predictionsRoot).exists())
+    intercept[Exception](ScoreMain.run(spark, noModel))
 
     MartsMain.run(spark, cfg)
     ExportMain.run(spark, cfg)

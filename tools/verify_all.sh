@@ -18,7 +18,7 @@ CPUS=${SPARK_GRAFT_CPUS:-8}
 # drops or any registry query loses its oracle SQL — a `None` oracle would
 # silently demote a query to the weaker rows-only check.
 ORACLE_FLOOR=${ORACLE_FLOOR:-194}
-SPEC_FLOOR=${SPEC_FLOOR:-642}
+SPEC_FLOOR=${SPEC_FLOOR:-648}
 
 echo "== compile =="
 sbt -batch compile | tail -1
