@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 
 /** SQL DML on the snapshot log — `MERGE INTO` / `UPDATE` / `DELETE FROM`
   * / `INSERT INTO` statements routed to the log's own commit paths
-  * (`mergeCow` / `updateWhere` / `deleteWhere` / `append`), so a SQL-only
+  * (`mergeClauses` / `updateWhere` / `deleteWhere` / `append`), so a SQL-only
   * consumer gets the identical commits, change feeds, OCC semantics and
   * CHECK gating the programmatic API gives.
   *
@@ -33,10 +33,10 @@ import org.apache.spark.sql.catalyst.plans.logical._
   *     surface: `WHEN MATCHED [AND cond] THEN UPDATE` (SET star or SET
   *     col=expr) or `DELETE`, `WHEN NOT MATCHED [AND cond] THEN INSERT`
   *     (star or column list + VALUES), and `WHEN NOT MATCHED BY SOURCE
-  *     [AND cond] THEN UPDATE/DELETE` — the plain whole-row upsert takes
-  *     `mergeCow`'s dedicated single-pass path, everything else routes
-  *     through `mergeClauses`. The ON clause must be a conjunction of
-  *     same-name column equalities (they become the merge keys).
+  *     [AND cond] THEN UPDATE/DELETE` — every MERGE, the plain
+  *     whole-row upsert included, routes through `mergeClauses`. The ON
+  *     clause must be a conjunction of same-name column equalities (they
+  *     become the merge keys).
   *   - `UPDATE t SET c = e, … [WHERE p]`
   *   - `DELETE FROM t WHERE p`
   *   - `INSERT INTO t <query>` — OCC append
@@ -160,61 +160,52 @@ object SnapshotSql {
       case m: MergeIntoTable =>
         val (root, tAliases) = targetOf(m.targetTable)
         val keys = mergeKeys(m.mergeCondition).distinct
-        val isWholeRow = m.matchedActions == Seq(UpdateStarAction(None)) &&
-          m.notMatchedActions == Seq(InsertStarAction(None)) &&
-          m.notMatchedBySourceActions.isEmpty
-        if (isWholeRow)
-          // the whole-row upsert keeps its dedicated single-pass path
-          Snapshots.mergeCow(spark, root, substituted(spark, m.sourceTable),
-            keys, changeFeed = changeFeed)
-        else {
-          val sAliases = aliasNames(m.sourceTable)
-          val both = tAliases.intersect(sAliases)
-          require(both.isEmpty,
-            s"ambiguous MERGE alias(es) ${both.mkString(", ")} — name the " +
-              "target and source differently")
-          // re-spell alias qualifiers into mergeClauses' fixed t./s.
-          // namespace, rendering back through the parser's own nodes
-          def requalified(e: Expression): String = e.transform {
-            case a: UnresolvedAttribute if a.nameParts.size > 1 =>
-              val q = a.nameParts.head
-              if (sAliases.exists(_.equalsIgnoreCase(q)))
-                UnresolvedAttribute(Seq("s", a.nameParts.last))
-              else if (tAliases.exists(_.equalsIgnoreCase(q)))
-                UnresolvedAttribute(Seq("t", a.nameParts.last))
-              else a
-          }.sql
-          def assigns(as: Seq[Assignment]): Map[String, String] = as.map { a =>
-            val name = a.key match {
-              case k: UnresolvedAttribute => k.nameParts.last
-              case other => throw new IllegalArgumentException(
-                s"unsupported MERGE assignment target: ${other.sql}")
-            }
-            name -> requalified(a.value)
-          }.toMap
-          def conv(a: MergeAction): Snapshots.MergeWhen = a match {
-            case UpdateStarAction(cond) =>
-              Snapshots.MergeWhen.updateAll(cond.map(requalified))
-            case UpdateAction(cond, _, true) =>
-              Snapshots.MergeWhen.updateAll(cond.map(requalified))
-            case UpdateAction(cond, as, _) =>
-              Snapshots.MergeWhen.update(assigns(as), cond.map(requalified))
-            case DeleteAction(cond) =>
-              Snapshots.MergeWhen.delete(cond.map(requalified))
-            case InsertStarAction(cond) =>
-              Snapshots.MergeWhen.insertAll(cond.map(requalified))
-            case InsertAction(cond, as) =>
-              Snapshots.MergeWhen.insert(assigns(as), cond.map(requalified))
+        val sAliases = aliasNames(m.sourceTable)
+        val both = tAliases.intersect(sAliases)
+        require(both.isEmpty,
+          s"ambiguous MERGE alias(es) ${both.mkString(", ")} — name the " +
+            "target and source differently")
+        // re-spell alias qualifiers into mergeClauses' fixed t./s.
+        // namespace, rendering back through the parser's own nodes
+        def requalified(e: Expression): String = e.transform {
+          case a: UnresolvedAttribute if a.nameParts.size > 1 =>
+            val q = a.nameParts.head
+            if (sAliases.exists(_.equalsIgnoreCase(q)))
+              UnresolvedAttribute(Seq("s", a.nameParts.last))
+            else if (tAliases.exists(_.equalsIgnoreCase(q)))
+              UnresolvedAttribute(Seq("t", a.nameParts.last))
+            else a
+        }.sql
+        def assigns(as: Seq[Assignment]): Map[String, String] = as.map { a =>
+          val name = a.key match {
+            case k: UnresolvedAttribute => k.nameParts.last
             case other => throw new IllegalArgumentException(
-              s"unsupported MERGE action: $other")
+              s"unsupported MERGE assignment target: ${other.sql}")
           }
-          Snapshots.mergeClauses(spark, root, substituted(spark, m.sourceTable),
-            keys,
-            matched = m.matchedActions.map(conv),
-            notMatched = m.notMatchedActions.map(conv),
-            notMatchedBySource = m.notMatchedBySourceActions.map(conv),
-            changeFeed = changeFeed)
+          name -> requalified(a.value)
+        }.toMap
+        def conv(a: MergeAction): Snapshots.MergeWhen = a match {
+          case UpdateStarAction(cond) =>
+            Snapshots.MergeWhen.updateAll(cond.map(requalified))
+          case UpdateAction(cond, _, true) =>
+            Snapshots.MergeWhen.updateAll(cond.map(requalified))
+          case UpdateAction(cond, as, _) =>
+            Snapshots.MergeWhen.update(assigns(as), cond.map(requalified))
+          case DeleteAction(cond) =>
+            Snapshots.MergeWhen.delete(cond.map(requalified))
+          case InsertStarAction(cond) =>
+            Snapshots.MergeWhen.insertAll(cond.map(requalified))
+          case InsertAction(cond, as) =>
+            Snapshots.MergeWhen.insert(assigns(as), cond.map(requalified))
+          case other => throw new IllegalArgumentException(
+            s"unsupported MERGE action: $other")
         }
+        Snapshots.mergeClauses(spark, root, substituted(spark, m.sourceTable),
+          keys,
+          matched = m.matchedActions.map(conv),
+          notMatched = m.notMatchedActions.map(conv),
+          notMatchedBySource = m.notMatchedBySourceActions.map(conv),
+          changeFeed = changeFeed)
 
       case i: InsertIntoStatement =>
         val (root, _) = targetOf(i.table)

@@ -41,14 +41,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                                   existing files are never modified or
   *                                   deleted by a commit.
   *   root/_changes/v00000042-ab12cd34/…  the row-level change feed of a
-  *                                   commit that opted in (`mergeCow(
-  *                                   changeFeed = true)`). The directory is
-  *                                   uniquely suffixed and ONLY reachable
-  *                                   through the committed delta's `#cdf:`
-  *                                   header — a feed staged by a commit
-  *                                   that then lost its race is an inert
-  *                                   orphan (`vacuumDebris` reclaims it),
-  *                                   never something `changesBetween` could
+  *                                   commit that opted in (a MERGE, UPDATE
+  *                                   or DELETE with `changeFeed = true`).
+  *                                   The directory is uniquely suffixed
+  *                                   and ONLY reachable through the
+  *                                   committed delta's `#cdf:` header — a
+  *                                   feed staged by a commit that then
+  *                                   lost its race is an inert orphan
+  *                                   (`vacuumDebris` reclaims it), never
+  *                                   something `changesBetween` could
   *                                   mistake for a different commit's feed.
   *
   * Concurrency: the delta publish is an ATOMIC no-replace claim (hard
@@ -4765,163 +4766,26 @@ object Snapshots {
     }: _*)
   }
 
-  /** Copy-on-write MERGE (whole-row update-else-insert, the Merge
-    * semantics): files holding a MATCHED key are rewritten without those
-    * rows, and one commit's worth of new files carries the full source
-    * batch; everything else carries over by reference. History intact —
-    * the pre-merge version still reads exactly.
-    *
-    * Schema evolution (the autoMerge admission): a source carrying NEW
-    * columns widens the table — carried-over files null-fill them at
-    * read time under the commit's recorded schema; a source MISSING
-    * table columns null-fills those on its inserted/updated rows; a
-    * column type change is refused loudly.
-    *
-    * With `changeFeed = true` the commit also publishes its row-level
-    * change set (jobs/ChangeFeed semantics: insert / update_preimage /
-    * update_postimage) under `_changes/`, computed against the PRE-merge
-    * version (conformed to the evolved schema) and reachable only
-    * through the committed delta's `#cdf:` header — the Delta-CDF shape
-    * `changesBetween` replays. */
+  /** Copy-on-write whole-row MERGE (update-else-insert, the Merge
+    * semantics): `mergeClauses` with `WHEN MATCHED THEN UPDATE SET *
+    * WHEN NOT MATCHED THEN INSERT *`. A source carrying NEW columns
+    * widens the table, a source MISSING table columns null-fills them on
+    * its rows, and `changeFeed = true` publishes the insert /
+    * update_preimage / update_postimage feed. */
   def mergeCow(
       spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
-      changeFeed: Boolean = false, txn: Option[Long] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val v = prev + 1
-    val (fs, qroot) = fsOf(spark, root)
-    val prevFiles = versionFileList(spark, root, prev)
-    val prevDelta = readDelta(spark, root, prev)
-    val src = withGenerated(source.dropDuplicates(keyCols), prevDelta.props)
-    val srcKeys = src.select(keyCols.map(col): _*)
-    val prevSchema = prevDelta.schema
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(readVersion(spark, root, prev).schema)
-    val merged = mergedSchema(Some(prevSchema),
-      assignPhysical(Some(prevSchema), src.schema, prevDelta.props))
-    checkConstraints(conform(src, merged), prevDelta.props)
-    val current = readVersionWithFile(spark, root, prev)
-    // matched-file detection doubles as the ANSI multiple-source-rows-
-    // matched check: the per-key source counts ride the same single
-    // pass, so refusing a nondeterministic merge costs no extra scan
-    val srcCnt = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__srcn"))
-    val perFile = current.join(srcCnt, keyCols)
-      .groupBy(col("__file")).agg(max(col("__srcn")).as("__mx")).collect()
-    if (perFile.exists(_.getLong(1) > 1) && !spark.conf
-        .getOption("spark.graft.merge.allowDuplicateSource").contains("true"))
-      throw new IllegalArgumentException(
-        "MERGE: multiple source rows match the same target row — ANSI " +
-          "and Delta refuse this (nondeterministic). Deduplicate the " +
-          "source on the merge keys, or set " +
-          "spark.graft.merge.allowDuplicateSource=true to apply an " +
-          "arbitrary one.")
-    val matchedFiles = perFile.map(r => new Path(r.getString(0)).toString).toSet
-    val rewritten = prevFiles.filter(f => matchedFiles.contains(new Path(qroot, f).toString))
-    // same full-resolution guard as deleteKeysCow: a partial match means
-    // matched rows would survive in carried-over files AND re-enter via the
-    // appended source — silent duplicate keys
-    require(rewritten.size == matchedFiles.size,
-      s"${matchedFiles.size} files hold matched keys but only ${rewritten.size} " +
-        s"resolved to log entries — path normalization bug? $matchedFiles")
-    // Row tracking: a MATCHED row keeps its id (the merge updates a
-    // logical row, it doesn't mint one) — looked up from the MATCHED
-    // files only, O(rewritten) never O(table); unmatched source rows
-    // draw fresh ids above the hwm. The hwm patch + race refusal ride
-    // the commit like any identity allocation.
-    val tracked = rowTrackingOn(prevDelta.props) &&
-      prevSchema.fieldNames.contains(rowIdCol)
-    // the REWRITTEN files' rows feed up to three passes (the tracked
-    // row-id lookup, the staged feed's pre/post classification, the
-    // kept-rows anti-join) — read+decode them ONCE when more than one
-    // pass will run (r20; r19 had each pass re-reading the parquet).
-    // O(rewritten) = O(change) by the detection pass's definition, so
-    // the persist is bounded by the commit's intrinsic rewrite size.
-    var rewrittenRowsP: Option[DataFrame] = None
-    def rewrittenRows: DataFrame = rewrittenRowsP.getOrElse {
-      val r0 = readFilesAs(spark, qroot,
-        rewritten.map(f => new Path(qroot, f).toString),
-        Some(prevSchema), prevDelta.props, prevDelta.dv)
-      val r =
-        if (changeFeed || tracked)
-          r0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else r0
-      rewrittenRowsP = Some(r)
-      r
-    }
-    val hwmKey = identityPrefix + rowIdCol + ".hwm"
-    val srcFinal =
-      if (!tracked) conform(src, merged)
-      else {
-        val tgtIds =
-          if (rewritten.isEmpty)
-            conform(spark.emptyDataFrame, StructType(
-              keyCols.map(prevSchema(_)) :+ prevSchema(rowIdCol)))
-          else rewrittenRows.select((keyCols.map(col) :+ col(rowIdCol)): _*)
-        val hwm = prevDelta.props.get(hwmKey).flatMap(_.toLongOption).getOrElse(0L)
-        conform(src, merged).drop(rowIdCol) // engine-managed: never source-supplied
-          .join(tgtIds, keyCols, "left")
-          .withColumn(rowIdCol, coalesce(col(rowIdCol),
-            lit(hwm + 1) + monotonically_increasing_id()))
-      }
-    // the conformed source feeds BOTH the staged change feed and the
-    // kept-rows write — materialize it once (it is O(source), and the
-    // persist also pins any monotonically_increasing_id row ids
-    // identical between the two consumers)
-    val srcFinalC = conform(srcFinal, merged)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // every key the source matches provably lives in a REWRITTEN file
-    // (that is the detection pass's definition), so the feed's
-    // pre/post/insert classification over the rewritten files' rows is
-    // identical to the old full-table read — the feed now costs
-    // O(change), never O(table)
-    def tgtRewritten: DataFrame =
-      if (rewritten.isEmpty)
-        conform(spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          prevSchema), merged)
-      else conform(rewrittenRows, merged)
-    def commitPhase(): Long = {
-      val cdfDir =
-        if (changeFeed) Some(stageChangeFeed(spark, qroot, v,
-          ChangeFeed.mergeFeed(tgtRewritten, srcFinalC, keyCols)))
-        else None
-      val kept =
-        if (rewritten.isEmpty) srcFinalC
-        else conform(
-            rewrittenRows.join(srcKeys, keyCols, "left_anti"), merged)
-          .unionByName(srcFinalC)
-      val (newFiles, stats) = writeCommitFiles(spark, root, v, kept, prevDelta.props, Some(merged))
-      val idPatch =
-        if (!tracked) Map.empty[String, String]
-        else {
-          // advance-only: an all-matched merge's stats max is the OLD ids'
-          // max (≤ hwm) — patching it would regress the hwm
-          val cur = prevDelta.props.get(hwmKey).flatMap(_.toLongOption).getOrElse(0L)
-          identityPatch(stats, Seq(rowIdCol -> 1L),
-            c => physicalMap(merged).getOrElse(c, c))
-            .filter(_._2.toLong > cur)
-        }
-      try commitRewrite(spark, root, v, Delta(newFiles, rewritten, txn = txn, cdf = cdfDir,
-        schema = Some(merged.json), props = prevDelta.props ++ idPatch, stats = stats,
-        op = Some("merge"), dv = prevDelta.dv))
-      catch { case e: Throwable =>
-        cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true)); throw e
-      }
-    }
-    try commitPhase()
-    finally {
-      srcFinalC.unpersist(blocking = false)
-      rewrittenRowsP.foreach(_.unpersist(blocking = false))
-    }
-  }
+      changeFeed: Boolean = false, txn: Option[Long] = None): Long =
+    mergeClauses(spark, root, source, keyCols,
+      matched = Seq(MergeWhen.updateAll()), notMatched = Seq(MergeWhen.insertAll()),
+      changeFeed = changeFeed, txn = txn)
 
   /** One WHEN clause of a clause-level MERGE (`mergeClauses`).
     * Expression strings reference the source row as `s.<col>` and the
     * target row as `t.<col>`; a bare name resolves target-first (the
     * ANSI scoping MERGE uses). `set` maps TARGET column names to value
     * expressions; it is empty for DELETE and for the star forms
-    * (UPDATE SET * / INSERT *, which expand to every same-name source
-    * column at execution). Build instances via the factory methods. */
+    * (UPDATE SET * / INSERT *, which assign the whole row at execution —
+    * see `mergeClauses`). Build instances via the factory methods. */
   final case class MergeWhen private[jobs] (
       kind: String, condition: Option[String], set: Map[String, String])
   object MergeWhen {
@@ -4977,9 +4841,11 @@ object Snapshots {
   // distinct from any srcSidePrefix rename (a source column named
   // "exists" becomes __s_exists — this marker must never collide)
   private val srcExistsMarker = "__graft_matched__"
+  private val tgtExistsMarker = "__graft_target__"
 
-  /** Clause-level copy-on-write MERGE — the full ANSI/Delta surface
-    * `mergeCow`'s whole-row upsert doesn't cover:
+  /** Copy-on-write MERGE — the one MERGE implementation (`mergeCow`,
+    * SnapshotSql and the SQL extensions all land here), the ANSI/Delta
+    * clause surface:
     *
     *   - `matched`: WHEN MATCHED [AND cond] THEN UPDATE (SET star or
     *     SET col=expr) or DELETE, cascaded in order (first clause whose
@@ -4990,15 +4856,21 @@ object Snapshots {
     *     THEN UPDATE/DELETE, applied to target rows matching no source
     *     key (conditions and assignments may reference only `t.`).
     *
-    * Execution is ONE file-grain COW commit: candidate files are those
-    * holding a source-key match, plus — when `notMatchedBySource` is
-    * present — exactly the files holding an UNMATCHED row satisfying
-    * some NMBS clause condition (found in the same single detection
-    * pass, so an NMBS merge touching one file rewrites one file); each
-    * candidate row takes the first applicable clause via a single
-    * codegen'd CASE cascade — one pass, no per-clause joins. Source
-    * rows matching no target key cascade through the insert clauses.
-    * Everything else carries by reference.
+    * The star actions assign the WHOLE row: every table column takes the
+    * same-name source column, NULL where the source lacks it. `_row_id`
+    * (row tracking) is engine-managed and never read from the source:
+    * updated rows keep the target's id, inserted rows draw fresh ids
+    * above the hwm.
+    *
+    * Execution is ONE file-grain COW commit, Delta's find-touched-files
+    * join followed by one rewrite: candidate files are those holding a
+    * source-key match, plus — when `notMatchedBySource` is present —
+    * exactly the files holding an UNMATCHED row satisfying some NMBS
+    * clause condition (found in the same single detection pass, so an
+    * NMBS merge touching one file rewrites one file). The candidate rows
+    * join the source once; each joined row takes the first applicable
+    * clause via a single codegen'd CASE cascade — one pass, no
+    * per-clause joins. Everything else carries by reference.
     *
     * Duplicate source keys: a source row set in which several rows
     * match the SAME target row is refused (the ANSI/Delta
@@ -5012,10 +4884,11 @@ object Snapshots {
     * Schema evolution follows Delta's rule: only the star actions admit
     * NEW source columns (widening the table); column-level clauses must
     * name existing target columns, and every assignment is cast to the
-    * target column's type. Generated columns are computed for inserted
-    * rows that don't assign them and VALIDATED (contradiction refusal)
-    * on every changed row; CHECK constraints gate changed rows only —
-    * O(changed), never O(table).
+    * target column's type. A generated column the applying clause does
+    * not assign is computed from the new row; an assigned one is
+    * VALIDATED (contradiction refusal). Column DEFAULTs fill NULLs as on
+    * any ingest. CHECK constraints gate changed rows only — O(changed),
+    * never O(table).
     *
     * With `changeFeed = true` the commit publishes the row-level change
     * set (insert / update_preimage / update_postimage / delete) exactly
@@ -5040,6 +4913,7 @@ object Snapshots {
     val (fs, qroot) = fsOf(spark, root)
     val prevFiles = versionFileList(spark, root, prev)
     val prevDelta = readDelta(spark, root, prev)
+    val props = prevDelta.props
     val src = source.dropDuplicates(keyCols)
     val srcCols = src.columns.toSeq
     require(keyCols.forall(k => srcCols.exists(_.equalsIgnoreCase(k))),
@@ -5052,36 +4926,54 @@ object Snapshots {
     val hasStar = (matched ++ notMatched).exists(_.kind.endsWith("*"))
     val merged =
       if (hasStar) mergedSchema(Some(prevSchema),
-        assignPhysical(Some(prevSchema), src.schema, prevDelta.props))
+        assignPhysical(Some(prevSchema), src.schema, props))
       else prevSchema
     val tgtNames = merged.fieldNames.toSeq
+    val tracked = rowTrackingOn(props) && tgtNames.contains(rowIdCol)
+    val gens = props.toSeq.collect {
+      case (k, e) if k.startsWith(generatedPrefix) && tgtNames.contains(k.stripPrefix(generatedPrefix)) =>
+        k.stripPrefix(generatedPrefix) -> e
+    }.sortBy(_._1)
     def field(name: String) = merged.fields.find(_.name.equalsIgnoreCase(name))
       .getOrElse(throw new IllegalArgumentException(
         s"MERGE assigns unknown target column $name (table: ${tgtNames.mkString(", ")})"))
-    def tr(sqlText: String, allowSource: Boolean): String =
-      mergeExprSql(spark, sqlText, tgtNames, srcCols, allowSource)
-    // resolve every clause down to (id, predicate, per-column value SQL)
+    // the star actions' whole row: the same-name source column, else
+    // NULL — minus what is computed instead (an unsupplied generated
+    // column, the engine-managed row id)
+    val starSet: Map[String, String] = merged.fields.toSeq.flatMap { f =>
+      srcCols.find(_.equalsIgnoreCase(f.name)) match {
+        case _ if tracked && f.name == rowIdCol => None
+        case Some(c) => Some(f.name -> s"s.`$c`")
+        case None if gens.exists(_._1 == f.name) => None
+        case None => Some(f.name -> "NULL")
+      }
+    }.toMap
+    // resolve every clause down to (id, predicate, per-column value SQL);
+    // the side markers make the three clause lists mutually exclusive
     final case class Resolved(id: String, isDelete: Boolean,
         pred: Column, set: Map[String, String])
-    val starSet: Map[String, String] = srcCols
-      .filter(c => merged.fields.exists(_.name.equalsIgnoreCase(c)))
-      .map(c => field(c).name -> s"s.`$c`").toMap
-    def resolve(c: MergeWhen, id: String, matchedSide: Boolean,
-        allowSource: Boolean): Resolved = {
-      val sideMark =
-        if (matchedSide) coalesce(col(srcExistsMarker), lit(false))
-        else !coalesce(col(srcExistsMarker), lit(false))
-      val cond = c.condition
-        .map(t => expr(tr(t, allowSource))).getOrElse(lit(true))
-      val set0 = if (c.kind.endsWith("*")) starSet else c.set
-      val set = set0.map { case (k, e) => field(k).name -> tr(e, allowSource) }
-      Resolved(id, c.kind == "delete", sideMark && cond, set)
+    val isTgt = coalesce(col(tgtExistsMarker), lit(false))
+    val isSrc = coalesce(col(srcExistsMarker), lit(false))
+    def resolve(c: MergeWhen, id: String, side: Column,
+        targetCols: Seq[String], allowSource: Boolean): Resolved = {
+      def tr(sqlText: String) = mergeExprSql(spark, sqlText, targetCols, srcCols, allowSource)
+      val cond = c.condition.map(t => expr(tr(t))).getOrElse(lit(true))
+      val set = (if (c.kind.endsWith("*")) starSet else c.set).map { case (k, e) =>
+        val name = field(k).name
+        require(!(tracked && name == rowIdCol),
+          s"$rowIdCol is engine-managed under $rowTrackingProp — MERGE cannot assign it")
+        name -> tr(e)
+      }
+      Resolved(id, c.kind == "delete", side && cond, set)
     }
     val mResolved = matched.zipWithIndex.map { case (c, i) =>
-      resolve(c, s"m$i", matchedSide = true, allowSource = true) }
+      resolve(c, s"m$i", isTgt && isSrc, tgtNames, allowSource = true) }
     val bResolved = notMatchedBySource.zipWithIndex.map { case (c, i) =>
-      resolve(c, s"b$i", matchedSide = false, allowSource = false) }
-    val targetResolved = mResolved ++ bResolved
+      resolve(c, s"b$i", isTgt && !isSrc, tgtNames, allowSource = false) }
+    // insert clauses see only the source row
+    val iResolved = notMatched.zipWithIndex.map { case (c, i) =>
+      resolve(c, s"i$i", !isTgt, Nil, allowSource = true) }
+    val clauses = mResolved ++ bResolved ++ iResolved
     def inIds(ids: Seq[String]): Column =
       if (ids.isEmpty) lit(false) else col("__act").isin(ids: _*)
     // ---- candidate files (the rows a clause could touch), the ANSI
@@ -5097,8 +4989,8 @@ object Snapshots {
     val bCondOr: Option[Column] =
       if (notMatchedBySource.isEmpty) None
       else Some(notMatchedBySource.map(_.condition
-        .map(t => expr(tr(t, allowSource = false))).getOrElse(lit(true)))
-        .reduce(_ || _))
+        .map(t => expr(mergeExprSql(spark, t, tgtNames, srcCols, allowSource = false)))
+        .getOrElse(lit(true))).reduce(_ || _))
     val allowDupSource = spark.conf
       .getOption("spark.graft.merge.allowDuplicateSource").contains("true")
     val rewritten: Seq[String] =
@@ -5116,13 +5008,15 @@ object Snapshots {
           catch { case _: org.apache.spark.sql.AnalysisException => lit(true) }
         }
         // NMBS needs the unmatched rows (left outer); a matched-only
-        // merge detects through the cheaper inner join
+        // merge detects through the cheaper inner join. Only candidate
+        // files reach the driver: O(candidates), never O(table files).
         val joinType = if (notMatchedBySource.isEmpty) "inner" else "left_outer"
         val perFile = current.join(srcCnt, keyCols, joinType)
           .groupBy(col("__file")).agg(
             max(coalesce(col("__srcn"), lit(0L))).as("__mx"),
             max(when(col("__srcn").isNull &&
               bCondSafe.getOrElse(lit(false)), 1).otherwise(0)).as("__b"))
+          .where(col("__b") === 1 || (lit(matched.nonEmpty) && col("__mx") > 0))
           .collect()
         if (!allowDupSource && matched.nonEmpty && perFile.exists(_.getLong(1) > 1))
           throw new IllegalArgumentException(
@@ -5131,166 +5025,133 @@ object Snapshots {
               "source on the merge keys, or set " +
               "spark.graft.merge.allowDuplicateSource=true to apply an " +
               "arbitrary one.")
-        val want = perFile.filter(r =>
-          (matched.nonEmpty && r.getLong(1) > 0) || r.getInt(2) == 1)
-          .map(r => new Path(r.getString(0)).toString).toSet
+        val want = perFile.map(r => new Path(r.getString(0)).toString).toSet
         val rw = prevFiles.filter(f => want.contains(new Path(qroot, f).toString))
         require(rw.size == want.size,
           s"${want.size} files hold clause-affected rows but only ${rw.size} " +
             s"resolved to log entries — path normalization bug? $want")
         rw
       }
-    // ---- target-side pass: one left-outer join, one CASE cascade
+    // ---- one join: candidate rows ⋈ source rows
     val srcR = src.select(
       srcCols.map(c => col(c).as(srcSidePrefix + c)) :+
         lit(true).as(srcExistsMarker): _*)
-    val tgtM =
+    val tgtM = (
       if (rewritten.isEmpty)
         spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), merged)
       else conform(readFilesAs(spark, qroot,
         rewritten.map(f => new Path(qroot, f).toString),
-        Some(prevSchema), prevDelta.props, prevDelta.dv), merged)
+        Some(prevSchema), props, prevDelta.dv), merged)
+    ).withColumn(tgtExistsMarker, lit(true))
     val joinCond = keyCols.map(k => col(k) === col(srcSidePrefix + k)).reduce(_ && _)
-    val actCol = targetResolved
-      .foldRight(lit("keep"): Column) { (r, els) => when(r.pred, lit(r.id)).otherwise(els) }
-    // the candidate⋈source join feeds up to five downstream passes (the
-    // kept-rows write, the feed's pre/post/delete branches, the
-    // changed-rows constraint gate) — materialize it ONCE instead of
-    // re-running the join per consumer. The frame is O(candidate files'
-    // rows) by the detection pass above, never O(table), so the persist
-    // is bounded by the change size; it also pins any
-    // monotonically_increasing_id-derived row ids identical between the
-    // staged feed and the committed data files.
-    val withAct = tgtM.join(srcR, joinCond, "left_outer").withColumn("__act", actCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deleteIds = targetResolved.filter(_.isDelete).map(_.id)
-    val updateResolved = targetResolved.filterNot(_.isDelete)
+    // target rows keep their file's partition (the broadcast side is the
+    // source), so each rewritten file's key envelope survives the
+    // rewrite. The insert clauses need the source rows matching no
+    // target key AT ALL: with MATCHED clauses the detection pass made
+    // every file holding a source-matched key a candidate, so the
+    // candidates' keys decide; without, the candidate set proves nothing
+    // about key presence and the table's keys decide.
+    val joined = {
+      val tgtSide = tgtM.join(srcR, joinCond, "left_outer")
+      if (notMatched.isEmpty) tgtSide
+      else {
+        val keysFrom = if (matched.nonEmpty) tgtM else readVersion(spark, root, prev)
+        tgtSide.unionByName(
+          srcR.join(keysFrom.select(keyCols.map(k => col(k).as(srcSidePrefix + k)): _*),
+            keyCols.map(srcSidePrefix + _), "left_anti"),
+          allowMissingColumns = true)
+      }
+    }
+    val actCol = clauses.foldRight(when(isTgt, lit("keep")).otherwise(lit("skip"))) {
+      (r, els) => when(r.pred, lit(r.id)).otherwise(els) }
+    // inserted rows draw row ids above the hwm
+    val hwm = props.get(identityPrefix + rowIdCol + ".hwm")
+      .flatMap(_.toLongOption).getOrElse(0L)
+    val withAct0 = joined.withColumn("__act", actCol)
+    val withAct1 =
+      if (!tracked) withAct0
+      else withAct0.withColumn("__rid", lit(hwm + 1) + monotonically_increasing_id())
+    // one persist rule: the write always reads this frame; the staged
+    // feed and the changed-rows gates (CHECK constraints, generated
+    // columns) read it again, and then it is materialized ONCE —
+    // O(candidate rows + source rows), never O(table) — which also pins
+    // the row ids identical between the staged feed and the committed
+    // data files. With no second reader a cache only adds Spark jobs.
+    val gated = props.keys.exists(k =>
+      k.startsWith(constraintPrefix) || k.startsWith(generatedPrefix))
+    val withAct =
+      if (changeFeed || gated)
+        withAct1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else withAct1
+    val deleteIds = clauses.filter(_.isDelete).map(_.id)
+    val writers = clauses.filterNot(_.isDelete)
+    val insertIds = iResolved.map(_.id)
+    val updateIds = writers.map(_.id).filterNot(insertIds.contains)
     val outCols: Seq[Column] = merged.fields.toSeq.map { f =>
-      updateResolved.filter(_.set.contains(f.name))
+      if (tracked && f.name == rowIdCol)
+        when(inIds(insertIds), col("__rid")).otherwise(col(f.name)).as(f.name)
+      else writers.filter(_.set.contains(f.name))
         .foldRight(col(f.name)) { (r, els) =>
           when(col("__act") === r.id, expr(r.set(f.name)).cast(f.dataType)).otherwise(els)
         }.as(f.name)
     }
-    val newTgtAct = withAct.where(!inIds(deleteIds))
-      .select(outCols :+ col("__act"): _*)
-    val newTgt = newTgtAct.drop("__act")
-    // ---- insert side: source rows matching no target key AT ALL
-    val iResolved = notMatched.zipWithIndex.map { case (c, i) =>
-      val cond = c.condition
-        .map(t => expr(mergeExprSql(spark, t, Nil, srcCols, allowSource = true)))
-        .getOrElse(lit(true))
-      val set0 = if (c.kind.endsWith("*")) starSet else c.set
-      val set = set0.map { case (k, e) =>
-        field(k).name -> mergeExprSql(spark, e, Nil, srcCols, allowSource = true) }
-      Resolved(s"i$i", isDelete = false, cond, set)
+    // DEFAULTs first (a generated column may derive from a defaulted
+    // one), then each generated column the applying clause left
+    // unassigned, computed from the new row
+    val out = gens.foldLeft(withDefaults(withAct.select(outCols :+ col("__act"): _*), props)) {
+      case (d, (g, e)) =>
+        val computed = writers.filterNot(_.set.contains(g)).map(_.id)
+        if (computed.isEmpty) d
+        else d.withColumn(g,
+          when(inIds(computed), expr(e).cast(field(g).dataType)).otherwise(col(g)))
     }
-    val genNames = prevDelta.props.keys
-      .filter(_.startsWith(generatedPrefix)).map(_.stripPrefix(generatedPrefix)).toSet
-    val insAssigned = iResolved.flatMap(_.set.keys).toSet
-    // consumed by the changed-rows gate, the feed's insert branch and
-    // the kept-rows write — same materialize-once reasoning (and the
-    // same row-id stability guarantee) as `withAct`; O(source rows).
-    val inserted: DataFrame = (
-      if (iResolved.isEmpty) conform(tgtM.limit(0), merged)
-      else {
-        // "matches no target key AT ALL": with MATCHED clauses present,
-        // the detection pass made every file holding a source-matched
-        // key a candidate, so the candidate rows — already materialized
-        // in the PERSISTED withAct frame — carry exactly the matchable
-        // keys, and the anti-join needs no O(table) re-read (r20).
-        // Without MATCHED clauses the candidate set is NMBS-only and
-        // proves nothing about key presence: keep the full-table scan.
-        val fullKeys =
-          (if (matched.nonEmpty) withAct else readVersion(spark, root, prev))
-            .select(keyCols.map(k => col(k).as(srcSidePrefix + k)): _*)
-        val unmatchedSrc = srcR.join(fullKeys, keyCols.map(srcSidePrefix + _), "left_anti")
-        val insAct = iResolved
-          .foldRight(lit("skip"): Column) { (r, els) => when(r.pred, lit(r.id)).otherwise(els) }
-        // generated columns nobody assigns are DEFERRED to withGenerated,
-        // which computes them from the built row (and validates the rest)
-        val insCols = merged.fields.toSeq
-          .filterNot(f => genNames.contains(f.name) && !insAssigned.contains(f.name))
-          .map { f =>
-            iResolved.filter(_.set.contains(f.name))
-              .foldRight(lit(null).cast(f.dataType): Column) { (r, els) =>
-                when(col("__act") === r.id, expr(r.set(f.name)).cast(f.dataType)).otherwise(els)
-              }.as(f.name)
-          }
-        val built0 = unmatchedSrc.withColumn("__act", insAct)
-          .where(col("__act") =!= "skip").select(insCols: _*)
-        // row tracking: INSERT clauses never assign the engine-managed
-        // `_row_id` — inserted rows draw fresh ids above the hwm
-        // (matched updates already preserve it: un-SET columns carry
-        // from the target row)
-        val built =
-          if (!rowTrackingOn(prevDelta.props) ||
-              !merged.fieldNames.contains(rowIdCol)) built0
-          else {
-            val hwm = prevDelta.props
-              .get(identityPrefix + rowIdCol + ".hwm")
-              .flatMap(_.toLongOption).getOrElse(0L)
-            built0.withColumn(rowIdCol, coalesce(col(rowIdCol),
-              lit(hwm + 1) + monotonically_increasing_id()))
-          }
-        conform(withGenerated(built, prevDelta.props), merged)
-      }
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // gates on CHANGED rows only (updated + inserted), O(changed) —
-    // run INSIDE the try below so the expected error path (a
-    // constraint-violating merge) still unpersists the materialized
-    // frames (r19 ADVICE)
-    val changed = newTgtAct.where(col("__act") =!= "keep").drop("__act")
-      .unionByName(inserted)
+    def rowsOf(df: DataFrame, which: Column): DataFrame =
+      df.where(which).select(tgtNames.map(col): _*)
     def commitPhase(): Long = {
       val cdfDir =
         if (!changeFeed) None
         else {
-          val updateIds = updateResolved.map(_.id)
-          val fieldsOnly = merged.fieldNames.toSeq.map(col)
-          val pre = withAct.where(inIds(updateIds)).select(fieldsOnly: _*)
-            .withColumn(ChangeFeed.opCol, lit("update_preimage"))
-          val post = newTgtAct.where(inIds(updateIds)).drop("__act")
-            .withColumn(ChangeFeed.opCol, lit("update_postimage"))
-          val dels = withAct.where(inIds(deleteIds)).select(fieldsOnly: _*)
-            .withColumn(ChangeFeed.opCol, lit("delete"))
-          val ins = inserted.withColumn(ChangeFeed.opCol, lit("insert"))
-          Some(stageChangeFeed(spark, qroot, v,
-            pre.unionByName(post).unionByName(dels).unionByName(ins)))
+          // old images (update pre-images, deletes) and new images
+          // (update post-images, inserts): one pass over each side
+          def images(df: DataFrame, ids: Seq[String], op: Column) =
+            df.where(inIds(ids)).select(tgtNames.map(col) :+ op.as(ChangeFeed.opCol): _*)
+          val before = images(withAct, updateIds ++ deleteIds,
+            when(inIds(deleteIds), lit("delete")).otherwise(lit("update_preimage")))
+          val after = images(out, updateIds ++ insertIds,
+            when(inIds(insertIds), lit("insert")).otherwise(lit("update_postimage")))
+          Some(stageChangeFeed(spark, qroot, v, before.unionByName(after)))
         }
-      val kept = newTgt.unionByName(inserted)
-      val (newFiles, stats) = writeCommitFiles(spark, root, v, kept, prevDelta.props, Some(merged))
-      // advance-only hwm patch for freshly-inserted row ids (see mergeCow)
+      val kept = rowsOf(out, !inIds(deleteIds :+ "skip"))
+      val (newFiles, stats) = writeCommitFiles(spark, root, v, kept, props, Some(merged))
+      // advance-only hwm patch for freshly-inserted row ids: an
+      // all-matched merge's stats max is the OLD ids' max (≤ hwm) —
+      // patching it would regress the hwm
       val idPatch =
-        if (!rowTrackingOn(prevDelta.props) ||
-            !merged.fieldNames.contains(rowIdCol)) Map.empty[String, String]
-        else {
-          val hwmKey = identityPrefix + rowIdCol + ".hwm"
-          val cur = prevDelta.props.get(hwmKey).flatMap(_.toLongOption).getOrElse(0L)
-          identityPatch(stats, Seq(rowIdCol -> 1L),
+        if (!tracked) Map.empty[String, String]
+        else identityPatch(stats, Seq(rowIdCol -> 1L),
             c => physicalMap(merged).getOrElse(c, c))
-            .filter(_._2.toLong > cur)
-        }
+          .filter(_._2.toLong > hwm)
       try commitRewrite(spark, root, v, Delta(newFiles, rewritten, txn = txn, cdf = cdfDir,
-        schema = Some(merged.json), props = prevDelta.props ++ idPatch, stats = stats,
+        schema = Some(merged.json), props = props ++ idPatch, stats = stats,
         op = Some("merge"), dv = prevDelta.dv))
       catch { case e: Throwable =>
         cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true)); throw e
       }
     }
     try {
-      checkConstraints(changed, prevDelta.props)
-      withGenerated(changed, prevDelta.props) // contradiction probe on present cols
+      // gates on CHANGED rows only (updated + inserted), O(changed) —
+      // inside the try so a refused merge still unpersists
+      val changed = rowsOf(out, !inIds(deleteIds :+ "skip" :+ "keep"))
+      checkConstraints(changed, props)
+      withGenerated(changed, props) // contradiction probe on assigned values
       commitPhase()
-    } finally {
-      withAct.unpersist(blocking = false)
-      inserted.unpersist(blocking = false)
-    }
+    } finally withAct.unpersist(blocking = false)
   }
 
   /** The change feed of versions (`fromV`, `toV`] — complete CDC over a
     * MIXED history, not just the commits that staged a feed:
     *
-    *   - a commit that published a feed (`mergeCow(changeFeed = true)`)
+    *   - a commit that published a feed (`changeFeed = true`)
     *     contributes it. Feed presence and location come from the
     *     COMMITTED delta header (`#cdf:`), never from `fs.exists` on a
     *     well-known path — an orphan directory staged by a failed commit

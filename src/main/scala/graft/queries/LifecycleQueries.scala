@@ -1501,7 +1501,7 @@ object LifecycleQueries {
     // merged into two identical snapshot tables — once via
     // `Snapshots.mergeCow`, once via `MERGE INTO … WHEN MATCHED THEN
     // UPDATE SET * WHEN NOT MATCHED THEN INSERT *` through SnapshotSql
-    // (Spark's parser → MergeIntoTable → mergeCow). The engine pins that
+    // (Spark's parser → MergeIntoTable → mergeClauses). The engine pins that
     // the two heads AND the two change feeds are multiset-identical
     // (one-pass signed-count diff), and the SQL-merged table is
     // hash-checked against DuckDB's relational merge recompute.

@@ -29,7 +29,7 @@ import graft.jobs.Snapshots
   *     `MERGE INTO` over a catalog table — resolved by then, so merge
   *     expression SIDES are known by exprId — become eager commands on
   *     the log's own DML paths (`deleteWhere` / `updateWhere` /
-  *     `mergeCow` / `mergeClauses`), the same commits, OCC semantics
+  *     `mergeClauses`), the same commits, OCC semantics
   *     and CHECK gating as the programmatic API and SnapshotSql.
   *   - `GraftDynamicOverwriteRule` (post-hoc resolution): Spark has no
   *     V1 fallback exec for `OverwritePartitionsDynamic`, so
@@ -252,11 +252,7 @@ case class GraftMergeCommand(
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(session: SparkSession): Seq[Row] = {
     val src = org.apache.spark.sql.classic.GraftSqlShim.ofRows(session, source)
-    val wholeRow = matched == Seq(Snapshots.MergeWhen.updateAll(None)) &&
-      notMatched == Seq(Snapshots.MergeWhen.insertAll(None)) &&
-      notMatchedBySource.isEmpty
-    if (wholeRow) Snapshots.mergeCow(session, root, src, keys)
-    else Snapshots.mergeClauses(session, root, src, keys,
+    Snapshots.mergeClauses(session, root, src, keys,
       matched, notMatched, notMatchedBySource)
     Nil
   }

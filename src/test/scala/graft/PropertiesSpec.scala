@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Clean
+import graft.jobs.{ChangeFeed, Snapshots, SnapshotSql}
 import graft.serve.Report
 
 /** Property tests (SURVEY.md §5): algebraic invariants checked over many
@@ -55,6 +57,60 @@ class PropertiesSpec extends AnyFunSuite {
       val got = merged.select("k", "v", "p").as[(String, Long, String)]
         .collect().map { case (k, v, p) => k -> (v, p) }.toMap
       assert(got == model, s"batch $i diverged (batch=$batchRows)")
+    }
+  }
+
+  test("snapshot MERGE: random batch sequences over three routes match an in-memory model, feeds replay") {
+    // the model check above over a snapshot table with the change feed
+    // on, alternating the whole-row API upsert, the SQL upsert and a
+    // conditional clause merge (delete / guarded update / guarded
+    // insert). After every commit the head equals the model, and the
+    // commit's feed replayed onto the previous head gives the new head.
+    val rnd = new scala.util.Random(23)
+    val root = java.nio.file.Files.createTempDirectory("merge-prop-snap").toFile.getAbsolutePath + "/t"
+    type Model = Map[Long, (Long, String)]
+    def randRows(n: Int): Model = // one row per key: MERGE refuses duplicate matches
+      Seq.fill(n)(rnd.nextInt(30).toLong -> ((rnd.nextInt(1000).toLong, s"p${rnd.nextInt(3)}"))).toMap
+    def frame(m: Model) = m.toSeq.map { case (k, (v, p)) => (k, v, p) }.toDF("k", "v", "p")
+    def rows(d: DataFrame) = d.select("k", "v", "p").as[(Long, Long, String)].collect().toSeq.sorted
+    def modelRows(m: Model) = m.toSeq.map { case (k, (v, p)) => (k, v, p) }.sorted
+    var model = randRows(12)
+    Snapshots.init(spark, root, frame(model).repartition(3))
+    (1 to 9).foreach { i =>
+      val batch = randRows(1 + rnd.nextInt(8))
+      val route = Seq("api", "sql", "clauses")(i % 3)
+      val v = route match {
+        case "api" =>
+          model ++= batch
+          Snapshots.mergeCow(spark, root, frame(batch), Seq("k"), changeFeed = true)
+        case "sql" =>
+          model ++= batch
+          frame(batch).createOrReplaceTempView("prop_merge_src")
+          SnapshotSql.sql(spark,
+            s"""MERGE INTO graft.`$root` t USING prop_merge_src s ON t.k = s.k
+               |WHEN MATCHED THEN UPDATE SET *
+               |WHEN NOT MATCHED THEN INSERT *""".stripMargin, changeFeed = true)
+        case "clauses" =>
+          batch.foreach { case (k, (bv, bp)) =>
+            model.get(k) match {
+              case Some(_) if bv % 5 == 0 => model -= k
+              case Some((old, _)) => if (bv >= old) model += k -> ((bv, bp))
+              case None => if (bv % 5 != 0) model += k -> ((bv, bp))
+            }
+          }
+          Snapshots.mergeClauses(spark, root, frame(batch), Seq("k"),
+            matched = Seq(
+              Snapshots.MergeWhen.delete(Some("s.v % 5 = 0")),
+              Snapshots.MergeWhen.update(Map("v" -> "s.v", "p" -> "s.p"), Some("s.v >= t.v"))),
+            notMatched = Seq(Snapshots.MergeWhen.insertAll(Some("s.v % 5 <> 0"))),
+            changeFeed = true)
+      }
+      assert(v == i.toLong, s"$route merge $i committed v$v")
+      val head = rows(Snapshots.readVersion(spark, root, v))
+      assert(head == modelRows(model), s"$route merge $i diverged from the model (batch=$batch)")
+      val replayed = ChangeFeed.applyChangeFeed(Snapshots.readVersion(spark, root, v - 1)
+        .select("k", "v", "p"), Snapshots.changesBetween(spark, root, v - 1, v), Seq("k"))
+      assert(rows(replayed) == head, s"$route merge $i: feed replay diverged from the head")
     }
   }
 

@@ -5,13 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 /** Clause-level MERGE (`Snapshots.mergeClauses` + the SnapshotSql route):
   * conditional WHEN MATCHED UPDATE/DELETE, column-level SET, conditional
   * INSERT with column lists, and WHEN NOT MATCHED BY SOURCE — verified
-  * against straight relational recomputation, plus the change feed and
-  * the file-grain rewrite contract. */
+  * against straight relational recomputation, plus the change feed, the
+  * file-grain rewrite contract, the star actions' whole-row meaning and
+  * the Spark jobs one merge submits. */
 class MergeClausesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -226,5 +227,93 @@ class MergeClausesSpec extends AnyFunSuite {
       Snapshots.mergeClauses(spark, root, Seq((1L, 1.0)).toDF("k", "v"), Seq("k"),
         matched = Seq(Snapshots.MergeWhen.update(Map("nope" -> "1"))))
     }
+  }
+
+  test("UPDATE SET * means one thing: mergeCow, the SQL upsert and a conditional star clause agree") {
+    // a source lacking a table column (tag) on a table whose generated
+    // column (v2) depends on the updated column (v)
+    def table(): String = {
+      val root = tmp()
+      Snapshots.init(spark, root,
+        (1L to 40L).map(i => (i, i * 1.0, s"t$i")).toDF("k", "v", "tag").repartition(2),
+        Map("graft.generated.v2" -> "v * 2"))
+      root
+    }
+    val src = ((5L to 20L).map(k => (k, -k * 1.0)) ++ (41L to 45L).map(k => (k, k * 1.0)))
+      .toDF("k", "v")
+    src.createOrReplaceTempView("mrgc_star_src")
+    val (rootCow, rootSql, rootCond) = (table(), table(), table())
+    Snapshots.mergeCow(spark, rootCow, src, Seq("k"), changeFeed = true)
+    SnapshotSql.sql(spark,
+      s"""MERGE INTO graft.`$rootSql` t USING mrgc_star_src s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin, changeFeed = true)
+    SnapshotSql.sql(spark,
+      s"""MERGE INTO graft.`$rootCond` t USING mrgc_star_src s ON t.k = s.k
+         |WHEN MATCHED AND true THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin, changeFeed = true)
+    def head(root: String) = Snapshots.readVersion(spark, root)
+      .select("k", "v", "tag", "v2").orderBy("k")
+      .as[(Long, Double, Option[String], Double)].collect().toSeq
+    def feed(root: String) = Snapshots.changesBetween(spark, root, 0, 1)
+      .select("k", "v", "tag", "v2", ChangeFeed.opCol).orderBy("k", ChangeFeed.opCol)
+      .as[(Long, Double, Option[String], Double, String)].collect().toSeq
+    val expect = (1L to 45L).map { k =>
+      if (k >= 5L && k <= 20L) (k, -k * 1.0, None, -k * 2.0)
+      else if (k > 40L) (k, k * 1.0, None, k * 2.0)
+      else (k, k * 1.0, Some(s"t$k"), k * 2.0)
+    }
+    assert(head(rootCow) == expect,
+      "whole-row upsert: missing column null-filled, generated column recomputed")
+    assert(head(rootSql) == expect && head(rootCond) == expect)
+    assert(feed(rootSql) == feed(rootCow) && feed(rootCond) == feed(rootCow),
+      "the three routes publish identical feeds")
+    assert(feed(rootCow).count(_._5 == "update_postimage") == 16)
+  }
+
+  test("NOT MATCHED BY SOURCE detection returns only candidate files to the driver") {
+    val root = tmp()
+    Snapshots.init(spark, root,
+      (1L to 2000L).map(i => (i, i * 1.0)).toDF("k", "v")
+        .repartitionByRange(20, col("k")).sortWithinPartitions("k"))
+    val before = Snapshots.versionFiles(spark, root).toSet
+    assert(before.size == 20)
+    val (_, events) = SparkEvents.record(spark) {
+      Snapshots.mergeClauses(spark, root, Seq((10L, 0.0)).toDF("k", "v"), Seq("k"),
+        notMatchedBySource = Seq(
+          Snapshots.MergeWhen.update(Map("v" -> "-t.v"), Some("t.k > 1950"))))
+    }
+    val rewritten = before -- Snapshots.versionFiles(spark, root).toSet
+    assert(rewritten.size == 1, s"the clause touches one file: $rewritten")
+    assert(events.collectedRows <= rewritten.size,
+      s"collected ${events.collectedRows} rows for ${rewritten.size} candidate file(s)")
+    assert(Snapshots.readVersion(spark, root).where(col("v") < 0).count() == 50)
+  }
+
+  test("one merge's Spark jobs: the whole-row upsert and the column-level merge stay pinned") {
+    // 3,000 rows in 6 range files; 86 matched keys and 50 new ones
+    def table(): String = {
+      val root = tmp()
+      Snapshots.init(spark, root,
+        (1L to 3000L).map(i => (i, i * 1.0, s"s$i")).toDF("k", "v", "s")
+          .repartitionByRange(6, col("k")).sortWithinPartitions("k"))
+      root
+    }
+    def src() = ((1L to 600L by 7L).map(k => (k, -k * 1.0, s"u$k")) ++
+      (3001L to 3050L).map(k => (k, k * 1.0, s"n$k"))).toDF("k", "v", "s")
+    def jobs(merge: String => Long): Int = {
+      val root = table()
+      val (_, events) = SparkEvents.record(spark)(merge(root))
+      assert(Snapshots.readVersion(spark, root).count() == 3050L)
+      events.jobs
+    }
+    val cow = jobs(r => Snapshots.mergeCow(spark, r, src(), Seq("k")))
+    val cowFeed = jobs(r => Snapshots.mergeCow(spark, r, src(), Seq("k"), changeFeed = true))
+    val colFeed = jobs(r => Snapshots.mergeClauses(spark, r, src(), Seq("k"),
+      matched = Seq(Snapshots.MergeWhen.update(Map("v" -> "s.v"))),
+      notMatched = Seq(Snapshots.MergeWhen.insertAll()), changeFeed = true))
+    assert(cow <= 9, s"whole-row upsert without a feed submitted $cow jobs")
+    assert(cowFeed <= 14, s"whole-row upsert with a feed submitted $cowFeed jobs")
+    assert(colFeed <= 14, s"column-level merge with a feed submitted $colFeed jobs")
   }
 }

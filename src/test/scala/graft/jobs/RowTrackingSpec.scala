@@ -129,6 +129,33 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(afterC.values.toSet.size == 125, "no collisions after both merges")
   }
 
+  test("MERGE never takes _row_id from the source: a re-read of the table with shifted keys") {
+    val root = tmp()
+    Snapshots.init(spark, root,
+      (1L to 100L).map(i => (i, i * 1.0)).toDF("k", "v"), trackProps)
+    val before = idsByKey(root)
+    val hwm0 = Snapshots.tableProperties(spark, root)("graft.identity._row_id.hwm").toLong
+    // the source carries the table's own ids on other keys: k 51..100
+    // match (update), k 101..150 are new (insert)
+    val src = Snapshots.readVersion(spark, root)
+      .withColumn("k", col("k") + 50L).withColumn("v", -col("v"))
+    assert(src.columns.contains("_row_id"))
+    Snapshots.mergeClauses(spark, root, src, Seq("k"),
+      matched = Seq(Snapshots.MergeWhen.updateAll()),
+      notMatched = Seq(Snapshots.MergeWhen.insertAll()))
+    val after = idsByKey(root)
+    val distinct = after.values.toSet.size
+    assert(after.size == 150 && distinct == 150, s"every id distinct: $distinct of ${after.size}")
+    (1L to 100L).foreach(k => assert(after(k) == before(k), s"row $k kept its own id"))
+    (101L to 150L).foreach(k => assert(after(k) > hwm0, s"inserted row $k drew an id above the hwm"))
+    assert(Snapshots.readVersion(spark, root).where(col("k") === 60L)
+      .select(col("v")).as[Double].head() == -10.0, "the matched row took the source values")
+    // a clause cannot assign the engine-managed column either
+    intercept[IllegalArgumentException](Snapshots.mergeClauses(spark, root,
+      Seq((1L, 1.0)).toDF("k", "v"), Seq("k"),
+      matched = Seq(Snapshots.MergeWhen.update(Map("_row_id" -> "0")))))
+  }
+
   test("overwrite keeps the column and never reuses ids") {
     val root = tmp()
     Snapshots.init(spark, root,
