@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetDriverReader
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-provided synthetic star schema
   * (`/root/repo/TESTDATA.md`). One parquet file per table under the
@@ -27,17 +29,19 @@ object Tables {
     } catch { case _: Throwable => () }
 
   /** Inferred schema per (immutable) testdata file, memoized for the
-    * process lifetime: parquet schema inference is a footer-read pass
-    * (Spark runs it as a job) that every `spark.read.parquet` repeats —
+    * process lifetime: parquet schema inference is a footer read (Spark
+    * runs it as a job; `parquet` below reads it on the driver) that every
+    * `spark.read.parquet` repeats —
     * a pure fixed cost when the same static table is read hundreds of
     * times per bench/verify run, and equally wasted work on a static
     * 100 TB table. The memo stores only the schema (metadata), never
-    * rows; the first read still infers under the timestamp-compat confs
-    * so the cached value is exactly what inference would return.
+    * rows; the first read still reads the footer under the
+    * timestamp-compat confs so the cached value is exactly what inference
+    * would return.
     * One entry per path, stamped with the file's (mtime, length): a
     * stamp mismatch re-infers and replaces only that path's entry. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
+    String, ((Long, Long), StructType)]()
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureTimestampCompat(spark)
@@ -52,15 +56,24 @@ object Tables {
     val stamp = (st.getModificationTime, st.getLen)
     val (_, schema) = schemaCache.compute(path, (_, old) =>
       if (old != null && old._1 == stamp) old
-      else (stamp, spark.read.parquet(path).schema))
+      else (stamp, parquet(spark, path).schema))
     spark.read.schema(schema).parquet(path)
   }
+
+  /** `spark.read.parquet(path)`, with the schema taken from the footer on
+    * the driver (`GraftParquetDriverReader.schema`) instead of Spark's
+    * inference job, under the same confs (`ensureTimestampCompat`'s
+    * included). Directories of partition subdirectories, missing paths and
+    * the like keep Spark's own inference, and its errors. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftParquetDriverReader.schema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** S13 missing-input tolerance: the reference's skip-missing contract
     * (`/root/reference/scripts/02_spark_etl.py:80-86` — catch
     * AnalysisException, warn, continue with the next month). */
   def readOptional(spark: SparkSession, path: String): Option[DataFrame] =
-    try { ensureTimestampCompat(spark); Some(spark.read.parquet(path)) }
+    try { ensureTimestampCompat(spark); Some(parquet(spark, path)) }
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         org.slf4j.LoggerFactory.getLogger(getClass)

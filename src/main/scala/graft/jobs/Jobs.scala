@@ -6,6 +6,13 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+import org.apache.spark.sql.classic.GraftSqlShim
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.csv.{CSVFileFormat, GraftCsvDriverReader}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetDriverReader, ParquetFileFormat}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Clean, Features, Outliers}
@@ -28,8 +35,13 @@ import graft.marts.Marts
   *     100 TB is 11 full-table scans. Only the marts' own rows reach the
   *     driver (the top-k cut runs in the plan), so driver memory is
   *     O(mart output), and each mart is written there as one parquet file;
-  *   - `coalesce(1)` single-file sinks are presentation-layer only (small
-  *     mart outputs), never applied to data-scale frames.
+  *   - the dashboard tier runs on the driver: `exportCsv` brings its
+  *     input's rows to the driver and writes the one CSV file there, and
+  *     `readCsv` parses one small file there into a local frame. Both are
+  *     presentation-layer only (mart outputs of at most a few hundred
+  *     rows), never applied to data-scale frames: an export holds its
+  *     whole input in driver memory, and a read above `DriverCsvBytes`
+  *     (or of several files) is Spark's distributed reader.
   */
 object Jobs {
 
@@ -187,18 +199,73 @@ object Jobs {
   }
 
   /** S5: single-file CSV with header (dashboard export,
-    * `/root/reference/scripts/06_export_for_dashboard.py:111-116`). */
+    * `/root/reference/scripts/06_export_for_dashboard.py:111-116`), written
+    * on the driver by Spark's own CSV writer with the options a Spark write
+    * uses (`header`, the session time zone), so `out` holds byte for byte
+    * what `df.coalesce(1).write.option("header", "true").csv(out)` leaves:
+    * one `part-00000-<uuid>-c000.csv` plus `_SUCCESS`, published by one
+    * rename. A bare parquet scan of one file is read on the driver with no
+    * job; any other frame is collected from one partition. Presentation-
+    * layer only (scale notes above). */
   def exportCsv(df: DataFrame, out: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(out)
+    Sinks.writeDriverFile(df.sparkSession, new CSVFileFormat(), Map("header" -> "true"),
+      df.schema, driverRows(df).iterator, out)
+
+  /** `df`'s rows on the driver, in the order a `coalesce(1)` write of `df`
+    * writes them. A bare parquet scan — no operator, no partition column,
+    * no option but its path — of ONE data file is read by
+    * `GraftParquetDriverReader` (no job) when the footer's schema is the
+    * frame's. Any other frame is gathered into one partition, as that
+    * write ran it, and collected; a final global sort runs inside that
+    * partition instead of behind a range exchange and its sampling job. */
+  private def driverRows(df: DataFrame): Seq[InternalRow] = {
+    val analyzed = df.queryExecution.analyzed
+    val scanned = analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.fileFormat.getClass == classOf[ParquetFileFormat] && fs.partitionSchema.isEmpty &&
+            fs.bucketSpec.isEmpty && fs.options.keySet.forall(_.equalsIgnoreCase("path")) =>
+        fs.location match {
+          case index: InMemoryFileIndex => index.allFiles() match {
+            case Seq(file) =>
+              val (schema, rows) = GraftParquetDriverReader.read(df.sparkSession, file.getPath.toString)
+              Some(rows).filter(_ => schema == df.schema)
+            case _ => None
+          }
+          case _ => None
+        }
+      case _ => None
+    }
+    scanned.getOrElse {
+      val gathered = analyzed match {
+        case Sort(order, true, child, hint) =>
+          Sort(order, global = false, Repartition(1, shuffle = false, child), hint)
+        case plan => Repartition(1, shuffle = false, plan)
+      }
+      val qe = GraftSqlShim.ofRows(df.sparkSession, gathered).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect().toSeq)
+    }
+  }
 
   /** S6: single-file JSON record sink
     * (`/root/reference/scripts/04_train_sparkml.py:149-151`). */
   def exportJson(df: DataFrame, out: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).json(out)
 
-  /** S2/S12-style readers for the exported artifacts. */
+  /** Files up to this size are read by `readCsv` on the driver. A dashboard
+    * export is a few KB; Spark's own inference reads a file this small as
+    * one split, so one fold over its lines infers what Spark infers. */
+  val DriverCsvBytes: Long = 1L << 20
+
+  /** S2/S12-style readers for the exported artifacts. `readCsv` of one
+    * headered CSV file of at most `DriverCsvBytes` (alone in its directory
+    * beside hidden and marker files) parses it on the driver with Spark's
+    * own schema inference and parser (`GraftCsvDriverReader`, no job): a
+    * one-partition local frame with exactly the schema and rows Spark's
+    * reader gives, so a report aggregate over it needs no shuffle. Any
+    * other path is read by Spark. */
   def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    GraftCsvDriverReader.read(spark, path, DriverCsvBytes).fold(
+      spark.read.option("header", "true").option("inferSchema", "true").csv(path))(_.coalesce(1))
   def readJson(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
 }

@@ -2,8 +2,10 @@ package graft.jobs
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.execution.datasources.parquet.GraftParquetDriverWriter
+import org.apache.spark.sql.execution.datasources.{FileFormat, GraftDriverWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -64,19 +66,28 @@ object Sinks {
   }
 
   /** Overwrite `out` with `rows` (already on the driver, and few — the
-    * caller bounds them) as ONE parquet file written on the driver by
-    * Spark's own `OutputWriter`: no job, no task, no commit protocol. The
-    * file and a `_SUCCESS` marker are written into a hidden sibling
-    * directory that a rename then publishes, so `out` holds what a
-    * one-task `df.write.mode(Overwrite).parquet(out)` leaves. */
+    * caller bounds them) as ONE parquet file written on the driver
+    * (`writeDriverFile`). */
   def writeDriverParquet(spark: SparkSession, schema: StructType, rows: Seq[Row], out: String): Unit = {
+    val toRow = ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
+    writeDriverFile(spark, new ParquetFileFormat(), Map.empty, schema, rows.iterator.map(toRow), out)
+  }
+
+  /** Overwrite `out` with `rows` (already on the driver, and few — the
+    * caller bounds them) as ONE file of `format`, written on the driver by
+    * Spark's own `OutputWriter` with the data source `options`: no job, no
+    * task, no commit protocol. The file (`part-00000-<uuid>-c000` plus the
+    * format's extension) and a `_SUCCESS` marker are written into a hidden
+    * sibling directory that a rename then publishes, so `out` holds what a
+    * one-task `df.write.mode(Overwrite)` leaves. */
+  def writeDriverFile(spark: SparkSession, format: FileFormat, options: Map[String, String],
+                      schema: StructType, rows: Iterator[InternalRow], out: String): Unit = {
     val dest = new Path(out)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dest.getParent, s"_tmp-${dest.getName}-${java.util.UUID.randomUUID}")
     fs.mkdirs(tmp)
     try {
-      val toRow = ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
-      GraftParquetDriverWriter.writeFile(spark, schema, rows.iterator.map(toRow), tmp.toString,
+      GraftDriverWriter.writeFile(spark, format, options, schema, rows, tmp.toString,
         s"part-00000-${java.util.UUID.randomUUID}-c000")
       fs.create(new Path(tmp, "_SUCCESS")).close()
       fs.delete(dest, true)

@@ -2021,10 +2021,10 @@ object Snapshots {
           val rows = fileRows ++ copiedIds.get.map(headerRowOf("copied", _)) ++
             headerRowsOf(aggr, liveN)
           fs.mkdirs(tmp)
-          org.apache.spark.sql.execution.datasources.parquet
-            .GraftParquetDriverWriter.writeFile(
-              spark, ckptEnc.schema, rows.iterator.map(toRow), tmp.toString,
-              f"part-00000-${java.util.UUID.randomUUID.toString}")
+          org.apache.spark.sql.execution.datasources.GraftDriverWriter.writeFile(
+            spark, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+            Map.empty, ckptEnc.schema, rows.iterator.map(toRow), tmp.toString,
+            f"part-00000-${java.util.UUID.randomUUID.toString}")
         } else {
           // JOB 2 — headers + sidecar refs/tombs + copied identities into
           // the `_headers/` SIDE DIRECTORY (hidden from the main parquet

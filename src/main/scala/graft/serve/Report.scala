@@ -1,6 +1,7 @@
 package graft.serve
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,7 +14,11 @@ import org.apache.spark.sql.functions._
   * safe over raw data too — weighted re-aggregation is a plain hash aggregate;
   * the cumulative-share window is partitioned when a partition key exists;
   * percentage-of-total uses a scalar-aggregate broadcast join rather than an
-  * unpartitioned window over the full data.
+  * unpartitioned window over the full data. One rule tells small from big:
+  * an input whose every leaf is a local relation (its rows are already on
+  * the driver, as in `Jobs.readCsv`'s frames) is small. Over such an input
+  * the global cumulative share runs as one range in one partition, with no
+  * range sample, checkpoint or offset join.
   */
 object Report {
 
@@ -91,38 +96,47 @@ object Report {
       // counts): equal order keys land in one range, so tie handling
       // matches the old single-partition sort, and long addition is
       // associative. (A double metric would see benign reassociation.)
-      // The windowed frame is checkpointed — ONE RDD behind ONE range
-      // exchange — and the per-range totals are taken from it: range
-      // bounds come from a sampling pass seeded per RDD, so two
-      // independently planned range exchanges may cut different ranges,
-      // and `spark_partition_id()` would then disagree between the rows
-      // and their totals whenever the exchange is not reused
-      // (spark.sql.exchange.reuse=false). The input is also read once
-      // instead of three times. Lazy: no extra count job.
-      val local = df.repartitionByRange(col(orderKey))
-        .withColumn("__part", spark_partition_id())
+      // A local input (its rows already on the driver) is ONE range: one
+      // partition, its offset 0 and its total the partition's sum.
+      val isLocal = df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+      val ranged = if (isLocal) df.coalesce(1) else df.repartitionByRange(col(orderKey))
+      val byPart = Window.partitionBy(col("__part"))
+      val windowed = ranged.withColumn("__part", spark_partition_id())
         .withColumn("cum0",
-          sum(col(metric)).over(Window.partitionBy(col("__part"))
-            .orderBy(col(orderKey))
+          sum(col(metric)).over(byPart.orderBy(col(orderKey))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .localCheckpoint(eager = false)
-      // per-range totals (≤ shuffle-partition-count rows); the prefix
-      // offsets come from a triangular self-join — O(ranges²) pairs of a
-      // config-bounded frame, and NO window at all, so nothing in this
-      // plan ever logs the single-partition WindowExec warning
-      val ptots = local.groupBy(col("__part"))
-        .agg(sum(col(metric)).as("__ptot"))
-      val offsets = ptots.as("a")
-        .join(ptots.select(col("__part").as("__bp"), col("__ptot").as("__bt")),
-          col("__bp") < col("__part"), "left")
-        .groupBy(col("__part"), col("__ptot"))
-        .agg(coalesce(sum(col("__bt")), lit(0L)).as("__off"))
-      val total = ptots.agg(sum(col("__ptot")).as("__total"))
-      local.join(broadcast(offsets.select(col("__part"), col("__off"))), Seq("__part"))
-        .withColumn("cum", col("cum0") + col("__off"))
-        .crossJoin(broadcast(total))
-        .withColumn("cum_pct", col("cum") * lit(100.0) / col("__total"))
-        .drop("__part", "cum0", "__off", "__total")
+      if (isLocal)
+        windowed.withColumnRenamed("cum0", "cum")
+          .withColumn("cum_pct", col("cum") * lit(100.0) / sum(col(metric)).over(byPart))
+          .drop("__part")
+      else {
+        // The windowed frame is checkpointed — ONE RDD behind ONE range
+        // exchange — and the per-range totals are taken from it: range
+        // bounds come from a sampling pass seeded per RDD, so two
+        // independently planned range exchanges may cut different ranges,
+        // and `spark_partition_id()` would then disagree between the rows
+        // and their totals whenever the exchange is not reused
+        // (spark.sql.exchange.reuse=false). The input is also read once
+        // instead of three times. Lazy: no extra count job.
+        val local = windowed.localCheckpoint(eager = false)
+        // per-range totals (≤ shuffle-partition-count rows); the prefix
+        // offsets come from a triangular self-join — O(ranges²) pairs of a
+        // config-bounded frame, and NO window at all, so nothing in this
+        // plan ever logs the single-partition WindowExec warning
+        val ptots = local.groupBy(col("__part"))
+          .agg(sum(col(metric)).as("__ptot"))
+        val offsets = ptots.as("a")
+          .join(ptots.select(col("__part").as("__bp"), col("__ptot").as("__bt")),
+            col("__bp") < col("__part"), "left")
+          .groupBy(col("__part"), col("__ptot"))
+          .agg(coalesce(sum(col("__bt")), lit(0L)).as("__off"))
+        val total = ptots.agg(sum(col("__ptot")).as("__total"))
+        local.join(broadcast(offsets.select(col("__part"), col("__off"))), Seq("__part"))
+          .withColumn("cum", col("cum0") + col("__off"))
+          .crossJoin(broadcast(total))
+          .withColumn("cum_pct", col("cum") * lit(100.0) / col("__total"))
+          .drop("__part", "cum0", "__off", "__total")
+      }
     }
   }
 

@@ -2,12 +2,13 @@ package org.apache.spark.sql.execution.datasources.parquet
 
 import java.io.FileNotFoundException
 
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.input.FileSplit
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.{Footer, ParquetRecordReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -16,42 +17,8 @@ import org.apache.spark.sql.execution.datasources.{DataSourceUtils, RecordReader
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-/** Driver-side single-file parquet writer for SMALL, already-driver-
-  * resident row sets (bounded by the caller — the checkpoint writer's
-  * `inlineBelow` threshold). Uses the exact `OutputWriter` Spark's own
-  * write tasks use: `ParquetFileFormat.prepareWrite` stamps every conf
-  * the `ParquetWriteSupport` contract needs (schema, legacy format,
-  * timestamp type, rebase modes, field ids) onto the job, so nothing is
-  * hand-guessed and the produced file is byte-compatible with a 1-task
-  * Spark write — minus the job: no scheduler round-trip, no task
-  * launch, no commit protocol. Same extension-shim pattern as
-  * `GraftSqlShim`. */
-object GraftParquetDriverWriter {
-
-  /** Write `rows` (InternalRows in `schema`'s layout) as ONE parquet
-    * file at `file` (a full path; the caller owns directory naming and
-    * the publish rename). Returns the written file's extension-complete
-    * path. */
-  def writeFile(
-      spark: SparkSession, schema: StructType,
-      rows: Iterator[InternalRow], dir: String, baseName: String): String = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val job = Job.getInstance(ss.sessionState.newHadoopConf())
-    val factory = new ParquetFileFormat()
-      .prepareWrite(ss, job, Map.empty, schema)
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft-driver-pq", 0), TaskType.MAP, 0), 0)
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration, attempt)
-    val path = s"$dir/$baseName${factory.getFileExtension(ctx)}"
-    val w = factory.newInstance(path, schema, ctx)
-    try rows.foreach(w.write)
-    finally w.close()
-    path
-  }
-}
-
 /** Driver-side parquet reader for SMALL files, the counterpart of
-  * `GraftParquetDriverWriter`: the schema comes from the footer as
+  * `GraftDriverWriter`: the schema comes from the footer as
   * Spark's schema inference reads it (`ParquetFileFormat.readSchemaFromFooter`),
   * and every row is decoded by the record reader Spark's own row-based
   * scan uses (`ParquetReadSupport` over parquet-mr's `ParquetRecordReader`),
@@ -72,17 +39,11 @@ object GraftParquetDriverReader {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val status = fs.getFileStatus(root)
-    val files =
-      if (status.isFile) Seq(status)
-      else fs.listStatus(root).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
+    val files = if (status.isFile) Seq(status) else dataFiles(fs.listStatus(root).toSeq)
     if (files.isEmpty) throw new FileNotFoundException(s"no parquet data file under $path")
     val footers = files.map(f =>
       f -> ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), NO_FILTER))
-    // nullable throughout, as a file source reports it
-    val schema = ParquetFileFormat.readSchemaFromFooter(
-      new Footer(files.head.getPath, footers.head._2), new ParquetToSparkSchemaConverter(sqlConf)).asNullable
+    val schema = footerSchema(files.head, footers.head._2, sqlConf)
     // the keys `ParquetFileFormat` sets on a scan's conf: the read support
     // rebuilds its schema converter from them
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
@@ -119,6 +80,41 @@ object GraftParquetDriverReader {
     }
     (schema, rows.toIndexedSeq)
   }
+
+  /** The schema Spark's inference gives the parquet data at `path`, read
+    * on the driver with no job: the footer of the file, or of a
+    * directory's first data file in name order (without schema merging,
+    * Spark's inference also reads one data file's footer). None where
+    * Spark's own inference has to decide: a missing path, a directory
+    * without a data file or with a subdirectory (partition directories),
+    * and a session that merges schemas. */
+  def schema(spark: SparkSession, path: String): Option[StructType] = {
+    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sqlConf = ss.sessionState.conf
+    val conf = ss.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val first =
+      if (sqlConf.isParquetSchemaMergingEnabled || !fs.exists(root)) None
+      else {
+        val status = fs.getFileStatus(root)
+        val children = if (status.isFile) Seq(status) else fs.listStatus(root).toSeq
+        if (children.exists(c => c.isDirectory && !hidden(c))) None else dataFiles(children).headOption
+      }
+    first.map(f => footerSchema(f,
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS), sqlConf))
+  }
+
+  private def hidden(f: FileStatus): Boolean =
+    f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith(".")
+
+  private def dataFiles(children: Seq[FileStatus]): Seq[FileStatus] =
+    children.filter(f => f.isFile && !hidden(f)).sortBy(_.getPath.getName)
+
+  // nullable throughout, as a file source reports it
+  private def footerSchema(file: FileStatus, footer: ParquetMetadata, sqlConf: SQLConf): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf)).asNullable
 
   /** `read`, decoded into external rows (carrying the schema) by Spark's
     * interpreted Catalyst-to-Scala converters: no code generation, which

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 /** Pins the engine's timestamp-read contract after the 2026-08-13 testdata
   * regen: the parquet files store `timestamp[us]` isAdjustedToUTC=false,
@@ -64,5 +64,54 @@ class TablesSpec extends AnyFunSuite {
     val again = Tables.read(spark, dir.toString, "t")
     assert(again.schema.fieldNames.toSeq == Seq("a", "b"))
     assert(again.orderBy("a").as[(Long, String)].collect().toSeq == Seq((1L, "x"), (2L, "y")))
+  }
+
+  test("readOptional and a memo miss take the schema from the footer: no Spark job, Spark's schema") {
+    import spark.implicits._
+    Tables.ensureTimestampCompat(spark)
+    val tables = Seq("lineitem", "orders", "customer", "supplier", "part", "nation", "region",
+      "events", "documents", "embeddings")
+    tables.foreach { t =>
+      val path = s"${TestSpark.sfDir}/$t.parquet"
+      val (df, events) = SparkEvents.record(spark)(Tables.readOptional(spark, path).get)
+      assert(events.jobs == 0, s"$t: ${events.jobs} Spark jobs")
+      assert(df.schema == spark.read.parquet(path).schema, t)
+    }
+    // an INT64 TIMESTAMP(NANOS) column, which Spark reads only as raw
+    // nanos (the legacy conf `ensureTimestampCompat` sets): the footer's
+    // schema says so too
+    val nanos = java.nio.file.Files.createTempDirectory("tables-nanos").resolve("e.parquet").toString
+    val nanosSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message e { required int64 id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(nanos)).withType(nanosSchema).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(nanosSchema)
+      .newGroup().append("id", 1L).append("ts", 1700000000123456789L))
+    finally writer.close()
+    val (n, nanosEvents) = SparkEvents.record(spark)(Tables.readOptional(spark, nanos).get)
+    assert(nanosEvents.jobs == 0)
+    assert(n.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(n.schema == spark.read.parquet(nanos).schema)
+    assert(n.as[(Long, Long)].collect().toSeq == Seq((1L, 1700000000123456789L)))
+    // a memo miss: a file the memo has not seen
+    val dir = java.nio.file.Files.createTempDirectory("tables-miss")
+    val staged = dir.resolve("staged").toString
+    Seq((1L, "x")).toDF("a", "b").coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, dir.resolve("t.parquet"))
+    val (t, missEvents) = SparkEvents.record(spark)(Tables.read(spark, dir.toString, "t"))
+    assert(missEvents.jobs == 0, s"${missEvents.jobs} Spark jobs")
+    assert(t.as[(Long, String)].collect().toSeq == Seq((1L, "x")))
+    // a directory of part files (a curated month) reads its first footer;
+    // one of partition subdirectories keeps Spark's partition inference
+    val flat = dir.resolve("flat").toString
+    Seq((1L, 2.5), (2L, 3.5)).toDF("a", "b").repartition(2).write.parquet(flat)
+    val (f, flatEvents) = SparkEvents.record(spark)(Tables.readOptional(spark, flat).get)
+    assert(flatEvents.jobs == 0 && f.schema == spark.read.parquet(flat).schema && f.count() == 2)
+    val parted = dir.resolve("parted").toString
+    Seq((1, "a"), (2, "b")).toDF("v", "p").write.partitionBy("p").parquet(parted)
+    val p = Tables.readOptional(spark, parted).get
+    assert(p.schema == spark.read.parquet(parted).schema && p.columns.contains("p"))
+    assert(Tables.readOptional(spark, dir.resolve("missing").toString).isEmpty)
   }
 }

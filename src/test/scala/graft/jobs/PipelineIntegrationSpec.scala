@@ -2,6 +2,7 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,11 +50,48 @@ class PipelineIntegrationSpec extends AnyFunSuite {
       s"collected ${events.collectedRows} rows for $martRows mart rows")
     assert(m("top_origen").count() == math.min(20L, curatedBack.select("pu_location").distinct().count()))
 
-    // export the KPI mart to single-file CSV and re-read it (serve path)
-    val csvOut = Files.createTempDirectory("pipe-csv").toString + "/kpis"
-    Jobs.exportCsv(spark.read.parquet(s"$martsOut/kpis"), csvOut)
-    val kpis = Jobs.readCsv(spark, csvOut)
+    // the dashboard tier, as perfbench's `tlc_batch` runs it: every mart
+    // and the per-hour errors exported to single-file CSV, each read back
+    // into one report aggregate
+    val exportDir = Files.createTempDirectory("pipe-csv").toString
+    m.keys.toSeq.sorted.foreach { name =>
+      // the mart's own schema job, and none for the export
+      val (_, ev) = SparkEvents.record(spark)(
+        Jobs.exportCsv(spark.read.parquet(s"$martsOut/$name"), s"$exportDir/$name"))
+      assert(ev.jobs <= 1, s"export of $name ran ${ev.jobs} Spark jobs")
+    }
+    val predOut = Files.createTempDirectory("pipe-pred").toString + "/pred"
+    curatedBack.withColumn("prediction", col("trip_duration_min") * 0.9 + 0.5)
+      .write.partitionBy("year", "month").parquet(predOut)
+    // the predictions' schema job and the per-hour aggregate's collect
+    val (_, errEvents) = SparkEvents.record(spark)(
+      Jobs.errorsFromPredictions(spark.read.parquet(predOut)).foreach(Jobs.exportCsv(_, s"$exportDir/errores_hora")))
+    assert(errEvents.jobs <= 3, s"export of errores_hora ran ${errEvents.jobs} Spark jobs")
+    val kpis = Jobs.readCsv(spark, s"$exportDir/kpis")
     assert(kpis.head.getAs[Any]("total_viajes").toString.toLong == curatedBack.count())
+
+    val avgs = Seq("duracion_promedio_min" -> "duracion", "tarifa_promedio" -> "tarifa")
+    // (report, the Spark jobs it may run over `Jobs.readCsv` frames, read included)
+    val reports: Seq[((String => DataFrame) => DataFrame, Int)] = Seq(
+      ((csv: String => DataFrame) => Report.weightedRollup(
+        csv("variabilidad_hora").withColumn("franja", floor(col("pickup_hour") / 6)),
+        Seq("franja"), avgs, "total_viajes"), 1),
+      ((csv: String => DataFrame) => Report.weightedRollup(csv("variabilidad_dia"), Nil, avgs, "total_viajes"), 1),
+      ((csv: String => DataFrame) => Report.weightedRollup(csv("distancia_bins"), Nil, avgs.take(1), "total_viajes"), 1),
+      ((csv: String => DataFrame) => Report.cumulativeShare(csv("viajes_por_hora_dia"), "pickup_hour", "total_viajes"), 3),
+      ((csv: String => DataFrame) => Report.cumulativeShare(csv("errores_hora"), "pickup_hour", "total_viajes"), 3),
+      ((csv: String => DataFrame) => Report.argmax(csv("duracion_promedio_hora"), "pickup_hour", "duracion_promedio_min"), 1),
+      ((csv: String => DataFrame) => Report.argmax(csv("tarifa_promedio_hora"), "pickup_hour", "tarifa_promedio"), 1)) ++
+      Seq("pagos", "vendor", "top_origen", "top_destino", "kpis").map(t =>
+        ((csv: String => DataFrame) => Report.pctOfTotal(csv(t), "total_viajes"), 2))
+    reports.zipWithIndex.foreach { case ((report, pin), i) =>
+      val (got, ev) = SparkEvents.record(spark)(
+        report(t => Jobs.readCsv(spark, s"$exportDir/$t")).collect().toSeq)
+      assert(ev.jobs <= pin, s"report $i ran ${ev.jobs} Spark jobs (pin $pin)")
+      val want = report(t => spark.read.option("header", "true").option("inferSchema", "true")
+        .csv(s"$exportDir/$t")).collect().toSeq
+      assert(got.nonEmpty && sameRows(got, want), s"report $i:\n$got\n!=\n$want")
+    }
 
     // report layer over a mart: cumulative demand over hours ends at 100%
     val perHour = spark.read.parquet(s"$martsOut/viajes_por_hora_dia")
@@ -61,6 +99,19 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     val cum = Report.cumulativeShare(perHour, "pickup_hour", "n")
       .orderBy(desc("pickup_hour")).head
     assert(math.abs(cum.getAs[Double]("cum_pct") - 100.0) < 1e-9)
+  }
+
+  /** The same rows in any order: integral and other cells exact, doubles
+    * within 1e-12 relative. */
+  private def sameRows(a: Seq[Row], b: Seq[Row]): Boolean = {
+    def key(r: Row) = r.toSeq.filterNot(_.isInstanceOf[Double]).mkString("\u0001")
+    a.size == b.size && a.sortBy(key).zip(b.sortBy(key)).forall { case (x, y) =>
+      x.size == y.size && x.toSeq.zip(y.toSeq).forall {
+        case (u: Double, v: Double) =>
+          u == v || (u.isNaN && v.isNaN) || math.abs(u - v) <= 1e-12 * math.max(math.abs(u), math.abs(v))
+        case (u, v) => u == v
+      }
+    }
   }
 
   test("curated -> train -> score -> export via the job mains (scripts 04/05/06)") {
@@ -103,9 +154,9 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     assert(mrow.getAs[Double]("rmse") >= 0.0)
     assert(mrow.getAs[Long]("rows_train") > 0L)
 
-    // the month's model is loaded once, on the driver, so Spark runs only
-    // the curated read's schema job and the one predictions write (two
-    // jobs: its row cap adds a shuffle stage)
+    // the month's model is loaded once, on the driver, and the curated
+    // month's schema comes from its footer, so Spark runs only the one
+    // predictions write (two jobs: its row cap adds a shuffle stage)
     val (_, scoreEvents) = SparkEvents.record(spark)(ScoreMain.run(spark, cfg))
     val writes = scoreEvents.queries.collect { case ("command", qe) => qe.logical }
     assert(writes.size == 1, s"score writes: $writes")
@@ -113,7 +164,7 @@ class PipelineIntegrationSpec extends AnyFunSuite {
       case w: InsertIntoHadoopFsRelationCommand => assert(w.outputPath.toString.endsWith("/predictions"))
       case w => fail(s"not a predictions write: $w")
     }
-    assert(scoreEvents.jobs <= 3, s"ScoreMain ran ${scoreEvents.jobs} Spark jobs for one month")
+    assert(scoreEvents.jobs <= 2, s"ScoreMain ran ${scoreEvents.jobs} Spark jobs for one month")
     val pred = spark.read.parquet(predRoot)
     assert(pred.columns.contains("prediction"))
     assert(pred.count() > 0)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 class ReportSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -60,6 +60,26 @@ class ReportSpec extends AnyFunSuite {
       val bad = got.zip(want).filter { case (g, w) => g != w }
       assert(bad.isEmpty, s"${bad.size} rows differ, first: ${bad.headOption}")
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("A15 global cumulative share over a local input is one range: the single-partition window's values in at most 3 jobs") {
+    // ties on the order key, a negative metric, more rows than task slots
+    val rows = (0 until 40).map(i => (i, i % 7, (i * 37 % 11) - 4L))
+    val df = rows.toDF("id", "k", "n")
+    val shared = Report.cumulativeShare(df, "k", "n")
+    val (got, events) = SparkEvents.record(spark)(
+      shared.select("id", "k", "n", "cum", "cum_pct").as[(Int, Int, Long, Long, Double)].collect().toSeq)
+    assert(events.jobs <= 3, s"${events.jobs} Spark jobs")
+    val plan = shared.queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning") && !plan.contains("Exchange"), plan)
+    val total = rows.map(_._3).sum
+    val want = df.coalesce(1)
+      .withColumn("cum", sum($"n").over(Window.orderBy($"k")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("cum_pct", $"cum" * lit(100.0) / lit(total))
+      .select("id", "k", "n", "cum", "cum_pct").as[(Int, Int, Long, Long, Double)]
+      .collect().toSeq
+    assert(got.sortBy(_._1) == want.sortBy(_._1))
   }
 
   test("A14 argmax picks peak and trough") {

@@ -5,7 +5,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetDriverReader, GraftParquetDriverWriter}
+import org.apache.spark.sql.execution.datasources.GraftDriverWriter
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetDriverReader, ParquetFileFormat}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,8 +57,8 @@ class DriverParquetSpec extends AnyFunSuite {
   private def written(): String = {
     val dir = Files.createTempDirectory("driver-pq").toString
     val toRow = ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
-    GraftParquetDriverWriter.writeFile(spark, schema, rows.take(2).iterator.map(toRow), dir, "part-00000-a")
-    GraftParquetDriverWriter.writeFile(spark, schema, rows.drop(2).iterator.map(toRow), dir, "part-00001-b")
+    GraftDriverWriter.writeFile(spark, new ParquetFileFormat(), Map.empty, schema, rows.take(2).iterator.map(toRow), dir, "part-00000-a")
+    GraftDriverWriter.writeFile(spark, new ParquetFileFormat(), Map.empty, schema, rows.drop(2).iterator.map(toRow), dir, "part-00001-b")
     Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
     Files.write(java.nio.file.Paths.get(dir, ".part-00000-a.crc"), Array[Byte](0))
     dir
