@@ -127,10 +127,12 @@ object SnapshotSql {
   }
 
   /** Execute one DML statement against the log; returns the committed
-    * version. `morDelete = true` routes DELETE through the
-    * merge-on-read path (`deleteWhereMor` — deletion vector, zero file
-    * rewrites) instead of the copy-on-write rewrite; everything else is
-    * identical, including the change feed. */
+    * version. DELETE and UPDATE run through `Snapshots.rewriteWhere`,
+    * the one predicate-DML core: copy-on-write by default, and
+    * `morDelete = true` routes DELETE through its merge-on-read form
+    * (`deleteWhereMor` — a deletion vector, zero file rewrites). UPDATE
+    * is always copy-on-write here. Both DELETE routes leave the same
+    * rows and publish the same change feed. */
   def sql(spark: SparkSession, text: String, changeFeed: Boolean = false,
       morDelete: Boolean = false): Long =
     spark.sessionState.sqlParser.parsePlan(text) match {

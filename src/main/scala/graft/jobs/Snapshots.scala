@@ -3460,10 +3460,32 @@ object Snapshots {
   /** `dvDropped`: vectors this commit intends to REMOVE from the live
     * set (materialization) — they were part of the commit's base, so a
     * winner still carrying them is not a conflict, and a rebase must
-    * not resurrect them. */
+    * not resurrect them. `staged`: root-relative files and directories
+    * (data files, `_dv/` and `_changes/` directories) this commit
+    * wrote; they are deleted when no delta published them, and kept
+    * once one did — a boundary checkpoint that throws afterwards still
+    * fails the call, but never takes a live version's files with it. */
   private def commitRewrite(
       spark: SparkSession, root: String, v: Long, d0: Delta,
-      dvDropped: Seq[String] = Nil): Long = {
+      dvDropped: Seq[String] = Nil, staged: Seq[String] = Nil): Long = {
+    val (fs, qroot) = fsOf(spark, root)
+    val committed =
+      try publishRewrite(spark, root, v, d0, dvDropped)
+      catch { case e: Throwable =>
+        staged.foreach { p =>
+          try fs.delete(new Path(qroot, p), true)
+          catch { case scala.util.control.NonFatal(_) => () }
+        }
+        throw e
+      }
+    maybeCheckpoint(spark, root, committed)
+    committed
+  }
+
+  /** `commitRewrite`'s publish loop: the version the delta landed at. */
+  private def publishRewrite(
+      spark: SparkSession, root: String, v: Long, d0: Delta,
+      dvDropped: Seq[String]): Long = {
     val (_, qroot) = fsOf(spark, root)
     // the BASE this delta was computed against — rebase reconciliation
     // diffs the commit's prop/schema INTENT against it (v0 has no base)
@@ -3483,7 +3505,6 @@ object Snapshots {
     while (true) {
       try {
         writeDelta(spark, root, attempt, d)
-        maybeCheckpoint(spark, root, attempt)
         return attempt
       } catch {
         case e: IllegalArgumentException if e.getMessage.contains("commit race") =>
@@ -3631,7 +3652,7 @@ object Snapshots {
       changeFeed: Boolean = false, txn: Option[Long] = None): Long = {
     val prev = latestVersion(spark, root)
     val v = prev + 1
-    val (fs, qroot) = fsOf(spark, root)
+    val (_, qroot) = fsOf(spark, root)
     val prevFiles = versionFileList(spark, root, prev)
     val prevDelta = readDelta(spark, root, prev)
     val current = readVersionWithFile(spark, root, prev)
@@ -3679,10 +3700,7 @@ object Snapshots {
           if (rewritten.isEmpty) readVersion(spark, root, prev).limit(0)
           else doomedRows, keySet, keyCols)))
       def commitOrCleanFeed(d: Delta): Long =
-        try commitRewrite(spark, root, v, d)
-        catch { case e: Throwable =>
-          cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true)); throw e
-        }
+        commitRewrite(spark, root, v, d, staged = cdfDir.map(n => s"_changes/$n").toSeq)
       if (doomedFiles.isEmpty) {
         return commitOrCleanFeed(Delta(Nil, Nil, txn = txn, cdf = cdfDir,
           schema = prevDelta.schema, props = prevDelta.props, op = Some("delete"),
@@ -4340,358 +4358,180 @@ object Snapshots {
       .flatMap(relByAbs.get).sorted
   }
 
-  /** Predicate DELETE as a copy-on-write commit — SQL `DELETE FROM t
-    * WHERE p` on the log (Delta's deletion path, without deletion
-    * vectors): rows satisfying `predicateSql` are removed; every file
-    * the predicate provably misses carries over BY REFERENCE.
-    *
-    * Three-stage victim selection, each stage strictly cheaper than the
-    * last is wide:
-    *   1. stats-envelope pruning (`statsCandidateFiles`) — metadata
-    *      only, eliminates the bulk of a clustered table's files;
-    *   2. an exact scan of the CANDIDATES only, finding files that
-    *      actually hold a matching row (`input_file_name` grain);
-    *   3. a rewrite of exactly those files, keeping rows where the
-    *      predicate is FALSE or NULL (SQL DELETE semantics: only
-    *      pred=TRUE rows die).
-    *
-    * With `changeFeed = true` the commit publishes the doomed rows
-    * (`_op = delete`) computed from the candidate scan — O(matching
-    * rows), reachable only through the committed delta's `#cdf:`
-    * header. CHECK constraints don't re-validate (no new rows). At
-    * 100 TB a retention delete (`ts < cutoff`) on a time-clustered
-    * table rewrites only the expiring files. */
+  /** Predicate DELETE as a copy-on-write commit (`rewriteWhere`). */
   def deleteWhere(
       spark: SparkSession, root: String, predicateSql: String,
-      changeFeed: Boolean = false, txn: Option[Long] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val v = prev + 1
-    val (fs, qroot) = fsOf(spark, root)
-    val prevDelta = readDelta(spark, root, prev)
-    val schema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val pred = expr(predicateSql)
-    val candidates = statsCandidateFiles(spark, root, prev, predicateSql)
-    def cand = readFilesAs(spark, qroot,
-      candidates.map(f => new Path(qroot, f).toString), schema, prevDelta.props,
-      prevDelta.dv)
-    // defaults coalesced BEFORE the predicate runs: a DELETE WHERE on a
-    // defaulted column must doom the same pre-declaration rows SELECT
-    // with that predicate returns (identity on default-free versions)
-    def candPos = applyDefaults(withPositionsDvApplied(spark, qroot,
-      readFilesRaw(spark, qroot,
-        candidates.map(f => new Path(qroot, f).toString), schema, prevDelta.props),
-      prevDelta.dv), prevDelta.props)
-    val cdfDir =
-      if (!changeFeed) None
-      else if (candidates.isEmpty) None
-      else Some(stageChangeFeed(spark, qroot, v,
-        cand.where(pred).withColumn(ChangeFeed.opCol, lit("delete"))))
-    def commitOrCleanFeed(d: Delta): Long =
-      try commitRewrite(spark, root, v, d)
-      catch { case e: Throwable =>
-        cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true)); throw e
-      }
-    if (candidates.isEmpty)
-      return commitOrCleanFeed(Delta(Nil, Nil, txn = txn, cdf = cdfDir,
-        schema = prevDelta.schema, props = prevDelta.props, op = Some("delete"),
-        dv = prevDelta.dv))
-    val doomedAbs = candPos.where(pred)
-      .select(col("__pos_path")).distinct()
-      .collect().map(r => new Path(r.getString(0)).toString).toSet
-    val doomed = candidates.filter(f => doomedAbs.contains(new Path(qroot, f).toString))
-    require(doomed.size == doomedAbs.size,
-      s"${doomedAbs.size} files hold matching rows but only ${doomed.size} " +
-        s"resolved to log entries — path normalization bug? $doomedAbs")
-    if (doomed.isEmpty)
-      return commitOrCleanFeed(Delta(Nil, Nil, txn = txn, cdf = cdfDir,
-        schema = prevDelta.schema, props = prevDelta.props, op = Some("delete"),
-        dv = prevDelta.dv))
-    val kept = readFilesAs(spark, qroot,
-        doomed.map(f => new Path(qroot, f).toString), schema, prevDelta.props,
-        prevDelta.dv)
-      .where(not(coalesce(pred, lit(false))))
-    val (newFiles, stats) = writeCommitFiles(spark, root, v, kept, prevDelta.props, schema)
-    commitOrCleanFeed(Delta(newFiles, doomed, txn = txn, cdf = cdfDir,
-      schema = prevDelta.schema, props = prevDelta.props, stats = stats,
-      op = Some("delete"), dv = prevDelta.dv))
-  }
+      changeFeed: Boolean = false, txn: Option[Long] = None): Long =
+    rewriteWhere(spark, root, predicateSql, None, mor = false, changeFeed, txn)
 
-  /** Predicate UPDATE as a copy-on-write commit — SQL `UPDATE t SET c =
-    * e, … WHERE p` on the log. Victim selection is `deleteWhere`'s
-    * three-stage shape (stats-pruned candidates → exact file scan →
-    * rewrite of exactly the files holding a matching row); the rewrite
-    * keeps every row, applying each SET expression only where the
-    * predicate is TRUE (NULL/FALSE rows pass through bit-unchanged up to
-    * re-encoding). SET expressions are cast back to the column's
-    * recorded type, so the table schema is invariant under UPDATE; the
-    * updated frame re-validates CHECK constraints (an UPDATE can
-    * introduce a violation). With `changeFeed = true` the commit
-    * publishes update_preimage/update_postimage rows. */
+  /** Predicate UPDATE as a copy-on-write commit (`rewriteWhere`). */
   def updateWhere(
       spark: SparkSession, root: String, set: Map[String, String],
       predicateSql: String, changeFeed: Boolean = false,
-      txn: Option[Long] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val v = prev + 1
-    val (fs, qroot) = fsOf(spark, root)
-    val prevDelta = readDelta(spark, root, prev)
-    val schema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(readVersion(spark, root, prev).schema)
-    val unknown = set.keys.filterNot(schema.fieldNames.contains)
-    require(unknown.isEmpty, s"UPDATE SET of unknown column(s): ${unknown.mkString(", ")}")
-    val partCols = graft.core.HivePartitions.columnsOf(prevDelta.props)
-    val partSet = set.keys.filter(partCols.contains)
-    require(partSet.isEmpty,
-      s"UPDATE cannot move rows across partitions (SET ${partSet.mkString(", ")}) — " +
-        "delete + insert instead")
-    require(!rowTrackingOn(prevDelta.props) || !set.contains(rowIdCol),
-      s"$rowIdCol is engine-managed under $rowTrackingProp — UPDATE cannot SET it")
-    val pred = expr(predicateSql)
-    def applySet(df: DataFrame): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        if (set.contains(f.name))
-          when(coalesce(pred, lit(false)),
-            expr(set(f.name)).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        else col(f.name)
-      }: _*)
-    val candidates = statsCandidateFiles(spark, root, prev, predicateSql)
-    def cand = readFilesAs(spark, qroot,
-      candidates.map(f => new Path(qroot, f).toString), Some(schema), prevDelta.props,
-      prevDelta.dv)
-    // defaults coalesced BEFORE the predicate runs — an UPDATE WHERE on
-    // a defaulted column must hit the same pre-declaration rows SELECT
-    // with that predicate returns
-    def candPos = applyDefaults(withPositionsDvApplied(spark, qroot,
-      readFilesRaw(spark, qroot,
-        candidates.map(f => new Path(qroot, f).toString), Some(schema), prevDelta.props),
-      prevDelta.dv), prevDelta.props)
-    val cdfDir =
-      if (!changeFeed || candidates.isEmpty) None
-      else Some(stageChangeFeed(spark, qroot, v,
-        cand.where(pred).withColumn(ChangeFeed.opCol, lit("update_preimage"))
-          .unionByName(applySet(cand.where(pred))
-            .withColumn(ChangeFeed.opCol, lit("update_postimage")))))
-    def commitOrCleanFeed(d: Delta): Long =
-      try commitRewrite(spark, root, v, d)
-      catch { case e: Throwable =>
-        cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true)); throw e
-      }
-    if (candidates.isEmpty)
-      return commitOrCleanFeed(Delta(Nil, Nil, txn = txn, cdf = cdfDir,
-        schema = prevDelta.schema, props = prevDelta.props, op = Some("update"),
-        dv = prevDelta.dv))
-    val doomedAbs = candPos.where(pred)
-      .select(col("__pos_path")).distinct()
-      .collect().map(r => new Path(r.getString(0)).toString).toSet
-    val doomed = candidates.filter(f => doomedAbs.contains(new Path(qroot, f).toString))
-    require(doomed.size == doomedAbs.size,
-      s"${doomedAbs.size} files hold matching rows but only ${doomed.size} " +
-        s"resolved to log entries — path normalization bug? $doomedAbs")
-    if (doomed.isEmpty)
-      return commitOrCleanFeed(Delta(Nil, Nil, txn = txn, cdf = cdfDir,
-        schema = prevDelta.schema, props = prevDelta.props, op = Some("update"),
-        dv = prevDelta.dv))
-    val rewritten = applySet(readFilesAs(spark, qroot,
-      doomed.map(f => new Path(qroot, f).toString), Some(schema), prevDelta.props,
-      prevDelta.dv))
-    checkConstraints(rewritten, prevDelta.props)
-    // an UPDATE that changes a generated column's SOURCE without the
-    // column itself would leave derived data silently stale — the
-    // generated-column validator refuses the contradiction loudly
-    withGenerated(rewritten, prevDelta.props)
-    val (newFiles, stats) = writeCommitFiles(spark, root, v, rewritten, prevDelta.props, Some(schema))
-    commitOrCleanFeed(Delta(newFiles, doomed, txn = txn, cdf = cdfDir,
-      schema = prevDelta.schema, props = prevDelta.props, stats = stats,
-      op = Some("update"), dv = prevDelta.dv))
-  }
+      txn: Option[Long] = None): Long =
+    rewriteWhere(spark, root, predicateSql, Some(set), mor = false, changeFeed, txn)
 
-  /** Predicate UPDATE as MERGE-ON-READ — deletion vectors + appended
-    * post-images, ONE commit, ZERO files rewritten. COW UPDATE
-    * (`updateWhere`) rewrites every file holding a matching row — at
-    * 100 TB a 1-row UPDATE can rewrite gigabytes. Here the matching
-    * rows' (file, row_index) pairs land in a `_dv/` sidecar (every read
-    * path already anti-joins the live DV set) and the updated rows are
-    * appended as NEW files through the normal commit machinery (stats
-    * envelopes, Hive layout, CHECK constraints, generated-column
-    * validation). Write cost: O(matching rows), not O(matching files).
-    *
-    * Same SQL semantics as `updateWhere`: SET expressions cast back to
-    * the column's recorded type (schema invariant), partition columns
-    * refuse SET (rows never silently migrate partitions), `changeFeed =
-    * true` publishes update_preimage/update_postimage. The DV and the
-    * post-image files ride ONE delta, so a crash commits both or
-    * neither; lost commit races rebase through `commitRewrite`'s
-    * DV-reconciliation (file-disjoint winners merge, overlaps refuse).
-    * Read-side cost accrues like MOR DELETE — `graft.dv.maxRows`
-    * auto-materialization bounds it. */
+  /** Predicate UPDATE as merge-on-read: a deletion vector plus appended
+    * post-images (`rewriteWhere`). */
   def updateWhereMor(
       spark: SparkSession, root: String, set: Map[String, String],
       predicateSql: String, changeFeed: Boolean = false,
-      txn: Option[Long] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val v = prev + 1
-    val (fs, qroot) = fsOf(spark, root)
-    val prevDelta = readDelta(spark, root, prev)
-    val schema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(readVersion(spark, root, prev).schema)
-    val unknown = set.keys.filterNot(schema.fieldNames.contains)
-    require(unknown.isEmpty, s"UPDATE SET of unknown column(s): ${unknown.mkString(", ")}")
-    val partCols = graft.core.HivePartitions.columnsOf(prevDelta.props)
-    val partSet = set.keys.filter(partCols.contains)
-    require(partSet.isEmpty,
-      s"UPDATE cannot move rows across partitions (SET ${partSet.mkString(", ")}) — " +
-        "delete + insert instead")
-    require(!rowTrackingOn(prevDelta.props) || !set.contains(rowIdCol),
-      s"$rowIdCol is engine-managed under $rowTrackingProp — UPDATE cannot SET it")
-    val pred = expr(predicateSql)
-    def applySet(df: DataFrame): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        if (set.contains(f.name)) expr(set(f.name)).cast(f.dataType).as(f.name)
-        else col(f.name)
-      }: _*)
-    val candidates = statsCandidateFiles(spark, root, prev, predicateSql)
-    def commitMeta(): Long =
-      commitRewrite(spark, root, v,
-        Delta(Nil, Nil, txn = txn, cdf = None,
-          schema = prevDelta.schema, props = prevDelta.props,
-          op = Some("update"), dv = prevDelta.dv))
-    if (candidates.isEmpty) return commitMeta()
-    // candidate scan WITH row positions, pre-filtered by the LIVE DV set
-    // (an already-deleted row can never be updated), defaults coalesced
-    // BEFORE the predicate/SET run: pre-declaration rows must match the
-    // predicate, SET expressions must compute from the constant, and
-    // update_preimage must publish it — the NOT-NULL-DEFAULT contract
-    val cand = applyDefaults(withPositionsDvApplied(spark, qroot,
-      readFilesRaw(spark, qroot,
-        candidates.map(f => new Path(qroot, f).toString), Some(schema),
-        prevDelta.props),
-      prevDelta.dv), prevDelta.props)
-    val matched = cand.where(pred)
-    val dvName = f"v$v%08d-${java.util.UUID.randomUUID.toString.take(8)}"
-    matched.select(col("__pos_path").as("file_path"), col("__pos_idx").as("row_index"))
-      .write.options(internalWriteOptions).mode("overwrite")
-      .parquet(new Path(qroot, s"_dv/$dvName").toString)
-    val dvRows = spark.read.parquet(new Path(qroot, s"_dv/$dvName").toString).count()
-    if (dvRows == 0L) {
-      fs.delete(new Path(qroot, s"_dv/$dvName"), true)
-      return commitMeta()
-    }
-    val preImages = matched.drop("__pos_path", "__pos_idx")
-    val postImages = applySet(preImages)
-    checkConstraints(postImages, prevDelta.props)
-    // SET on a generated column's SOURCE without the column itself would
-    // leave derived data silently stale — refuse the contradiction loudly
-    withGenerated(postImages, prevDelta.props)
-    val (adds, stats) = writeCommitFiles(spark, root, v, postImages,
-      prevDelta.props, Some(schema))
-    val cdfDir =
-      if (!changeFeed) None
-      else Some(stageChangeFeed(spark, qroot, v,
-        preImages.withColumn(ChangeFeed.opCol, lit("update_preimage"))
-          .unionByName(postImages
-            .withColumn(ChangeFeed.opCol, lit("update_postimage")))))
-    val committed =
-      try commitRewrite(spark, root, v,
-        Delta(adds, Nil, txn = txn, cdf = cdfDir,
-          schema = prevDelta.schema, props = prevDelta.props, stats = stats,
-          op = Some("update"), dv = prevDelta.dv :+ dvName, dvAdd = Some(dvName)))
-      catch { case e: Throwable =>
-        cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true))
-        fs.delete(new Path(qroot, s"_dv/$dvName"), true)
-        adds.foreach(f => fs.delete(new Path(qroot, f), false))
-        throw e
-      }
-    // same auto-materialize valve as MOR DELETE: the writer that grew
-    // the DV set pays for reclaiming the read path once it crosses the
-    // conf'd bound
-    prevDelta.props.get(dvMaxRowsProp).map(_.toLong).foreach { cap =>
-      val head = readDelta(spark, root, committed)
-      if (head.dv.nonEmpty) {
-        val total = dvFrame(spark, qroot, head.dv).count()
-        if (total > cap) materializeDeletionVectors(spark, root)
-      }
-    }
-    committed
-  }
+      txn: Option[Long] = None): Long =
+    rewriteWhere(spark, root, predicateSql, Some(set), mor = true, changeFeed, txn)
 
-  /** Predicate DELETE as MERGE-ON-READ — Delta's deletion vectors on
-    * this log: instead of rewriting any data file, the commit records
-    * the doomed rows' (file, row_index) pairs in a small `_dv/` sidecar
-    * named by the delta (`#dv:` cumulative live list + `#dvadd:` this
-    * commit's new vector); every read path anti-joins the broadcast DV
-    * set against the parquet reader's own `_metadata` row positions. A
-    * delete of a thousand rows in a 100 TB table costs O(matching rows)
-    * written, ZERO files rewritten — the write-amplification fix COW
-    * cannot give. Victim selection is the same stats-pruned candidate
-    * path as `deleteWhere` (only candidate files are even read), the
-    * change feed publishes identically, and `materializeDeletionVectors`
-    * folds the vectors into a rewrite when read-side cost should be
-    * reclaimed (compaction semantics). Time travel is exact: each
-    * version's delta names the DV set that was live AT that version. */
+  /** Predicate DELETE as merge-on-read: a deletion vector, zero files
+    * rewritten (`rewriteWhere`). */
   def deleteWhereMor(
       spark: SparkSession, root: String, predicateSql: String,
-      changeFeed: Boolean = false, txn: Option[Long] = None): Long = {
+      changeFeed: Boolean = false, txn: Option[Long] = None): Long =
+    rewriteWhere(spark, root, predicateSql, None, mor = true, changeFeed, txn)
+
+  /** Predicate DML as ONE commit — SQL `DELETE FROM t WHERE p`
+    * (`set = None`) or `UPDATE t SET c = e, … WHERE p` — written
+    * copy-on-write or merge-on-read (`mor`, Delta's deletion vectors).
+    *
+    *   1. Inputs: the head's schema and props; an UPDATE refuses SET of
+    *      an unknown column, a partition column (rows never migrate
+    *      partitions: delete + insert instead) and `_row_id` under row
+    *      tracking. SET expressions cast back to the column's recorded
+    *      type, so UPDATE never changes the schema.
+    *   2. Candidates: stats-envelope pruning (`statsCandidateFiles`,
+    *      metadata only) — every other file carries over BY REFERENCE
+    *      without being read. The candidates are read as ONE frame with
+    *      row positions, the live deletion vectors applied (a deleted row
+    *      never matches again) and defaults coalesced BEFORE the
+    *      predicate runs (a pre-declaration row matches exactly when
+    *      SELECT with the predicate returns it). Only pred = TRUE rows
+    *      match; NULL and FALSE rows are untouched.
+    *   3. Nothing matched → a metadata-only commit with no feed.
+    *   4. COW: the files holding a matching row are rewritten — DELETE
+    *      keeps the other rows, UPDATE applies SET under
+    *      `coalesce(pred, false)` — and removed.
+    *      MOR: the matching rows' (file, row_index) pairs land in a
+    *      `_dv/` sidecar whose row count is observed on its own write;
+    *      an UPDATE appends the post-images as new files. Zero files
+    *      rewritten: O(matching rows) written, not O(matching files).
+    *   5. UPDATE post-images pass the CHECK constraints and the
+    *      generated-column validator (a SET of a generated column's
+    *      source alone would leave derived data stale) before anything
+    *      is written.
+    *   6. `changeFeed = true` stages `delete` rows, or
+    *      update_preimage/update_postimage rows, from the matching rows;
+    *      the feed is reachable only through the committed delta's
+    *      `#cdf:` header.
+    *   7. One commit carries the files, the vector and the feed, so a
+    *      crash publishes all or none; `commitRewrite` deletes them when
+    *      no delta published them, and rebases lost races (file-disjoint
+    *      winners merge, DV overlaps refuse). A MOR commit then runs the
+    *      `graft.dv.maxRows` auto-materialize valve: the writer that grew
+    *      the DV set pays for reclaiming the read path. */
+  private def rewriteWhere(
+      spark: SparkSession, root: String, predicateSql: String,
+      set: Option[Map[String, String]], mor: Boolean,
+      changeFeed: Boolean, txn: Option[Long]): Long = {
     val prev = latestVersion(spark, root)
     val v = prev + 1
     val (fs, qroot) = fsOf(spark, root)
     val prevDelta = readDelta(spark, root, prev)
+    val props = prevDelta.props
+    // an UPDATE needs the column list even from a log that never recorded it
     val schema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .orElse(set.map(_ => readVersion(spark, root, prev).schema))
+    set.foreach { s =>
+      val unknown = s.keys.filterNot(schema.get.fieldNames.contains)
+      require(unknown.isEmpty, s"UPDATE SET of unknown column(s): ${unknown.mkString(", ")}")
+      val partSet = s.keys.filter(graft.core.HivePartitions.columnsOf(props).contains)
+      require(partSet.isEmpty,
+        s"UPDATE cannot move rows across partitions (SET ${partSet.mkString(", ")}) — " +
+          "delete + insert instead")
+      require(!rowTrackingOn(props) || !s.contains(rowIdCol),
+        s"$rowIdCol is engine-managed under $rowTrackingProp — UPDATE cannot SET it")
+    }
     val pred = expr(predicateSql)
+    val hit = coalesce(pred, lit(false))
+    def applySet(df: DataFrame, s: Map[String, String]): DataFrame =
+      df.select(schema.get.fields.toSeq.map { f =>
+        s.get(f.name).fold(col(f.name))(e =>
+          when(hit, expr(e).cast(f.dataType)).otherwise(col(f.name)).as(f.name))
+      }: _*)
+    def abs(rel: String) = new Path(qroot, rel).toString
+    def commit(adds: Seq[String], removes: Seq[String],
+        stats: Map[String, graft.core.Skipping.FileStats], cdf: Option[String],
+        dvAdd: Option[String]): Long =
+      commitRewrite(spark, root, v,
+        Delta(adds, removes, txn = txn, cdf = cdf, schema = prevDelta.schema,
+          props = props, stats = stats, op = Some(if (set.isEmpty) "delete" else "update"),
+          dv = prevDelta.dv ++ dvAdd, dvAdd = dvAdd),
+        staged = adds ++ cdf.map(n => s"_changes/$n") ++ dvAdd.map(n => s"_dv/$n"))
+    def noMatch(): Long = commit(Nil, Nil, Map.empty, None, None)
     val candidates = statsCandidateFiles(spark, root, prev, predicateSql)
-    def commitMeta(cdfDir: Option[String], newDv: Option[String]): Long =
-      try commitRewrite(spark, root, v,
-        Delta(Nil, Nil, txn = txn, cdf = cdfDir,
-          schema = prevDelta.schema, props = prevDelta.props,
-          op = Some("delete"), dv = prevDelta.dv ++ newDv.toSeq, dvAdd = newDv))
-      catch { case e: Throwable =>
-        cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true))
-        newDv.foreach(n => fs.delete(new Path(qroot, s"_dv/$n"), true))
-        throw e
-      }
-    if (candidates.isEmpty) return commitMeta(None, None)
-    // candidate scan WITH row positions, already filtered by the LIVE
-    // DV set (a row can never be deleted twice), defaults coalesced so
-    // the predicate and the CDC delete rows see the declared constant
-    // in pre-declaration files
+    if (candidates.isEmpty) return noMatch()
     val cand = applyDefaults(withPositionsDvApplied(spark, qroot,
-      readFilesRaw(spark, qroot,
-        candidates.map(f => new Path(qroot, f).toString), schema, prevDelta.props),
-      prevDelta.dv), prevDelta.props)
-    val doomed = cand.where(pred)
-    val dvName = f"v$v%08d-${java.util.UUID.randomUUID.toString.take(8)}"
-    doomed.select(col("__pos_path").as("file_path"), col("__pos_idx").as("row_index"))
-      .write.options(internalWriteOptions).mode("overwrite")
-      .parquet(new Path(qroot, s"_dv/$dvName").toString)
-    val dvRows = spark.read.parquet(new Path(qroot, s"_dv/$dvName").toString).count()
-    if (dvRows == 0L) {
-      fs.delete(new Path(qroot, s"_dv/$dvName"), true)
-      return commitMeta(None, None)
+      readFilesRaw(spark, qroot, candidates.map(abs), schema, props),
+      prevDelta.dv), props)
+    val matched = cand.where(pred)
+    val matchedRows = matched.drop("__pos_path", "__pos_idx")
+    val postImages = set.map(applySet(matchedRows, _))
+    // MOR: the vector first — its observed row count says whether anything
+    // matched. COW: the files holding a matching row.
+    val (dvAdd, doomed) =
+      if (mor) {
+        val name = f"v$v%08d-${java.util.UUID.randomUUID.toString.take(8)}"
+        val obs = new org.apache.spark.sql.Observation(s"graft-dv-$name")
+        matched.select(col("__pos_path").as("file_path"), col("__pos_idx").as("row_index"))
+          .observe(obs, count(lit(1)).as("n"))
+          .write.options(internalWriteOptions).mode("overwrite").parquet(abs(s"_dv/$name"))
+        if (obs.get("n").asInstanceOf[Long] == 0L) {
+          fs.delete(new Path(qroot, s"_dv/$name"), true)
+          return noMatch()
+        }
+        (Some(name), Nil)
+      } else {
+        // `_metadata.file_path` spells URIs (file:///x) unlike
+        // Path.toString (file:/x) — normalize through Path
+        val doomedAbs = matched.select(col("__pos_path")).distinct()
+          .collect().map(r => new Path(r.getString(0)).toString).toSet
+        val doomed = candidates.filter(f => doomedAbs.contains(abs(f)))
+        // EVERY matching file must resolve to a log entry, or unmatched
+        // spellings would silently keep their rows
+        require(doomed.size == doomedAbs.size,
+          s"${doomedAbs.size} files hold matching rows but only ${doomed.size} " +
+            s"resolved to log entries — path normalization bug? $doomedAbs")
+        if (doomed.isEmpty) return noMatch()
+        (None, doomed)
+      }
+    postImages.foreach { post =>
+      checkConstraints(post, props)
+      withGenerated(post, props)
     }
     val cdfDir =
       if (!changeFeed) None
-      else Some(stageChangeFeed(spark, qroot, v,
-        doomed.drop("__pos_path", "__pos_idx")
-          .withColumn(ChangeFeed.opCol, lit("delete"))))
-    val committed = commitMeta(cdfDir, Some(dvName))
-    // AUTO-MATERIALIZE valve: the table property `graft.dv.maxRows`
-    // bounds how many deletion-vector rows may accumulate before the
-    // per-read anti-join is reclaimed. Checked AT WRITE time (the
-    // actor that caused the growth pays), so the read path's
-    // size-bounded join never silently degrades forever — the second
-    // half of the bound DeletionVectorsRule's broadcast cap starts.
-    prevDelta.props.get(dvMaxRowsProp).map(_.toLong).foreach { cap =>
-      val head = readDelta(spark, root, committed)
-      if (head.dv.nonEmpty) {
-        val total = dvFrame(spark, qroot, head.dv).count()
-        if (total > cap) materializeDeletionVectors(spark, root)
+      else Some(stageChangeFeed(spark, qroot, v, postImages match {
+        case None => matchedRows.withColumn(ChangeFeed.opCol, lit("delete"))
+        case Some(post) =>
+          matchedRows.withColumn(ChangeFeed.opCol, lit("update_preimage"))
+            .unionByName(post.withColumn(ChangeFeed.opCol, lit("update_postimage")))
+      }))
+    val written =
+      if (mor) postImages
+      else {
+        val kept = readFilesAs(spark, qroot, doomed.map(abs), schema, props, prevDelta.dv)
+        Some(set.fold(kept.where(!hit))(applySet(kept, _)))
       }
+    val (adds, stats) = written.map(writeCommitFiles(spark, root, v, _, props, schema))
+      .getOrElse((Nil, Map.empty[String, graft.core.Skipping.FileStats]))
+    val committed = commit(adds, doomed, stats, cdfDir, dvAdd)
+    if (mor) props.get(dvMaxRowsProp).map(_.toLong).foreach { cap =>
+      val head = readDelta(spark, root, committed)
+      if (head.dv.nonEmpty && dvFrame(spark, qroot, head.dv).count() > cap)
+        materializeDeletionVectors(spark, root)
     }
     committed
   }
 
   /** Table property: auto-materialize deletion vectors once their
-    * cumulative row count crosses this bound (checked on each MOR
-    * delete commit). */
+    * cumulative row count crosses this bound (checked after each
+    * merge-on-read DELETE or UPDATE commit). */
   val dvMaxRowsProp = "graft.dv.maxRows"
 
   /** Fold the live deletion vectors into a rewrite: files holding any
@@ -4910,7 +4750,7 @@ object Snapshots {
       "MERGE with no WHEN clauses")
     val prev = latestVersion(spark, root)
     val v = prev + 1
-    val (fs, qroot) = fsOf(spark, root)
+    val (_, qroot) = fsOf(spark, root)
     val prevFiles = versionFileList(spark, root, prev)
     val prevDelta = readDelta(spark, root, prev)
     val props = prevDelta.props
@@ -5131,12 +4971,10 @@ object Snapshots {
         else identityPatch(stats, Seq(rowIdCol -> 1L),
             c => physicalMap(merged).getOrElse(c, c))
           .filter(_._2.toLong > hwm)
-      try commitRewrite(spark, root, v, Delta(newFiles, rewritten, txn = txn, cdf = cdfDir,
+      commitRewrite(spark, root, v, Delta(newFiles, rewritten, txn = txn, cdf = cdfDir,
         schema = Some(merged.json), props = props ++ idPatch, stats = stats,
-        op = Some("merge"), dv = prevDelta.dv))
-      catch { case e: Throwable =>
-        cdfDir.foreach(n => fs.delete(new Path(qroot, s"_changes/$n"), true)); throw e
-      }
+        op = Some("merge"), dv = prevDelta.dv),
+        staged = cdfDir.map(n => s"_changes/$n").toSeq)
     }
     try {
       // gates on CHANGED rows only (updated + inserted), O(changed) —

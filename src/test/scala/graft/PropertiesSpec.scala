@@ -62,10 +62,15 @@ class PropertiesSpec extends AnyFunSuite {
 
   test("snapshot MERGE: random batch sequences over three routes match an in-memory model, feeds replay") {
     // the model check above over a snapshot table with the change feed
-    // on, alternating the whole-row API upsert, the SQL upsert and a
-    // conditional clause merge (delete / guarded update / guarded
-    // insert). After every commit the head equals the model, and the
-    // commit's feed replayed onto the previous head gives the new head.
+    // on. The seeded op sequence draws the whole-row API upsert, the SQL
+    // upsert, a conditional clause merge (delete / guarded update /
+    // guarded insert) and the four predicate DML routes: DELETE and
+    // UPDATE, copy-on-write and merge-on-read. Predicates include ones
+    // no file can hold, ones every file may hold but no row matches, and
+    // a repeat of the last merge-on-read delete's (rows a live deletion
+    // vector already removed). After every commit the head equals the
+    // model, and the commit's feed replayed onto the previous head gives
+    // the new head.
     val rnd = new scala.util.Random(23)
     val root = java.nio.file.Files.createTempDirectory("merge-prop-snap").toFile.getAbsolutePath + "/t"
     type Model = Map[Long, (Long, String)]
@@ -74,11 +79,41 @@ class PropertiesSpec extends AnyFunSuite {
     def frame(m: Model) = m.toSeq.map { case (k, (v, p)) => (k, v, p) }.toDF("k", "v", "p")
     def rows(d: DataFrame) = d.select("k", "v", "p").as[(Long, Long, String)].collect().toSeq.sorted
     def modelRows(m: Model) = m.toSeq.map { case (k, (v, p)) => (k, v, p) }.sorted
+    // (sql, the same predicate over a model row)
+    type Pred = (String, (Long, Long, String) => Boolean)
+    def randRange(): Pred = {
+      val lo = rnd.nextInt(30).toLong
+      val hi = lo + rnd.nextInt(12)
+      val p = s"p${rnd.nextInt(3)}"
+      if (rnd.nextBoolean()) (s"k BETWEEN $lo AND $hi", (k, _, _) => k >= lo && k <= hi)
+      else (s"k BETWEEN $lo AND $hi AND p = '$p'", (k, _, q) => k >= lo && k <= hi && q == p)
+    }
+    var lastMorDelete: Option[Pred] = None
+    var dmlOps = 0
+    var dvRepeats = 0
+    val routes = Seq("api", "sql", "clauses", "delete", "deleteMor", "update", "updateMor")
+    val ops = rnd.shuffle(Seq.fill(3)(routes).flatten)
     var model = randRows(12)
     Snapshots.init(spark, root, frame(model).repartition(3))
-    (1 to 9).foreach { i =>
+    ops.zipWithIndex.foreach { case (route, i0) =>
+      val i = i0 + 1
       val batch = randRows(1 + rnd.nextInt(8))
-      val route = Seq("api", "sql", "clauses")(i % 3)
+      lazy val pred: Pred = {
+        dmlOps += 1
+        dmlOps % 4 match {
+          case 1 => ("k > 1000", (_, _, _) => false)      // no candidate file
+          case 2 => ("k % 31 = 30", (_, _, _) => false)   // candidates, no row
+          case 3 => lastMorDelete.map { p => dvRepeats += 1; p } // rows a DV removed
+            .getOrElse(randRange())
+          case _ => randRange()
+        }
+      }
+      def modelDelete(): Unit =
+        model = model.filterNot { case (k, (v, p)) => pred._2(k, v, p) }
+      def modelUpdate(): Unit =
+        model = model.map { case (k, (v, p)) =>
+          if (pred._2(k, v, p)) k -> ((v + 7, "p2")) else k -> ((v, p)) }
+      val set = Map("v" -> "v + 7", "p" -> "'p2'")
       val v = route match {
         case "api" =>
           model ++= batch
@@ -104,14 +139,29 @@ class PropertiesSpec extends AnyFunSuite {
               Snapshots.MergeWhen.update(Map("v" -> "s.v", "p" -> "s.p"), Some("s.v >= t.v"))),
             notMatched = Seq(Snapshots.MergeWhen.insertAll(Some("s.v % 5 <> 0"))),
             changeFeed = true)
+        case "delete" =>
+          modelDelete()
+          Snapshots.deleteWhere(spark, root, pred._1, changeFeed = true)
+        case "deleteMor" =>
+          modelDelete()
+          lastMorDelete = Some(pred)
+          Snapshots.deleteWhereMor(spark, root, pred._1, changeFeed = true)
+        case "update" =>
+          modelUpdate()
+          Snapshots.updateWhere(spark, root, set, pred._1, changeFeed = true)
+        case "updateMor" =>
+          modelUpdate()
+          Snapshots.updateWhereMor(spark, root, set, pred._1, changeFeed = true)
       }
-      assert(v == i.toLong, s"$route merge $i committed v$v")
+      val what = if (routes.take(3).contains(route)) s"batch=$batch" else s"pred=${pred._1}"
+      assert(v == i.toLong, s"$route op $i committed v$v")
       val head = rows(Snapshots.readVersion(spark, root, v))
-      assert(head == modelRows(model), s"$route merge $i diverged from the model (batch=$batch)")
+      assert(head == modelRows(model), s"$route op $i diverged from the model ($what)")
       val replayed = ChangeFeed.applyChangeFeed(Snapshots.readVersion(spark, root, v - 1)
         .select("k", "v", "p"), Snapshots.changesBetween(spark, root, v - 1, v), Seq("k"))
-      assert(rows(replayed) == head, s"$route merge $i: feed replay diverged from the head")
+      assert(rows(replayed) == head, s"$route op $i: feed replay diverged from the head ($what)")
     }
+    assert(dmlOps == 12 && dvRepeats > 0, s"$dmlOps DML ops, $dvRepeats repeated a MOR delete")
   }
 
   test("A12 weighted average of per-group averages equals the global average") {

@@ -182,6 +182,38 @@ class LiveAggregateSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.debug.invariants")
   }
 
+  test("a boundary checkpoint that throws keeps the published commit's vector and feed") {
+    val root = tmp()
+    Snapshots.init(spark, root,
+      (1L to 20L).map(i => (i, i * 1.0)).toDF("k", "v").coalesce(1),
+      Map(Snapshots.checkpointFormatProp -> "parquet"))
+    (1 to 8).foreach { b =>
+      Snapshots.append(spark, root, Seq((b * 100L, 1.0)).toDF("k", "v").coalesce(1))
+    }
+    val live = Snapshots.versionFiles(spark, root)
+      .map(f => f.substring(f.indexOf("data/")))
+    spark.conf.set("spark.graft.debug.invariants", "true")
+    try {
+      // v9 re-adds a live path, so the v10 checkpoint refuses to write
+      Snapshots.commitMetadataOnlyAdds(spark, root, Seq(live.head), Map.empty)
+      val e = intercept[IllegalStateException] {
+        Snapshots.deleteWhereMor(spark, root, "k <= 5", changeFeed = true)
+      }
+      assert(e.getMessage.contains("add-names-live-path"))
+    } finally spark.conf.unset("spark.graft.debug.invariants")
+    // v10 was published before its checkpoint threw: what it names stays
+    assert(Snapshots.latestVersion(spark, root) == 10L)
+    val head = Snapshots.readDelta(spark, root, 10L)
+    assert(head.dvAdd.exists(n => new java.io.File(root, s"_dv/$n").isDirectory),
+      s"the vector of v10 is gone: ${head.dvAdd}")
+    assert(head.cdf.exists(n => new java.io.File(root, s"_changes/$n").isDirectory),
+      s"the feed of v10 is gone: ${head.cdf}")
+    val keys = Snapshots.readVersion(spark, root).select("k").as[Long].collect().toSet
+    assert(keys.nonEmpty && !keys.exists(_ <= 5L))
+    assert(Snapshots.changesBetween(spark, root, 9L, 10L).select("k").as[Long]
+      .collect().toSet == (1L to 5L).toSet)
+  }
+
   test("debug invariants: a legit re-add (remove then add) checkpoints fine") {
     val root = tmp()
     Snapshots.init(spark, root,

@@ -2,15 +2,17 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 /** Predicate DML on the snapshot log — `deleteWhere`/`updateWhere`
   * (stats-pruned COW rewrites) and the SQL router (`SnapshotSql`): SQL
   * MERGE/UPDATE/DELETE/INSERT produce the identical commits as the
-  * programmatic API. */
+  * programmatic API; and the Spark jobs each DELETE/UPDATE route
+  * submits. */
 class SnapshotDmlSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -213,5 +215,56 @@ class SnapshotDmlSpec extends AnyFunSuite {
       """MERGE INTO dml_t t USING dml_src s ON t.k < s.k
         |WHEN MATCHED THEN DELETE""".stripMargin))
     SnapshotSql.unregister("dml_t")
+  }
+
+  test("predicate DML Spark jobs per route, feed on and off; no MOR route reads back its vector") {
+    // 3,000 rows in 6 range files, with a live vector over every file
+    def table(): String = {
+      val root = tmp()
+      Snapshots.init(spark, root,
+        (1L to 3000L).map(i => (i, i * 1.0, s"s$i")).toDF("k", "v", "s")
+          .repartitionByRange(6, col("k")).sortWithinPartitions("k"))
+      Snapshots.deleteWhereMor(spark, root, "k % 100 = 7")
+      root
+    }
+    // directories the recorded queries scanned
+    def scanned(e: SparkEvents): Seq[String] = e.queries.flatMap { case (_, qe) =>
+      qe.optimizedPlan.collect { case l: LogicalRelation => l.relation }
+        .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }.flatten
+    }
+    val pred = "k BETWEEN 100 AND 700"
+    val set = Map("v" -> "-v")
+    // route → (feed off, feed on) job bounds
+    val routes = Seq[(String, (String, Boolean) => Long, (Int, Int))](
+      ("deleteWhere", (r, f) => Snapshots.deleteWhere(spark, r, pred, f), (7, 9)),
+      ("deleteWhereMor", (r, f) => Snapshots.deleteWhereMor(spark, r, pred, f), (3, 5)),
+      ("updateWhere", (r, f) => Snapshots.updateWhere(spark, r, set, pred, f), (7, 9)),
+      ("updateWhereMor", (r, f) => Snapshots.updateWhereMor(spark, r, set, pred, f), (5, 7)),
+      // every row the predicate matches is already under the live vector
+      ("deleteWhereMor, no row", (r, f) => Snapshots.deleteWhereMor(spark, r, "k % 100 = 7", f), (3, 3)),
+      ("updateWhereMor, no row", (r, f) => Snapshots.updateWhereMor(spark, r, set, "k % 100 = 7", f), (3, 3)),
+      // the optimizer folds the candidate scan to an empty relation
+      ("deleteWhereMor, false, no row", (r, f) => Snapshots.deleteWhereMor(spark, r, "1 = 0", f), (2, 2)))
+    val counts = for ((name, dml, (offMax, onMax)) <- routes; feed <- Seq(false, true)) yield {
+      val root = table()
+      val v = Snapshots.latestVersion(spark, root) + 1
+      val (committed, events) = SparkEvents.record(spark)(dml(root, feed))
+      assert(committed == v)
+      val ownDv = f"/_dv/v$v%08d-"
+      assert(!scanned(events).exists(_.contains(ownDv)),
+        s"$name (feed $feed) read back the vector it wrote: ${scanned(events).filter(_.contains(ownDv))}")
+      val rows = Snapshots.readVersion(spark, root)
+      if (name.endsWith("no row")) {
+        assert(Snapshots.readDelta(spark, root, v).dvAdd.isEmpty && rows.count() == 2970L)
+        assert(!new java.io.File(root, "_dv").list().exists(_.startsWith(f"v$v%08d-")))
+      } else if (name.startsWith("delete")) assert(rows.count() == 2970L - 595L)
+      else assert(rows.where(col("v") < 0).count() == 595L && rows.count() == 2970L)
+      if (feed) assert(Snapshots.changesBetween(spark, root, v - 1, v).count() ==
+        (if (name.endsWith("no row")) 0L else if (name.startsWith("delete")) 595L else 1190L))
+      val bound = if (feed) onMax else offMax
+      assert(events.jobs <= bound, s"$name (feed $feed) submitted ${events.jobs} jobs, bound $bound")
+      s"$name/${if (feed) "feed" else "no feed"}=${events.jobs}"
+    }
+    info(counts.mkString(", "))
   }
 }
