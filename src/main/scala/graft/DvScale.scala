@@ -58,7 +58,7 @@ object DvScale {
     def measure(tag: String): Unit = {
       val dvRows = Snapshots.liveDeletionVectors(spark, root) match {
         case Nil => 0L
-        case dirs => spark.read.parquet(
+        case dirs => spark.read.schema(Snapshots.dvSchema).parquet(
           dirs.map(d => s"$root/_dv/$d"): _*).count()
       }
       val q = spark.read.format("graft.sources.SnapshotSource").load(root)

@@ -27,6 +27,11 @@ object ChangeFeed {
 
   val opCol = "_op"
 
+  /** The columns a feed frame carries about each change rather than the
+    * row: the change type and, on the streaming and `table_changes`
+    * reads, the commit version and timestamp. */
+  val metaCols = Seq(opCol, "_commit_version", "_commit_timestamp")
+
   /** The change feed a MERGE of `source` into `target` by `keyCols`
     * produces (whole-row update semantics, duplicate source keys
     * pre-collapsed as in Merge). Columns: target schema + `_op`. */

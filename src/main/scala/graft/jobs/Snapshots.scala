@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Snapshot-versioned parquet table: a minimal copy-on-write transaction
   * log giving plain parquet the two properties the lifecycle operators'
@@ -2654,10 +2654,15 @@ object Snapshots {
     readDelta(spark, root, v).dv
   }
 
-  /** The union frame of the named DV sidecar directories:
-    * (file_path, row_index) pairs in `_metadata` spelling. */
+  /** The fixed layout of a `_dv/` sidecar: each deleted row's data file
+    * (`_metadata.file_path` spelling) and its row index in that file.
+    * Readers pass it instead of inferring it, which would cost a job. */
+  private[graft] val dvSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("row_index", LongType)))
+
+  /** The union frame of the named DV sidecar directories. */
   private def dvFrame(spark: SparkSession, qroot: Path, dirs: Seq[String]): DataFrame =
-    spark.read.parquet(dirs.map(d => new Path(qroot, s"_dv/$d").toString): _*)
+    spark.read.schema(dvSchema).parquet(dirs.map(d => new Path(qroot, s"_dv/$d").toString): _*)
 
   /** DV-filter `df` (a frame whose plan still exposes `_metadata`),
     * KEEPING the `__pos_path`/`__pos_idx` columns for callers that need
@@ -2685,7 +2690,7 @@ object Snapshots {
       .drop("__pos_path", "__pos_idx")
 
   /** The version's rows with a `__file` column naming each row's data
-    * file — the victim-detection input the COW paths semi-join on.
+    * file — the input of `mergeClauses`' touched-files detection.
     * Uses the scan's own `_metadata.file_path` (works under the DV
     * anti-join, where `input_file_name()` would see two sources), and
     * applies live deletion vectors so already-deleted rows can never
@@ -3642,81 +3647,6 @@ object Snapshots {
     name
   }
 
-  /** File-granular copy-on-write delete: rewrite ONLY the files holding a
-    * doomed key; every other file carries over by reference. With
-    * `changeFeed = true` the commit publishes its `_op = delete` rows
-    * under `_changes/` (computed against the pre-delete version), reachable
-    * only through the committed delta's `#cdf:` header. */
-  def deleteKeysCow(
-      spark: SparkSession, root: String, keys: DataFrame, keyCols: Seq[String],
-      changeFeed: Boolean = false, txn: Option[Long] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val v = prev + 1
-    val (_, qroot) = fsOf(spark, root)
-    val prevFiles = versionFileList(spark, root, prev)
-    val prevDelta = readDelta(spark, root, prev)
-    val current = readVersionWithFile(spark, root, prev)
-    // the keyset is probed three times (doomed-file detection, the feed,
-    // the kept-rows anti-join) — materialize it once; it is O(doomed
-    // keys) by definition
-    val keySet = keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var doomedRowsP: Option[DataFrame] = None // see doomedRows below
-    try {
-      // input_file_name() yields URI spellings (file:///x) that differ from
-      // Path.toString (file:/x) — normalize through Path before comparing
-      val doomedFiles = current.join(keySet, keyCols, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(r => new Path(r.getString(0)).toString).toSet
-      val rewritten = prevFiles.filter(f => doomedFiles.contains(new Path(qroot, f).toString))
-      // EVERY doomed path must resolve to a manifest entry: a partial
-      // resolution means path spellings diverged and unmatched files would
-      // silently keep their doomed rows
-      require(rewritten.size == doomedFiles.size,
-        s"${doomedFiles.size} files hold doomed keys but only ${rewritten.size} " +
-          s"resolved to log entries — path normalization bug? $doomedFiles")
-      val prevSchemaS = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-      // deleted rows live ONLY in the doomed files (that is the detection
-      // join's definition), so the feed's semi-join over those files'
-      // rows is identical to the old full-table read — the staged feed
-      // costs O(doomed files), never O(table). With a feed requested the
-      // rows feed TWO passes (feed + kept-rows write): read+decode them
-      // once (r20); the persist is bounded by the commit's intrinsic
-      // rewrite size.
-      def doomedRows: DataFrame = doomedRowsP.getOrElse {
-        val r0 = readFilesAs(spark, qroot,
-          rewritten.map(f => new Path(qroot, f).toString),
-          prevSchemaS, prevDelta.props, prevDelta.dv)
-        val r =
-          if (changeFeed)
-            r0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else r0
-        doomedRowsP = Some(r)
-        r
-      }
-      val cdfDir =
-        if (!changeFeed) None
-        else Some(stageChangeFeed(spark, qroot, v, ChangeFeed.deleteFeed(
-          if (rewritten.isEmpty) readVersion(spark, root, prev).limit(0)
-          else doomedRows, keySet, keyCols)))
-      def commitOrCleanFeed(d: Delta): Long =
-        commitRewrite(spark, root, v, d, staged = cdfDir.map(n => s"_changes/$n").toSeq)
-      if (doomedFiles.isEmpty) {
-        return commitOrCleanFeed(Delta(Nil, Nil, txn = txn, cdf = cdfDir,
-          schema = prevDelta.schema, props = prevDelta.props, op = Some("delete"),
-          dv = prevDelta.dv))
-      }
-      val kept = doomedRows.join(keySet, keyCols, "left_anti")
-      val (newFiles, stats) = writeCommitFiles(spark, root, v, kept, prevDelta.props, prevSchemaS)
-      commitOrCleanFeed(Delta(newFiles, rewritten, txn = txn, cdf = cdfDir,
-        schema = prevDelta.schema, props = prevDelta.props, stats = stats,
-        op = Some("delete"), dv = prevDelta.dv))
-    } finally {
-      keySet.unpersist(blocking = false)
-      doomedRowsP.foreach(_.unpersist(blocking = false))
-    }
-  }
-
   /** Candidate files for a predicate rewrite: the subset of `version`'s
     * files whose recorded stats envelopes (write-time `#stats:` lines,
     * via `statsIndex`) INTERSECT the predicate's integral bounds —
@@ -4619,6 +4549,14 @@ object Snapshots {
       matched = Seq(MergeWhen.updateAll()), notMatched = Seq(MergeWhen.insertAll()),
       changeFeed = changeFeed, txn = txn)
 
+  /** Copy-on-write key DELETE: `mergeClauses` with `WHEN MATCHED THEN
+    * DELETE` over `keys`, recorded as `#op:delete`. */
+  def deleteKeysCow(
+      spark: SparkSession, root: String, keys: DataFrame, keyCols: Seq[String],
+      changeFeed: Boolean = false, txn: Option[Long] = None): Long =
+    mergeRewrite(spark, root, keys.select(keyCols.map(col): _*), keyCols,
+      Seq(MergeWhen.delete()), Nil, Nil, changeFeed, txn, op = "delete")
+
   /** One WHEN clause of a clause-level MERGE (`mergeClauses`).
     * Expression strings reference the source row as `s.<col>` and the
     * target row as `t.<col>`; a bare name resolves target-first (the
@@ -4717,28 +4655,46 @@ object Snapshots {
     * multiple-source-rows-matched error; the per-key counts ride the
     * candidate-detection pass, so the check costs no extra scan);
     * `spark.graft.merge.allowDuplicateSource=true` restores the old
-    * apply-an-arbitrary-one behavior. Duplicate keys among rows
-    * matching NO target row are deduplicated before INSERT — a
-    * documented divergence from ANSI (which would insert them all).
+    * apply-an-arbitrary-one behavior. When the only MATCHED clause is
+    * one unconditional DELETE, duplicates are admitted (Delta's
+    * isOnlyOneUnconditionalDelete: every match deletes the same row).
+    * Duplicate keys among rows matching NO target row are deduplicated
+    * before INSERT — a documented divergence from ANSI (which would
+    * insert them all).
     *
     * Schema evolution follows Delta's rule: only the star actions admit
     * NEW source columns (widening the table); column-level clauses must
     * name existing target columns, and every assignment is cast to the
-    * target column's type. A generated column the applying clause does
-    * not assign is computed from the new row; an assigned one is
-    * VALIDATED (contradiction refusal). Column DEFAULTs fill NULLs as on
+    * target column's type. A star action never reads the change feed's
+    * metadata columns (`ChangeFeed.metaCols`): a feed frame as source
+    * neither widens the table with them nor writes them. A generated
+    * column the applying clause does not assign is computed from the new
+    * row; an assigned one is VALIDATED (contradiction refusal). Column DEFAULTs fill NULLs as on
     * any ingest. CHECK constraints gate changed rows only — O(changed),
     * never O(table).
     *
     * With `changeFeed = true` the commit publishes the row-level change
     * set (insert / update_preimage / update_postimage / delete) exactly
-    * as the relational diff implies — conditional clauses included. */
+    * as the relational diff implies — conditional clauses included.
+    *
+    * A merge with no INSERT clause whose detection finds no candidate
+    * file commits metadata only: no data file and no feed. The commit
+    * records `#op:merge` (`deleteKeysCow` records `delete`). */
   def mergeClauses(
       spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
       matched: Seq[MergeWhen] = Nil,
       notMatched: Seq[MergeWhen] = Nil,
       notMatchedBySource: Seq[MergeWhen] = Nil,
-      changeFeed: Boolean = false, txn: Option[Long] = None): Long = {
+      changeFeed: Boolean = false, txn: Option[Long] = None): Long =
+    mergeRewrite(spark, root, source, keyCols, matched, notMatched,
+      notMatchedBySource, changeFeed, txn, op = "merge")
+
+  /** `mergeClauses` recording `op` as the commit's `#op:`. */
+  private def mergeRewrite(
+      spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
+      matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
+      notMatchedBySource: Seq[MergeWhen],
+      changeFeed: Boolean, txn: Option[Long], op: String): Long = {
     require(matched.forall(c => Set("update", "update*", "delete")(c.kind)),
       s"matched clauses must be UPDATE/DELETE: ${matched.map(_.kind)}")
     require(notMatched.forall(c => Set("insert", "insert*")(c.kind)),
@@ -4756,6 +4712,8 @@ object Snapshots {
     val props = prevDelta.props
     val src = source.dropDuplicates(keyCols)
     val srcCols = src.columns.toSeq
+    // the source columns a star action reads: never the feed's metadata
+    val starCols = srcCols.filterNot(c => ChangeFeed.metaCols.exists(_.equalsIgnoreCase(c)))
     require(keyCols.forall(k => srcCols.exists(_.equalsIgnoreCase(k))),
       s"source is missing merge key(s): ${keyCols.filterNot(k => srcCols.exists(_.equalsIgnoreCase(k)))}")
     val prevSchema = prevDelta.schema
@@ -4766,7 +4724,7 @@ object Snapshots {
     val hasStar = (matched ++ notMatched).exists(_.kind.endsWith("*"))
     val merged =
       if (hasStar) mergedSchema(Some(prevSchema),
-        assignPhysical(Some(prevSchema), src.schema, props))
+        assignPhysical(Some(prevSchema), src.select(starCols.map(col): _*).schema, props))
       else prevSchema
     val tgtNames = merged.fieldNames.toSeq
     val tracked = rowTrackingOn(props) && tgtNames.contains(rowIdCol)
@@ -4781,7 +4739,7 @@ object Snapshots {
     // NULL — minus what is computed instead (an unsupplied generated
     // column, the engine-managed row id)
     val starSet: Map[String, String] = merged.fields.toSeq.flatMap { f =>
-      srcCols.find(_.equalsIgnoreCase(f.name)) match {
+      starCols.find(_.equalsIgnoreCase(f.name)) match {
         case _ if tracked && f.name == rowIdCol => None
         case Some(c) => Some(f.name -> s"s.`$c`")
         case None if gens.exists(_._1 == f.name) => None
@@ -4831,7 +4789,7 @@ object Snapshots {
       else Some(notMatchedBySource.map(_.condition
         .map(t => expr(mergeExprSql(spark, t, tgtNames, srcCols, allowSource = false)))
         .getOrElse(lit(true))).reduce(_ || _))
-    val allowDupSource = spark.conf
+    val allowDupSource = matched == Seq(MergeWhen.delete()) || spark.conf
       .getOption("spark.graft.merge.allowDuplicateSource").contains("true")
     val rewritten: Seq[String] =
       if (matched.isEmpty && notMatchedBySource.isEmpty) Nil
@@ -4872,6 +4830,9 @@ object Snapshots {
             s"resolved to log entries — path normalization bug? $want")
         rw
       }
+    if (rewritten.isEmpty && notMatched.isEmpty)
+      return commitRewrite(spark, root, v, Delta(Nil, Nil, txn = txn,
+        schema = Some(merged.json), props = props, op = Some(op), dv = prevDelta.dv))
     // ---- one join: candidate rows ⋈ source rows
     val srcR = src.select(
       srcCols.map(c => col(c).as(srcSidePrefix + c)) :+
@@ -4911,20 +4872,21 @@ object Snapshots {
     val withAct1 =
       if (!tracked) withAct0
       else withAct0.withColumn("__rid", lit(hwm + 1) + monotonically_increasing_id())
+    val deleteIds = clauses.filter(_.isDelete).map(_.id)
+    val writers = clauses.filterNot(_.isDelete)
     // one persist rule: the write always reads this frame; the staged
     // feed and the changed-rows gates (CHECK constraints, generated
-    // columns) read it again, and then it is materialized ONCE —
-    // O(candidate rows + source rows), never O(table) — which also pins
-    // the row ids identical between the staged feed and the committed
-    // data files. With no second reader a cache only adds Spark jobs.
-    val gated = props.keys.exists(k =>
+    // columns; only a clause that writes rows has any to gate) read it
+    // again, and then it is materialized ONCE — O(candidate rows +
+    // source rows), never O(table) — which also pins the row ids
+    // identical between the staged feed and the committed data files.
+    // With no second reader a cache only adds Spark jobs.
+    val gated = writers.nonEmpty && props.keys.exists(k =>
       k.startsWith(constraintPrefix) || k.startsWith(generatedPrefix))
     val withAct =
       if (changeFeed || gated)
         withAct1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else withAct1
-    val deleteIds = clauses.filter(_.isDelete).map(_.id)
-    val writers = clauses.filterNot(_.isDelete)
     val insertIds = iResolved.map(_.id)
     val updateIds = writers.map(_.id).filterNot(insertIds.contains)
     val outCols: Seq[Column] = merged.fields.toSeq.map { f =>
@@ -4973,15 +4935,17 @@ object Snapshots {
           .filter(_._2.toLong > hwm)
       commitRewrite(spark, root, v, Delta(newFiles, rewritten, txn = txn, cdf = cdfDir,
         schema = Some(merged.json), props = props ++ idPatch, stats = stats,
-        op = Some("merge"), dv = prevDelta.dv),
+        op = Some(op), dv = prevDelta.dv),
         staged = cdfDir.map(n => s"_changes/$n").toSeq)
     }
     try {
       // gates on CHANGED rows only (updated + inserted), O(changed) —
       // inside the try so a refused merge still unpersists
-      val changed = rowsOf(out, !inIds(deleteIds :+ "skip" :+ "keep"))
-      checkConstraints(changed, props)
-      withGenerated(changed, props) // contradiction probe on assigned values
+      if (gated) {
+        val changed = rowsOf(out, !inIds(deleteIds :+ "skip" :+ "keep"))
+        checkConstraints(changed, props)
+        withGenerated(changed, props) // contradiction probe on assigned values
+      }
       commitPhase()
     } finally withAct.unpersist(blocking = false)
   }
@@ -5053,87 +5017,43 @@ object Snapshots {
 
   /** Apply ONE CDC micro-batch (a `ChangeFeed`-shaped frame: rows +
     * `_op` ∈ insert / update_preimage / update_postimage / delete) to a
-    * DOWNSTREAM snapshot table as one exactly-once COW commit —
-    * incremental view maintenance across two logged tables (source CDC
-    * stream → derived table). The batch id rides the commit (`#txn:`),
-    * so a crash-replayed batch is a recognized no-op; return false =
-    * already applied.
-    *
-    * One commit does the whole step: files holding any AFFECTED key
-    * (pre-images, deletes, and upsert targets) are rewritten without
-    * those rows, the insert/post-image rows land as new files,
-    * everything else carries by reference — O(changed files + batch),
-    * never O(table). The feed must be ONE commit's change set (pace the
-    * stream with `maxVersionsPerTrigger = 1`): a multi-commit batch is
-    * an unordered multiset in which an insert and its own later update
+    * DOWNSTREAM snapshot table as one exactly-once commit — incremental
+    * view maintenance across two logged tables. The batch id rides the
+    * commit (`#txn:`), so a replayed batch is a no-op; return false =
+    * already applied. The commit is the apply-changes MERGE: a key with
+    * a delete or pre-image and no post-image deletes, every other row
+    * upserts. The feed must be ONE commit's change set (pace the stream
+    * with `maxVersionsPerTrigger = 1`): a multi-commit batch is an
+    * unordered multiset in which an insert and its own later update
     * would double-apply. */
   def applyCdcBatch(
       spark: SparkSession, root: String, feed: DataFrame,
       keyCols: Seq[String], batchId: Long): Boolean = {
-    // the batch feed is consumed by four passes (drop-keys, adds,
-    // affected-file detection, the kept-rows write) — materialize it
-    // once per micro-batch instead of re-reading the feed files per
-    // consumer; a CDC batch is O(changed rows) by contract
-    val fed = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyCdcBatchOn(spark, root, fed, keyCols, batchId)
-    finally fed.unpersist(blocking = false)
-  }
-
-  private def applyCdcBatchOn(
-      spark: SparkSession, root: String, feed: DataFrame,
-      keyCols: Seq[String], batchId: Long): Boolean = {
-    val dropKeys = feed
-      .where(col(ChangeFeed.opCol).isin("update_preimage", "delete"))
-      .select(keyCols.map(col): _*).dropDuplicates(keyCols)
-    // CDC METADATA columns (_op, _commit_version, _commit_timestamp)
-    // describe the feed, not the rows — a replica materializing them
-    // would silently widen its schema on the first applied batch
-    val adds0 = feed
-      .where(col(ChangeFeed.opCol).isin("insert", "update_postimage"))
-      .drop(ChangeFeed.opCol, "_commit_version", "_commit_timestamp")
+    val isUpsert = col(ChangeFeed.opCol).isin("insert", "update_postimage")
+    val upserts = feed.where(isUpsert)
     if (versions(spark, root).isEmpty) {
-      initTxn(spark, root, adds0, Some(batchId))
-      return true
+      initTxn(spark, root, upserts.drop(ChangeFeed.metaCols: _*), Some(batchId))
+      true
+    } else if (batchId <= lastCommittedBatch(spark, root)) false
+    else {
+      // the keys with a delete or pre-image and no post-image
+      val deletes = feed.groupBy(keyCols.map(col): _*)
+        .agg(max(isUpsert).as("__upsert"))
+        .where(!col("__upsert"))
+        .select(keyCols.map(col) :+ lit("delete").as(ChangeFeed.opCol): _*)
+      // the source is read by the detection pass and the rewrite: build
+      // it once; a CDC batch is O(changed rows) by contract
+      val source = upserts.drop(ChangeFeed.metaCols.filterNot(_ == ChangeFeed.opCol): _*)
+        .unionByName(deletes, allowMissingColumns = true)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val op = s"s.${ChangeFeed.opCol}"
+      try mergeClauses(spark, root, source, keyCols,
+        matched = Seq(MergeWhen.delete(Some(s"$op = 'delete'")), MergeWhen.updateAll()),
+        notMatched = Seq(MergeWhen.insertAll(Some(s"$op <> 'delete'"))),
+        txn = Some(batchId))
+      finally source.unpersist(blocking = false)
+      true
     }
-    // the replica's generated columns materialize/validate on its OWN
-    // property set (an upstream feed may predate or contradict them)
-    val adds = withGenerated(adds0, readDelta(spark, root, latestVersion(spark, root)).props)
-    if (batchId <= lastCommittedBatch(spark, root)) return false
-    val prev = latestVersion(spark, root)
-    val v = prev + 1
-    val (_, qroot) = fsOf(spark, root)
-    val prevDelta = readDelta(spark, root, prev)
-    val prevFiles = versionFileList(spark, root, prev)
-    val prevSchema = prevDelta.schema
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(readVersion(spark, root, prev).schema)
-    val merged = mergedSchema(Some(prevSchema),
-      assignPhysical(Some(prevSchema), adds.schema, prevDelta.props))
-    checkConstraints(conform(adds, merged), prevDelta.props)
-    val affected = dropKeys
-      .unionByName(adds.select(keyCols.map(col): _*))
-      .dropDuplicates(keyCols)
-    val current = readVersionWithFile(spark, root, prev)
-    val matchedFiles = current.join(affected, keyCols, "left_semi")
-      .select(col("__file")).distinct()
-      .collect().map(r => new Path(r.getString(0)).toString).toSet
-    val rewritten = prevFiles.filter(f => matchedFiles.contains(new Path(qroot, f).toString))
-    require(rewritten.size == matchedFiles.size,
-      s"${matchedFiles.size} files hold affected keys but only ${rewritten.size} " +
-        s"resolved to log entries — path normalization bug? $matchedFiles")
-    val kept =
-      if (rewritten.isEmpty) conform(adds, merged)
-      else conform(
-          readFilesAs(spark, qroot,
-              rewritten.map(f => new Path(qroot, f).toString),
-              Some(prevSchema), prevDelta.props, prevDelta.dv)
-            .join(affected, keyCols, "left_anti"), merged)
-        .unionByName(conform(adds, merged))
-    val (newFiles, stats) = writeCommitFiles(spark, root, v, kept, prevDelta.props, Some(merged))
-    commitRewrite(spark, root, v, Delta(newFiles, rewritten, txn = Some(batchId),
-      schema = Some(merged.json), props = prevDelta.props, stats = stats,
-      op = Some("merge"), dv = prevDelta.dv))
-    true
   }
 
   private val constraintPrefix = "constraint."

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Optimizer rule keeping the NATIVE scan path for snapshot versions
   * that carry merge-on-read deletion vectors: a
@@ -48,9 +48,6 @@ object DeletionVectorsRule extends Rule[LogicalPlan] with PredicateHelper {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
   }
-
-  private val dvSchema = StructType(Seq(
-    StructField("file_path", StringType), StructField("row_index", LongType)))
 
   private def dvCarrying(l: LogicalRelation): Boolean = l.relation match {
     case fs: HadoopFsRelation =>
@@ -157,7 +154,7 @@ object DeletionVectorsRule extends Rule[LogicalPlan] with PredicateHelper {
       HadoopFsRelation(
         new ExplicitPartitionedFileIndex(spark, qroot, dvFiles, StructType(Nil)),
         partitionSchema = StructType(Nil),
-        dataSchema = dvSchema,
+        dataSchema = graft.jobs.Snapshots.dvSchema,
         bucketSpec = None,
         fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
         options = Map.empty)(spark),

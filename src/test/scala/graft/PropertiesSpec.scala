@@ -64,15 +64,23 @@ class PropertiesSpec extends AnyFunSuite {
     // the model check above over a snapshot table with the change feed
     // on. The seeded op sequence draws the whole-row API upsert, the SQL
     // upsert, a conditional clause merge (delete / guarded update /
-    // guarded insert) and the four predicate DML routes: DELETE and
-    // UPDATE, copy-on-write and merge-on-read. Predicates include ones
-    // no file can hold, ones every file may hold but no row matches, and
-    // a repeat of the last merge-on-read delete's (rows a live deletion
-    // vector already removed). After every commit the head equals the
-    // model, and the commit's feed replayed onto the previous head gives
-    // the new head.
+    // guarded insert), the four predicate DML routes (DELETE and UPDATE,
+    // copy-on-write and merge-on-read) and the key delete. Predicates
+    // include ones no file can hold, ones every file may hold but no row
+    // matches, and a repeat of the last merge-on-read delete's (rows a
+    // live deletion vector already removed). The key delete's key frames
+    // hold duplicates, keys absent from the table and keys whose rows a
+    // deletion vector removed (a MOR update's pre-image, a MOR delete's
+    // row, since re-inserted or not).
+    // After every commit the head equals the model, the commit's feed
+    // replayed onto the previous head gives the new head, and the same
+    // feed applied to a replica as one CDC batch (batch id = version)
+    // keeps the replica equal to the model.
     val rnd = new scala.util.Random(23)
     val root = java.nio.file.Files.createTempDirectory("merge-prop-snap").toFile.getAbsolutePath + "/t"
+    val replica = root + "-replica"
+    def feedReplica(v: Long): Boolean = Snapshots.applyCdcBatch(spark, replica,
+      Snapshots.changesBetween(spark, root, v - 1, v), Seq("k"), batchId = v)
     type Model = Map[Long, (Long, String)]
     def randRows(n: Int): Model = // one row per key: MERGE refuses duplicate matches
       Seq.fill(n)(rnd.nextInt(30).toLong -> ((rnd.nextInt(1000).toLong, s"p${rnd.nextInt(3)}"))).toMap
@@ -91,13 +99,17 @@ class PropertiesSpec extends AnyFunSuite {
     var lastMorDelete: Option[Pred] = None
     var dmlOps = 0
     var dvRepeats = 0
-    val routes = Seq("api", "sql", "clauses", "delete", "deleteMor", "update", "updateMor")
+    var dvRemoved = Set.empty[Long] // keys whose rows a deletion vector removed
+    var dvKeyDraws = 0
+    val routes = Seq("api", "sql", "clauses", "delete", "deleteMor", "update", "updateMor", "deleteKeys")
     val ops = rnd.shuffle(Seq.fill(3)(routes).flatten)
     var model = randRows(12)
     Snapshots.init(spark, root, frame(model).repartition(3))
+    assert(feedReplica(0L))
     ops.zipWithIndex.foreach { case (route, i0) =>
       val i = i0 + 1
       val batch = randRows(1 + rnd.nextInt(8))
+      var delKeys = Seq.empty[Long]
       lazy val pred: Pred = {
         dmlOps += 1
         dmlOps % 4 match {
@@ -143,6 +155,7 @@ class PropertiesSpec extends AnyFunSuite {
           modelDelete()
           Snapshots.deleteWhere(spark, root, pred._1, changeFeed = true)
         case "deleteMor" =>
+          dvRemoved ++= model.collect { case (k, (v, p)) if pred._2(k, v, p) => k }
           modelDelete()
           lastMorDelete = Some(pred)
           Snapshots.deleteWhereMor(spark, root, pred._1, changeFeed = true)
@@ -150,18 +163,38 @@ class PropertiesSpec extends AnyFunSuite {
           modelUpdate()
           Snapshots.updateWhere(spark, root, set, pred._1, changeFeed = true)
         case "updateMor" =>
+          dvRemoved ++= model.collect { case (k, (v, p)) if pred._2(k, v, p) => k }
           modelUpdate()
           Snapshots.updateWhereMor(spark, root, set, pred._1, changeFeed = true)
+        case "deleteKeys" =>
+          val present = rnd.shuffle(model.keys.toSeq.sorted).take(1 + rnd.nextInt(3))
+          val gone = dvRemoved.toSeq.sorted.take(2)
+          dvKeyDraws += gone.size
+          delKeys = present ++ present.take(1) ++ Seq(100L + rnd.nextInt(5)) ++ gone
+          model --= delKeys
+          Snapshots.deleteKeysCow(spark, root, delKeys.toDF("k"), Seq("k"), changeFeed = true)
       }
-      val what = if (routes.take(3).contains(route)) s"batch=$batch" else s"pred=${pred._1}"
+      val what =
+        if (routes.take(3).contains(route)) s"batch=$batch"
+        else if (route == "deleteKeys") s"keys=$delKeys"
+        else s"pred=${pred._1}"
       assert(v == i.toLong, s"$route op $i committed v$v")
       val head = rows(Snapshots.readVersion(spark, root, v))
       assert(head == modelRows(model), s"$route op $i diverged from the model ($what)")
       val replayed = ChangeFeed.applyChangeFeed(Snapshots.readVersion(spark, root, v - 1)
         .select("k", "v", "p"), Snapshots.changesBetween(spark, root, v - 1, v), Seq("k"))
       assert(rows(replayed) == head, s"$route op $i: feed replay diverged from the head ($what)")
+      assert(feedReplica(v), s"$route op $i: the replica refused batch $v")
+      assert(rows(Snapshots.readVersion(spark, replica)) == head,
+        s"$route op $i: the replica diverged from the model ($what)")
     }
     assert(dmlOps == 12 && dvRepeats > 0, s"$dmlOps DML ops, $dvRepeats repeated a MOR delete")
+    assert(dvKeyDraws > 0, "no key delete drew a key a deletion vector removed")
+    info(s"$dvKeyDraws keys drawn from rows a deletion vector removed")
+    // a batch id already applied is a no-op that commits nothing
+    val replicaHead = Snapshots.latestVersion(spark, replica)
+    assert(!feedReplica(ops.size.toLong))
+    assert(Snapshots.latestVersion(spark, replica) == replicaHead)
   }
 
   test("A12 weighted average of per-group averages equals the global average") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 /** Merge-on-read deletion vectors: `deleteWhereMor` deletes rows with
   * ZERO data files rewritten (a `_dv/` sidecar of (file, row_index)
@@ -80,6 +80,19 @@ class DeletionVectorsSpec extends AnyFunSuite {
     assert(Snapshots.rowCount(spark, root).contains(240L), "stats-only count returns after materialize")
     // nothing left to materialize
     assert(Snapshots.materializeDeletionVectors(spark, root) == -1L)
+  }
+
+  test("vectors are read with their fixed schema: no inference job on a read") {
+    val root = tmp()
+    Snapshots.init(spark, root,
+      (1L to 300L).map(i => (i, i * 1.0)).toDF("k", "v").repartition(3))
+    Snapshots.deleteWhereMor(spark, root, "k % 10 = 0")
+    val (n, events) = SparkEvents.record(spark)(Snapshots.readVersion(spark, root).count())
+    assert(n == 270L)
+    // the vector's broadcast, the scan and the count's final stage; an
+    // inferred schema costs one more
+    assert(events.jobs == 3, s"a read over one vector submitted ${events.jobs} jobs")
+    assert(Snapshots.dvSchema.fieldNames.toSeq == Seq("file_path", "row_index"))
   }
 
   test("MOR on partitioned and column-mapped tables; candidates stats-pruned") {

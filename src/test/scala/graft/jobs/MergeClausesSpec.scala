@@ -158,6 +158,74 @@ class MergeClausesSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.merge.allowDuplicateSource")
   }
 
+  test("a lone unconditional MATCHED DELETE admits duplicate source keys; a conditional one does not") {
+    val root = tmp()
+    Snapshots.init(spark, root,
+      (1L to 10L).map(i => (i, i * 1.0)).toDF("k", "v").repartition(2))
+    val dupKeys = Seq(3L, 3L, 4L, 4L, 4L, 99L).toDF("k")
+    // every match deletes the same row, so duplicates are not ambiguous
+    val v1 = Snapshots.mergeClauses(spark, root, dupKeys, Seq("k"),
+      matched = Seq(Snapshots.MergeWhen.delete()))
+    val v2 = Snapshots.deleteKeysCow(spark, root, Seq(5L, 5L).toDF("k"), Seq("k"))
+    assert((v1, v2) == ((1L, 2L)))
+    assert(Snapshots.readVersion(spark, root).select("k").as[Long].collect().sorted.toSeq
+      == Seq(1L, 2L, 6L, 7L, 8L, 9L, 10L))
+    assert(Snapshots.readDelta(spark, root, 1L).op.contains("merge"))
+    assert(Snapshots.readDelta(spark, root, 2L).op.contains("delete"))
+    // a condition makes the choice of duplicate matter: still refused
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.mergeClauses(spark, root, Seq((6L, 1.0), (6L, 2.0)).toDF("k", "v"), Seq("k"),
+        matched = Seq(Snapshots.MergeWhen.delete(Some("s.v > 1"))))
+    }
+    assert(e.getMessage.contains("multiple source rows"))
+    // so is an unconditional DELETE followed by another MATCHED clause
+    intercept[IllegalArgumentException] {
+      Snapshots.mergeClauses(spark, root, Seq((6L, 1.0), (6L, 2.0)).toDF("k", "v"), Seq("k"),
+        matched = Seq(Snapshots.MergeWhen.delete(), Snapshots.MergeWhen.updateAll()))
+    }
+    assert(Snapshots.latestVersion(spark, root) == 2L)
+  }
+
+  test("a star merge never copies the change feed's metadata columns into the table") {
+    val root = tmp()
+    target(root)
+    val schema0 = Snapshots.readVersion(spark, root).schema
+    // a feed-shaped source: rows plus _op, _commit_version, _commit_timestamp
+    val src = Seq((1L, -1.0, "u1", "update_postimage", 7L), (400L, 400.0, "n400", "insert", 7L))
+      .toDF("k", "v", "s", ChangeFeed.opCol, "_commit_version")
+      .withColumn("_commit_timestamp", current_timestamp())
+      .withColumn("extra", lit(1))
+    Snapshots.mergeCow(spark, root, src, Seq("k"))
+    val head = Snapshots.readVersion(spark, root)
+    // the ordinary new column still widens the table; the metadata does not
+    assert(head.schema.fieldNames.toSeq == schema0.fieldNames.toSeq :+ "extra")
+    assert(head.where(col("k").isin(1L, 400L)).select("k", "v", "s").as[(Long, Double, String)]
+      .collect().sorted.toSeq == Seq((1L, -1.0, "u1"), (400L, 400.0, "n400")))
+    assert(head.count() == 301L)
+  }
+
+  test("a merge without INSERT that touches no file commits metadata only: no data file, no feed") {
+    val root = tmp()
+    target(root)
+    val files0 = Snapshots.versionFiles(spark, root, 0).toSet
+    val v1 = Snapshots.deleteKeysCow(spark, root, Seq(999L, 999L).toDF("k"), Seq("k"),
+      changeFeed = true)
+    val v2 = Snapshots.mergeClauses(spark, root, Seq((998L, 1.0)).toDF("k", "v"), Seq("k"),
+      matched = Seq(Snapshots.MergeWhen.update(Map("v" -> "s.v"))), changeFeed = true)
+    assert((v1, v2) == ((1L, 2L)))
+    Seq(v1, v2).foreach { v =>
+      val d = Snapshots.readDelta(spark, root, v)
+      assert(d.adds.isEmpty && d.removes.isEmpty && d.cdf.isEmpty, s"v$v: $d")
+      assert(Snapshots.versionFiles(spark, root, v).toSet == files0)
+      assert(Snapshots.changesBetween(spark, root, v - 1, v).isEmpty)
+    }
+    assert(Snapshots.readDelta(spark, root, v1).op.contains("delete"))
+    assert(Snapshots.readDelta(spark, root, v2).op.contains("merge"))
+    assert(!new java.io.File(root, "_changes").exists(), "no feed directory was staged")
+    assert(new java.io.File(root, "data").list().length == 1, "no data directory was written")
+    assert(Snapshots.readVersion(spark, root).count() == 300L)
+  }
+
   test("SQL MERGE with clauses routes through mergeClauses and equals the API result") {
     val rootApi = tmp(); val rootSql = tmp()
     target(rootApi); target(rootSql)

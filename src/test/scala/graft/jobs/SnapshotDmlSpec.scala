@@ -234,18 +234,29 @@ class SnapshotDmlSpec extends AnyFunSuite {
     }
     val pred = "k BETWEEN 100 AND 700"
     val set = Map("v" -> "-v")
+    // the same rows by key: the live keys the predicate matches, and the
+    // update's change set as one CDC batch (applyCdcBatch has no feed)
+    val keys = (100L to 700L).filterNot(_ % 100 == 7)
+    val updateBatch = keys.flatMap(k => Seq((k, k * 1.0, s"s$k", "update_preimage"),
+      (k, -k * 1.0, s"s$k", "update_postimage"))).toDF("k", "v", "s", ChangeFeed.opCol)
     // route → (feed off, feed on) job bounds
     val routes = Seq[(String, (String, Boolean) => Long, (Int, Int))](
-      ("deleteWhere", (r, f) => Snapshots.deleteWhere(spark, r, pred, f), (7, 9)),
-      ("deleteWhereMor", (r, f) => Snapshots.deleteWhereMor(spark, r, pred, f), (3, 5)),
-      ("updateWhere", (r, f) => Snapshots.updateWhere(spark, r, set, pred, f), (7, 9)),
-      ("updateWhereMor", (r, f) => Snapshots.updateWhereMor(spark, r, set, pred, f), (5, 7)),
+      ("deleteKeysCow", (r, f) => Snapshots.deleteKeysCow(spark, r, keys.toDF("k"), Seq("k"), f), (9, 11)),
+      ("applyCdcBatch", (r, _) => {
+        assert(Snapshots.applyCdcBatch(spark, r, updateBatch, Seq("k"), 100L))
+        Snapshots.latestVersion(spark, r)
+      }, (13, 13)),
+      ("deleteWhere", (r, f) => Snapshots.deleteWhere(spark, r, pred, f), (5, 7)),
+      ("deleteWhereMor", (r, f) => Snapshots.deleteWhereMor(spark, r, pred, f), (2, 4)),
+      ("updateWhere", (r, f) => Snapshots.updateWhere(spark, r, set, pred, f), (5, 7)),
+      ("updateWhereMor", (r, f) => Snapshots.updateWhereMor(spark, r, set, pred, f), (4, 6)),
       // every row the predicate matches is already under the live vector
-      ("deleteWhereMor, no row", (r, f) => Snapshots.deleteWhereMor(spark, r, "k % 100 = 7", f), (3, 3)),
-      ("updateWhereMor, no row", (r, f) => Snapshots.updateWhereMor(spark, r, set, "k % 100 = 7", f), (3, 3)),
+      ("deleteWhereMor, no row", (r, f) => Snapshots.deleteWhereMor(spark, r, "k % 100 = 7", f), (2, 2)),
+      ("updateWhereMor, no row", (r, f) => Snapshots.updateWhereMor(spark, r, set, "k % 100 = 7", f), (2, 2)),
       // the optimizer folds the candidate scan to an empty relation
-      ("deleteWhereMor, false, no row", (r, f) => Snapshots.deleteWhereMor(spark, r, "1 = 0", f), (2, 2)))
-    val counts = for ((name, dml, (offMax, onMax)) <- routes; feed <- Seq(false, true)) yield {
+      ("deleteWhereMor, false, no row", (r, f) => Snapshots.deleteWhereMor(spark, r, "1 = 0", f), (1, 1)))
+    val counts = for ((name, dml, (offMax, onMax)) <- routes;
+        feed <- if (name == "applyCdcBatch") Seq(false) else Seq(false, true)) yield {
       val root = table()
       val v = Snapshots.latestVersion(spark, root) + 1
       val (committed, events) = SparkEvents.record(spark)(dml(root, feed))
