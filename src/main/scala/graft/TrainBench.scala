@@ -59,7 +59,7 @@ object TrainBench {
       categoricalCols = Seq("event_type"))
     val (model, fitSec) = time(Pipelines.regression(trainC, cfg).fit(trainC))
     val (scored, scoreSec) = time {
-      val s = model.transform(testC).select(col("value"), col("prediction")).cache()
+      val s = Pipelines.transform(model, testC).select(col("value"), col("prediction")).cache()
       s.count(); s
     }
     val (metrics, metricSec) = time(Pipelines.evaluate(scored, "value"))

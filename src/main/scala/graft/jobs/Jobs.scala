@@ -139,7 +139,7 @@ object Jobs {
     val rowsTrain = trainDf.count()
     val rowsTest = testDf.count()
     val model = pipeline.fit(trainDf)
-    val metrics = graft.ml.Pipelines.evaluate(model.transform(testDf), "trip_duration_min")
+    val metrics = graft.ml.Pipelines.evaluate(graft.ml.Pipelines.transform(model, testDf), "trip_duration_min")
     graft.ml.Pipelines.save(model, modelOut)
     val record = Seq((year.toString, month, algoritmo,
         metrics.rmse, metrics.mae, metrics.r2, rowsTrain, rowsTest,
@@ -180,7 +180,7 @@ object Jobs {
     val sampled = sampleFrac.filter(f => f > 0 && f < 1)
       .fold(curated)(f => curated.sample(withReplacement = false, f, 42L))
     val df = maxRows.filter(_ > 0).fold(sampled)(sampled.limit)
-    val pred0 = model.transform(df)
+    val pred0 = graft.ml.Pipelines.transform(model, df)
     val pred1 = if (pred0.columns.contains("year")) pred0
       else pred0.withColumn("year", lit(year.toString))
     val pred = if (pred1.columns.contains("month")) pred1

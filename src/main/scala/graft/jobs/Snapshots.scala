@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetDriverReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
@@ -4981,13 +4982,15 @@ object Snapshots {
       val d = readDelta(spark, root, v)
       if (d.cdf.isDefined) {
         // a staged feed directory is immutable once its commit published
-        // the #cdf: header, so its inferred schema memoizes per path —
-        // CDC consumers (changesBetween proofs, the streaming source's
-        // per-version batches) re-read the same feed several times and
-        // paid a footer-inference job each time otherwise
+        // the #cdf: header, so its schema memoizes per path — CDC
+        // consumers (changesBetween proofs, the streaming source's
+        // per-version batches) re-read the same feed several times. The
+        // schema comes from the footer on the driver, as Spark's
+        // inference reads it but with no job; Spark infers it where the
+        // footer reader declines
         val p = new Path(qroot, s"_changes/${d.cdf.get}").toString
         val sch = feedSchemaCache.get(p).getOrElse {
-          val inferred = spark.read.parquet(p).schema
+          val inferred = GraftParquetDriverReader.schema(spark, p).getOrElse(spark.read.parquet(p).schema)
           feedSchemaCache.put(p, inferred)
           inferred
         }

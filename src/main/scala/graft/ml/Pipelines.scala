@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.{GraftMlShim, Pipeline, PipelineModel, PipelineStage}
+import org.apache.spark.ml.{GraftMlShim, GraftTreeKernel, Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression.{GBTRegressor, RandomForestRegressor}
@@ -19,7 +19,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - M4 GBTRegressor maxIter=50 maxDepth=5 seed=42 (default algo) /
   *     M5 RandomForestRegressor numTrees=100 maxDepth=10 seed=42;
   *   - M8 RegressionEvaluator rmse/mae/r2;
-  *   - M9 save in Spark's format, load on the driver (`load`).
+  *   - M9 save in Spark's format, load on the driver (`load`);
+  *   - scoring through `transform`: the feature stages run as Spark runs
+  *     them, and a fitted forest or boosted ensemble as the last stage is
+  *     scored by `GraftTreeKernel` from flat arrays, with predictions
+  *     bit-identical to the model's own `transform` (continuous splits
+  *     `x <= threshold`, categorical splits as `CategoricalSplit.shouldGoLeft`
+  *     with primitive `==`, the forest's `reduce(+)` sum over
+  *     `getNumTrees`, the boosted `BLAS.nativeBLAS.ddot` of leaves and
+  *     weights) and the output column's name and metadata unchanged.
   *
   * These are the same JVM classes PySpark delegates to, so fitted models and
   * metrics reproduce the reference bit-for-bit given identical input splits.
@@ -77,6 +85,16 @@ object Pipelines {
           .setMaxIter(cfg.maxIter).setMaxDepth(cfg.gbtMaxDepth).setSeed(cfg.seed)
     }
     new Pipeline().setStages((indexers ++ encoders :+ assembler :+ model).toArray)
+  }
+
+  /** `model.transform(df)`, with a last stage that `GraftTreeKernel`
+    * covers (a forest or boosted ensemble with no leaf column) scored by
+    * the kernel; any other last stage runs its own `transform`. */
+  def transform(model: PipelineModel, df: DataFrame): DataFrame = model.stages.lastOption match {
+    case Some(last) if GraftTreeKernel.covers(last) =>
+      model.transformSchema(df.schema)
+      GraftTreeKernel.transform(last, model.stages.init.foldLeft(df)((d, s) => s.transform(d)))
+    case _ => model.transform(df)
   }
 
   final case class RegressionMetrics(rmse: Double, mae: Double, r2: Double)

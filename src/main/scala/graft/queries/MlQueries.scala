@@ -68,7 +68,7 @@ object MlQueries {
     val model = Pipelines.regression(capped, cfg).fit(capped)
     capped.unpersist(blocking = false)
     val path = s"${dumpDir(dir)}/${tag}_preds"
-    model.transform(test)
+    Pipelines.transform(model, test)
       .select(col("event_id"), col("value"), col("prediction"),
         col("event_hour").cast("long").as("event_hour"))
       .write.mode("overwrite").parquet(path)

@@ -2,10 +2,11 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetDriverReader
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEvents, TestSpark}
 
 /** The snapshot-log contract: historical versions are immutable and
   * readable after later commits, COW deletes rewrite only the files that
@@ -288,6 +289,24 @@ class SnapshotsSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     assert(ops == Map("insert" -> 2L, "update_preimage" -> 1L,
       "update_postimage" -> 1L, "delete" -> 1L), s"got $ops")
+  }
+
+  test("changesBetween takes a fresh feed's schema from its footer: no Spark job per feed") {
+    val root = Files.createTempDirectory("snap").toFile.getAbsolutePath + "/t"
+    Snapshots.init(spark, root, Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "v"))
+    Snapshots.mergeCow(spark, root,
+      Seq((2L, 22.0), (4L, 40.0)).toDF("k", "v"), Seq("k"), changeFeed = true) // v1, feed
+    Snapshots.deleteKeysCow(spark, root, Seq(1L).toDF("k"), Seq("k"), changeFeed = true) // v2, feed
+    Snapshots.append(spark, root, Seq((5L, 50.0)).toDF("k", "v"))          // v3, no feed
+    val (feed, events) = SparkEvents.record(spark)(Snapshots.changesBetween(spark, root, 0, 3))
+    // Spark's schema inference ran one job per feed not yet seen
+    assert(events.jobs == 0, s"${events.jobs} jobs planning a read over two fresh feeds")
+    val ops = feed.groupBy(col(ChangeFeed.opCol)).count().as[(String, Long)].collect().toMap
+    assert(ops == Map("insert" -> 2L, "update_preimage" -> 1L, "update_postimage" -> 1L, "delete" -> 1L))
+    val feeds = new java.io.File(root, "_changes").listFiles().filter(_.isDirectory)
+    assert(feeds.length == 2)
+    feeds.foreach(d => assert(GraftParquetDriverReader.schema(spark, d.getPath) ==
+      Some(spark.read.parquet(d.getPath).schema)))
   }
 
   test("delete feed completes the CRUD CDC: replaying merge+delete feeds reconstructs head") {

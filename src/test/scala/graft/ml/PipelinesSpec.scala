@@ -2,12 +2,17 @@ package graft.ml
 
 import java.nio.file.Files
 
-import org.apache.spark.ml.{Pipeline, PipelineModel, Transformer}
+import org.apache.spark.ml.{GraftTreeFixtures, GraftTreeKernel, Pipeline, PipelineModel, Transformer}
+import org.apache.spark.ml.GraftTreeFixtures.{categorical, continuous, leaf}
 import org.apache.spark.ml.feature.{Bucketizer, OneHotEncoderModel, StandardScaler, StringIndexerModel}
-import org.apache.spark.ml.param.{Param, Params}
-import org.apache.spark.ml.regression.{GBTRegressionModel, RandomForestRegressionModel}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+import org.apache.spark.ml.param.{Param, ParamMap, Params}
+import org.apache.spark.ml.regression.{DecisionTreeRegressor, GBTRegressionModel, RandomForestRegressionModel}
+import org.apache.spark.ml.tree.CategoricalSplit
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEvents, TestSpark}
@@ -173,5 +178,143 @@ class PipelinesSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stageDir, dir))
       intercept[Exception](Pipelines.load(path))
     }
+  }
+
+  // ---- scoring: the tree kernel against the model's own transform ----
+
+  /** TLC-shaped trips over `n` ids in 3 partitions: the scoring job's six
+    * numerics and five categoricals (`Jobs.train`), and a duration label
+    * they explain. */
+  private def trips(n: Long) = {
+    def h(salt: Int, m: Int) = pmod(hash(col("id"), lit(salt)), lit(m))
+    spark.range(0, n, 1, 3)
+      .withColumn("trip_distance", h(1, 300) / 10.0)
+      .withColumn("fare_amount", h(2, 500) / 7.0)
+      .withColumn("passenger_count", h(3, 5).cast("double"))
+      .withColumn("pickup_hour", h(4, 24).cast("double"))
+      .withColumn("pickup_dow", h(5, 7).cast("double"))
+      .withColumn("is_weekend", (h(5, 7) >= 5).cast("double"))
+      .withColumn("payment_type", concat(lit("p"), h(6, 4)))
+      .withColumn("pu_location", concat(lit("z"), h(7, 12)))
+      .withColumn("do_location", concat(lit("z"), h(8, 12)))
+      .withColumn("vendor_id", concat(lit("v"), h(9, 2)))
+      .withColumn("ratecode_id", concat(lit("r"), h(10, 3)))
+      .withColumn("trip_duration_min", col("trip_distance") * 3 + col("pickup_hour") / 4 +
+        when(col("payment_type") === "p1", 6.0).otherwise(0.0) +
+        when(col("pu_location").isin("z3", "z7", "z9"), 9.0).otherwise(0.0))
+  }
+
+  private val tripsCfg = RegressionConfig(label = "trip_duration_min",
+    numericCols = Seq("trip_distance", "fare_amount", "passenger_count", "pickup_hour", "pickup_dow", "is_weekend"),
+    categoricalCols = Seq("payment_type", "pu_location", "do_location", "vendor_id", "ratecode_id"),
+    maxIter = 6, gbtMaxDepth = 4, numTrees = 12, rfMaxDepth = 6)
+
+  /** Scoring rows: the training ids, ids with categories no indexer saw,
+    * and ids with a NaN numeric (the assembler keeps NaN). */
+  private def tripsToScore = trips(1600)
+    .withColumn("pu_location", when(col("id") % 50 === 7, lit("unseen")).otherwise(col("pu_location")))
+    .withColumn("vendor_id", when(col("id") % 70 === 3, lit("v9")).otherwise(col("vendor_id")))
+    .withColumn("fare_amount", when(col("id") % 40 === 11, lit(Double.NaN)).otherwise(col("fare_amount")))
+
+  /** Names of the classes whose functions a frame's UDFs run. */
+  private def udfOwners(df: DataFrame): Seq[String] = df.queryExecution.analyzed.flatMap(_.expressions)
+    .flatMap(_.collect { case u: ScalaUDF => u.function.getClass.getName })
+
+  private def scoredByKernel(df: DataFrame): Boolean = udfOwners(df).exists(_.contains("GraftTreeKernel"))
+
+  /** `kernel` and `reference` have equal schemas, metadata included, and
+    * equal predictions on every row, compared by raw bits; `kernel`
+    * collects in at least two tasks. */
+  private def sameScores(kernel: DataFrame, reference: DataFrame, key: String = "id"): Unit = {
+    assert(kernel.schema == reference.schema)
+    assert(kernel.schema("prediction").metadata == reference.schema("prediction").metadata)
+    def bits(df: DataFrame) = df.select(col(key), col("prediction")).collect()
+      .map(r => r.get(0).toString -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).sortBy(_._1).toSeq
+    val (got, events) = SparkEvents.record(spark)(bits(kernel))
+    assert(events.stages.map(_.numTasks).sum >= 2, "the kernel ran in fewer than two tasks")
+    val want = bits(reference)
+    assert(got.nonEmpty && got.length == want.length)
+    val diff = got.zip(want).filter { case (a, b) => a != b }
+    assert(diff.isEmpty, s"${diff.length} of ${got.length} predictions differ, first ${diff.take(3)}")
+  }
+
+  test("kernel: RF and GBT fitted on TLC-shaped trips score bit-identically, unseen categories and NaN included") {
+    val train = trips(1200)
+    Seq("rf" -> classOf[RandomForestRegressionModel], "gbt" -> classOf[GBTRegressionModel]).foreach { case (algo, cls) =>
+      val model = Pipelines.regression(train, tripsCfg.copy(algo = algo)).fit(train)
+      assert(model.stages.last.getClass == cls)
+      // the one-hot features are categorical to the trees
+      assert(GraftTreeFixtures.splits(model.stages.last).exists(_.isInstanceOf[CategoricalSplit]),
+        s"$algo: no categorical split")
+      val scored = Pipelines.transform(model, tripsToScore)
+      assert(scoredByKernel(scored) && !scoredByKernel(model.transform(tripsToScore)))
+      sameScores(scored, model.transform(tripsToScore))
+      // the load on the driver scores alike
+      sameScores(Pipelines.transform(Pipelines.load(saved(model)), tripsToScore), model.transform(tripsToScore))
+    }
+  }
+
+  test("kernel: dense and sparse feature vectors score as the model's transform scores them") {
+    val train = trips(1200)
+    val model = Pipelines.regression(train, tripsCfg.copy(algo = "rf")).fit(train)
+    val gbt = Pipelines.regression(train, tripsCfg).fit(train)
+    val features = GraftTreeFixtures.pipeline("features", model.stages.init).transform(tripsToScore)
+      .select(col("id"), col("features"))
+    val dense = udf((v: Vector) => v.toDense)
+    val sparse = udf((v: Vector) => v.toSparse)
+    Seq(dense, sparse).foreach { f =>
+      val df = features.withColumn("features", f(col("features")))
+      Seq(model.stages.last, gbt.stages.last).foreach(stage =>
+        sameScores(GraftTreeKernel.transform(stage, df), stage.transform(df)))
+    }
+  }
+
+  /** Rows over two features: a categorical value inside and outside
+    * `[0, numCategories)`, NaN, and a numeric either side of 0.5. */
+  private def handRows = {
+    val rows = Seq(Vectors.dense(5.0, 0.0), Vectors.sparse(2, Array(0), Array(-1.0)), Vectors.dense(2.0, 1.0),
+      Vectors.dense(0.0, 0.25), Vectors.sparse(2, Array(1), Array(0.75)), Vectors.dense(1.0, Double.NaN),
+      Vectors.dense(Double.NaN, 0.5), Vectors.dense(-0.0, -0.0))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("features", SQLDataTypes.VectorType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 2), schema)
+  }
+
+  test("kernel: a hand-built forest keeps a -0.0 sum and a categorical value outside [0, numCategories) goes left") {
+    // leftCategories {0, 1} of 3 is more than half: the split holds the
+    // complement {2} and goes left on any value not in it, 5.0 and -1.0
+    // included; both trees give -0.0 on the first two rows, whose sum
+    // `reduce(+)` keeps negative (a 0.0 start would not)
+    val first = categorical(0, Array(0.0, 1.0), 3, leaf(-0.0), leaf(1.0))
+    val second = continuous(1, 0.5, leaf(-0.0), categorical(0, Array(2.0), 4, leaf(4.0), leaf(8.0)))
+    val forest = GraftTreeFixtures.forest(2, first, second)
+    val reference = forest.transform(handRows)
+    val predicted = reference.select("id", "prediction").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // a forest built by hand keeps the default numTrees (20) as its divisor
+    assert(forest.getNumTrees == 20)
+    assert(java.lang.Double.doubleToRawLongBits(predicted(0L)) == java.lang.Double.doubleToRawLongBits(-0.0))
+    assert(predicted(1L).equals(-0.0))
+    sameScores(GraftTreeKernel.transform(forest, handRows), reference)
+    val boosted = GraftTreeFixtures.boosted(2, Array(1.0, 0.1), first, second)
+    sameScores(GraftTreeKernel.transform(boosted, handRows), boosted.transform(handRows))
+  }
+
+  test("kernel: another last stage, or a forest with a leaf column, runs the model's own transform") {
+    val train = trips(600)
+    val rf = Pipelines.regression(train, tripsCfg.copy(algo = "rf", numTrees = 3)).fit(train)
+    val init = rf.stages.init
+    val tree = new Pipeline().setStages(Array(new DecisionTreeRegressor()
+      .setLabelCol("trip_duration_min").setMaxDepth(4))).fit(GraftTreeFixtures.pipeline("f", init).transform(train))
+    val withTree = GraftTreeFixtures.pipeline("tree", init ++ tree.stages)
+    def forest = rf.stages.last.asInstanceOf[RandomForestRegressionModel].copy(ParamMap.empty)
+    val withLeaves = GraftTreeFixtures.pipeline("leaves", init :+ forest.setLeafCol("leaves"))
+    val noPrediction = GraftTreeFixtures.pipeline("none", init :+ forest.setPredictionCol(""))
+    Seq(withTree, withLeaves, noPrediction, GraftTreeFixtures.pipeline("features", init)).foreach { m =>
+      val viaEntry = Pipelines.transform(m, tripsToScore)
+      assert(!scoredByKernel(viaEntry), s"${m.uid}: the kernel ran")
+      assert(viaEntry.schema == m.transform(tripsToScore).schema)
+      assert(viaEntry.drop("features").collect().toSeq == m.transform(tripsToScore).drop("features").collect().toSeq)
+    }
+    assert(Pipelines.transform(withLeaves, tripsToScore).columns.contains("leaves"))
   }
 }
