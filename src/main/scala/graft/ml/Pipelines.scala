@@ -27,7 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `x <= threshold`, categorical splits as `CategoricalSplit.shouldGoLeft`
   *     with primitive `==`, the forest's `reduce(+)` sum over
   *     `getNumTrees`, the boosted `BLAS.nativeBLAS.ddot` of leaves and
-  *     weights) and the output column's name and metadata unchanged.
+  *     weights) and the output column's name and metadata unchanged; a
+  *     row whose path reads past the end of its features vector fails,
+  *     as in the model's own `predict`, and the other rows score.
   *
   * These are the same JVM classes PySpark delegates to, so fitted models and
   * metrics reproduce the reference bit-for-bit given identical input splits.
@@ -88,13 +90,14 @@ object Pipelines {
   }
 
   /** `model.transform(df)`, with a last stage that `GraftTreeKernel`
-    * covers (a forest or boosted ensemble with no leaf column) scored by
-    * the kernel; any other last stage runs its own `transform`. */
-  def transform(model: PipelineModel, df: DataFrame): DataFrame = model.stages.lastOption match {
-    case Some(last) if GraftTreeKernel.covers(last) =>
+    * scores (a forest or boosted ensemble with no leaf column) run by the
+    * kernel; any other last stage runs the model's own `transform`. */
+  def transform(model: PipelineModel, df: DataFrame): DataFrame = {
+    def features = {
       model.transformSchema(df.schema)
-      GraftTreeKernel.transform(last, model.stages.init.foldLeft(df)((d, s) => s.transform(d)))
-    case _ => model.transform(df)
+      model.stages.init.foldLeft(df)((d, s) => s.transform(d))
+    }
+    model.stages.lastOption.flatMap(GraftTreeKernel.transform(_, features)).getOrElse(model.transform(df))
   }
 
   final case class RegressionMetrics(rmse: Double, mae: Double, r2: Double)

@@ -13,33 +13,31 @@ import org.apache.spark.sql.functions.{col, udf}
   * `graft.ml.Pipelines`' scaladoc). */
 object GraftTreeKernel {
 
-  /** Whether `transform` scores `stage`: one of the two ensembles with a
-    * prediction column and no leaf column. */
-  def covers(stage: Transformer): Boolean = stage match {
-    case m: RandomForestRegressionModel => m.getPredictionCol.nonEmpty && m.getLeafCol.isEmpty
-    case m: GBTRegressionModel => m.getPredictionCol.nonEmpty && m.getLeafCol.isEmpty
-    case _ => false
-  }
-
-  /** `stage.transform(df)` for a stage that `covers` admits. */
-  def transform(stage: Transformer, df: DataFrame): DataFrame = {
+  /** `stage.transform(df)` when `stage` is one of the two ensembles with a
+    * prediction column and no leaf column, else `None` (and `df` is not
+    * evaluated). */
+  def transform(stage: Transformer, df: => DataFrame): Option[DataFrame] = {
     // the boosted model labels its prediction with the features column's
     // metadata (`GBTRegressionModel.transform` aliases the prediction
     // `as(featuresCol, schema(featuresCol).metadata)`), the forest with
     // the prediction column's
-    val (flat, featuresCol, predictionCol, metadataCol) = stage match {
-      case m: RandomForestRegressionModel =>
-        (Flat(m.trees.map(_.rootNode), None, m.getNumTrees), m.getFeaturesCol, m.getPredictionCol, m.getPredictionCol)
-      case m: GBTRegressionModel =>
-        (Flat(m.trees.map(_.rootNode), Some(m.treeWeights), m.getNumTrees), m.getFeaturesCol, m.getPredictionCol,
-          m.getFeaturesCol)
-      case _ => throw new IllegalArgumentException(s"no tree kernel for ${stage.getClass.getName}")
+    val ensemble = stage match {
+      case m: RandomForestRegressionModel if m.getPredictionCol.nonEmpty && m.getLeafCol.isEmpty =>
+        Some((Flat(m.trees.map(_.rootNode), None, m.getNumTrees), m.getFeaturesCol, m.getPredictionCol,
+          m.getPredictionCol))
+      case m: GBTRegressionModel if m.getPredictionCol.nonEmpty && m.getLeafCol.isEmpty =>
+        Some((Flat(m.trees.map(_.rootNode), Some(m.treeWeights), m.getNumTrees), m.getFeaturesCol,
+          m.getPredictionCol, m.getFeaturesCol))
+      case _ => None
     }
-    val schema = stage.transformSchema(df.schema)
-    val model = df.sparkSession.sparkContext.broadcast(flat)
-    val predict = udf { features: Vector => model.value.predict(features) }
-    df.withColumn(predictionCol,
-      predict(col(featuresCol)).as(predictionCol, schema(metadataCol).metadata))
+    ensemble.map { case (flat, featuresCol, predictionCol, metadataCol) =>
+      val data = df
+      val schema = stage.transformSchema(data.schema)
+      val model = data.sparkSession.sparkContext.broadcast(flat)
+      val predict = udf { features: Vector => model.value.predict(features) }
+      data.withColumn(predictionCol,
+        predict(col(featuresCol)).as(predictionCol, schema(metadataCol).metadata))
+    }
   }
 
   private final val Leaf = 0
@@ -68,12 +66,13 @@ object GraftTreeKernel {
     @transient private lazy val buffers = ThreadLocal.withInitial[(Array[Double], Array[Double])](
       () => (new Array[Double](width), new Array[Double](roots.length)))
 
+    /** The model's own `predict`. A row whose path reads a feature past
+      * the end of its vector fails, as there; the other rows score. */
     def predict(features: Vector): Double = {
-      require(features.size >= width,
-        s"a features vector of size ${features.size} is scored by trees reading feature ${width - 1}")
       val (dense, leaves) = buffers.get()
       features match {
         case v: DenseVector => combine(v.values, leaves)
+        case v: SparseVector if v.size < width => combine(v.toArray, leaves)
         case v: SparseVector =>
           val (idx, vals) = (v.indices, v.values)
           var k = 0

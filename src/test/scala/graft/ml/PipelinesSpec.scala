@@ -265,7 +265,7 @@ class PipelinesSpec extends AnyFunSuite {
     Seq(dense, sparse).foreach { f =>
       val df = features.withColumn("features", f(col("features")))
       Seq(model.stages.last, gbt.stages.last).foreach(stage =>
-        sameScores(GraftTreeKernel.transform(stage, df), stage.transform(df)))
+        sameScores(GraftTreeKernel.transform(stage, df).get, stage.transform(df)))
     }
   }
 
@@ -294,9 +294,9 @@ class PipelinesSpec extends AnyFunSuite {
     assert(forest.getNumTrees == 20)
     assert(java.lang.Double.doubleToRawLongBits(predicted(0L)) == java.lang.Double.doubleToRawLongBits(-0.0))
     assert(predicted(1L).equals(-0.0))
-    sameScores(GraftTreeKernel.transform(forest, handRows), reference)
+    sameScores(GraftTreeKernel.transform(forest, handRows).get, reference)
     val boosted = GraftTreeFixtures.boosted(2, Array(1.0, 0.1), first, second)
-    sameScores(GraftTreeKernel.transform(boosted, handRows), boosted.transform(handRows))
+    sameScores(GraftTreeKernel.transform(boosted, handRows).get, boosted.transform(handRows))
   }
 
   test("kernel: another last stage, or a forest with a leaf column, runs the model's own transform") {
@@ -316,5 +316,24 @@ class PipelinesSpec extends AnyFunSuite {
       assert(viaEntry.drop("features").collect().toSeq == m.transform(tripsToScore).drop("features").collect().toSeq)
     }
     assert(Pipelines.transform(withLeaves, tripsToScore).columns.contains("leaves"))
+    // a stage the kernel does not score leaves the frame unevaluated
+    Seq(withTree, withLeaves, noPrediction).foreach(m =>
+      assert(GraftTreeKernel.transform(m.stages.last, fail(s"${m.uid}: the frame was evaluated")).isEmpty))
+  }
+
+  test("kernel: a vector shorter than the trees read fails only on the rows whose path reads past it") {
+    // feature 1 is read only right of `x0 <= 0.5`
+    val forest = GraftTreeFixtures.forest(2, continuous(0, 0.5, leaf(1.0), continuous(1, 0.5, leaf(2.0), leaf(3.0))))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("features", SQLDataTypes.VectorType)))
+    def rows(vs: Vector*) = spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 2), schema)
+    val left = rows(Vectors.dense(0.0), Vectors.sparse(1, Array(0), Array(-1.0)), Vectors.dense(0.25),
+      Vectors.sparse(1, Array.empty, Array.empty))
+    sameScores(GraftTreeKernel.transform(forest, left).get, forest.transform(left))
+    Seq(Vectors.dense(1.0), Vectors.sparse(1, Array(0), Array(2.0))).foreach { v =>
+      val right = rows(Vectors.dense(0.0), v)
+      intercept[Exception](forest.transform(right).collect())
+      intercept[Exception](GraftTreeKernel.transform(forest, right).get.collect())
+    }
   }
 }
