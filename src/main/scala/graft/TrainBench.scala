@@ -67,8 +67,8 @@ object TrainBench {
     val baseline = 384.0 // ≈6.4 min, BASELINE.md's derived per-month figure
     val line =
       f"""{"train_bench":"gbt_50x5_300k","train_rows":$trainRows,"test_rows":$testRows,""" +
-        f""""fit_sec":$fitSec%.1f,"score_sec":$scoreSec%.1f,"metrics_sec":$metricSec%.1f,""" +
-        f""""total_sec":$total%.1f,"baseline_sec":$baseline%.1f,""" +
+        f""""fit_sec":$fitSec%.3f,"score_sec":$scoreSec%.3f,"metrics_sec":$metricSec%.3f,""" +
+        f""""total_sec":$total%.3f,"baseline_sec":$baseline%.1f,""" +
         f""""ratio_vs_baseline":${total / baseline}%.4f,"rmse":${metrics.rmse}%.4f,""" +
         f""""r2":${metrics.r2}%.4f,"sf":"$sfDir"}"""
     println(line)

@@ -2792,22 +2792,81 @@ object Snapshots {
           s"$rowIdCol identity is engine-declared under $rowTrackingProp")
         props0 + (identityPrefix + rowIdCol -> "1,1")
       }
-    val (gen, _, injected) = withIdentity(withGenerated(df, props), props)
     // a partitioned table's layout columns must exist up front (validated
     // once here; every later commit writes the same Hive layout —
     // GENERATED columns are materialized first, so a derived partition
     // key passes)
-    graft.core.HivePartitions.splitSchema(
-      gen.schema, graft.core.HivePartitions.columnsOf(props))
-    checkConstraints(gen, props)
-    val (adds, stats) = writeCommitFiles(spark, root, 0L, gen, props)
+    val st = stage(spark, root, Delta(Nil, Nil, props = props), 0L, df,
+      admit = gen => graft.core.HivePartitions.splitSchema(
+        gen.schema, graft.core.HivePartitions.columnsOf(props)))
     writeDelta(spark, root, 0L,
-      Delta(adds, Nil, txn,
-        schema = Some(nullable(gen.schema).json),
-        props = props ++ identityPatch(stats, injected, identity), stats = stats,
-        op = Some("init")))
+      Delta(st.adds, Nil, txn, schema = Some(st.schema.json),
+        props = props ++ st.patch, stats = st.stats, op = Some("init")))
     maybeCheckpoint(spark, root, 0L)
     0L
+  }
+
+  /** One ingest batch staged against its base: the data files written,
+    * their stats, the batch's own schema under frozen physical names
+    * (`batchSchema`, which `commitAdds` re-merges against the head it
+    * lands on) and the table schema it records against the base
+    * (`schema`), the identity hwm patch, and the stamped state the
+    * files depend on (`expect`: the hwms the ids were drawn above and
+    * the bucket layout the file names carry). `frame` is the prepared
+    * batch, for a route's own selection over it. */
+  private final case class Staged(
+      frame: DataFrame, adds: Seq[String],
+      stats: Map[String, graft.core.Skipping.FileStats],
+      batchSchema: StructType, schema: StructType,
+      patch: Map[String, String], expect: Map[String, String])
+
+  /** Stage `df0` as version `v`'s new files over `base` — the one
+    * sequence every route that lands new rows runs (init, append,
+    * streaming batches, COPY INTO, overwrite, replaceWhere, dynamic
+    * partition overwrite):
+    *
+    *   1. `upcastTo` the table's types, so a producer still emitting a
+    *      column's pre-widening type keeps landing (evolve only);
+    *   2. `withGenerated`: DEFAULTs first, then generated columns;
+    *   3. `withIdentity`: ids above the hwm for absent identity columns;
+    *   4. `checkConstraints`, then the route's own `admit` check;
+    *   5. the schema. `replace = false` EVOLVES the table:
+    *      `evolvedSchema` widens it by the batch's new columns under
+    *      frozen physical names and refuses a type change, before
+    *      anything is written. `replace = true` (overwrite) REPLACES it
+    *      with the batch's own;
+    *   6. `writeCommitFiles` of the batch in that schema's shape;
+    *   7. `identityPatch` through the physical map. */
+  private def stage(
+      spark: SparkSession, root: String, base: Delta, v: Long, df0: DataFrame,
+      replace: Boolean = false, admit: DataFrame => Unit = _ => ()): Staged = {
+    val props = base.props
+    val table =
+      if (replace) None else base.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (df, idExpect, injected) =
+      withIdentity(withGenerated(upcastTo(df0, table), props), props)
+    checkConstraints(df, props)
+    admit(df)
+    val (batchSchema, schema) =
+      if (replace) { val s = nullable(df.schema); (s, s) }
+      else evolvedSchema(table, df.schema, props)
+    val (adds, stats) = writeCommitFiles(spark, root, v, conform(df, schema), props, Some(schema))
+    val physOf = physicalMap(schema)
+    Staged(df, adds, stats, batchSchema, schema,
+      identityPatch(stats, injected, c => physOf.getOrElse(c, c)),
+      idExpect ++ Seq(bucketByProp, bucketCountProp).map(k => k -> props.getOrElse(k, "")))
+  }
+
+  /** The schema step of an evolving ingest, which MERGE's star actions
+    * share: `batch`'s fields under frozen physical names
+    * (`assignPhysical`), and `table` widened by them (`mergedSchema`,
+    * which refuses a changed column type). A batch column that still
+    * carries a pre-widening type must be up-cast first (`upcastTo`). */
+  private def evolvedSchema(
+      table: Option[StructType], batch: StructType,
+      props: Map[String, String]): (StructType, StructType) = {
+    val assigned = assignPhysical(table, batch, props)
+    (assigned, mergedSchema(table, assigned))
   }
 
   /** CONVERT an existing plain-parquet directory (optionally
@@ -2927,82 +2986,62 @@ object Snapshots {
     }
 
   private def appendTxn(
-      spark: SparkSession, root: String, df0: DataFrame, txn: Option[Long]): Long = {
-    var attempts = 0
-    while (true) {
-      val base = latestVersion(spark, root)
-      val baseDelta = readDelta(spark, root, base)
-      val props = baseDelta.props
-      val tableSchema = baseDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-      val (df, idExpect, injected) =
-        withIdentity(withGenerated(upcastTo(df0, tableSchema), props), props)
-      checkConstraints(df, props)
-      // freeze this batch's logical→physical assignment BEFORE writing,
-      // so the files and the recorded schema can never disagree (OCC
-      // retries re-merge the same assigned schema)
-      val assigned = assignPhysical(
-        baseDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType]),
-        df.schema, props)
-      val (adds, stats) = writeCommitFiles(spark, root, base + 1, df, props, Some(assigned))
-      val physOf = physicalMap(assigned)
-      // the batch's files are STAMPED under this layout (bucket ids in
-      // their names) — commitAdds refuses if a concurrent REBUCKET
-      // changed it, and the whole append (re-stamp included) retries
-      val bucketExpect = props.filter(kv =>
-        kv._1 == bucketByProp || kv._1 == bucketCountProp)
-      try {
-        return commitAdds(spark, root, adds, txn, base + 1, Some(assigned), stats,
-          expectProps = idExpect ++ bucketExpect,
-          patchProps = identityPatch(stats, injected, c => physOf.getOrElse(c, c)))
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            (e.getMessage.contains("bucket layout race") ||
-              e.getMessage.contains("identity allocation race")) =>
-          // BOTH stamped-state refusals (bucket ids in file names,
-          // identity values in file bytes) leave this attempt's files
-          // stale under the new head — remove them either way (no
-          // orphan debris on the FINAL attempt), then re-run the whole
-          // append (re-stamp included) against the current head
-          val (fs, qroot) = fsOf(spark, root)
-          adds.foreach(f => fs.delete(new Path(qroot, f), false))
-          if (attempts >= 5) throw e
-          attempts += 1
-      }
+      spark: SparkSession, root: String, df0: DataFrame, txn: Option[Long],
+      attemptsLeft: Int = 6): Long = {
+    val base = latestVersion(spark, root)
+    val st = stage(spark, root, readDelta(spark, root, base), base + 1, df0)
+    try commitAdds(spark, root, st.adds, txn, base + 1, Some(st.batchSchema), st.stats,
+      expectProps = st.expect, patchProps = st.patch)
+    catch {
+      // the staged files are gone; re-stage the whole append (re-stamp
+      // included) against the current head
+      case _: StaleStage if attemptsLeft > 1 =>
+        appendTxn(spark, root, df0, txn, attemptsLeft - 1)
     }
-    -1L // unreachable
   }
 
-  /** Optimistic-concurrency commit of a PURE APPEND: attempt `startV`; on a
-    * lost race, re-read the latest version and retry one higher. Safe
-    * because an append's delta references only its own new files — it
-    * commutes with any interleaved commit, so rebasing is just renumbering.
-    * The recorded schema is re-merged against the CURRENT base on every
-    * attempt (the winner may itself have evolved the schema). Exposed for
-    * the spec to exercise the collision branch deterministically. */
+  /** A stamped-state refusal from `commitAdds`: a winner made the staged
+    * files stale, and they are already deleted. The caller re-stages
+    * against the current head. */
+  private final class StaleStage(msg: String) extends IllegalStateException(msg)
+
+  /** Optimistic-concurrency commit of an ADDS-ONLY delta (append, COPY
+    * INTO, streaming batch): attempt `startV`; on a lost race, re-read
+    * the latest version and retry one higher. Safe because such a delta
+    * references only its own new files — it commutes with any
+    * interleaved commit, so rebasing is just renumbering. The recorded
+    * schema is re-merged against the CURRENT base on every attempt (the
+    * winner may itself have evolved the schema).
+    *
+    * Stamped state cannot rebase: identity ids and bucket ids are
+    * already in the written files' bytes and names, and a COPY INTO's
+    * `copied` source identities must land once. A winner that moved an
+    * `expectProps` value, or recorded any of `copied`, makes the staged
+    * files stale: they are deleted and `StaleStage` is thrown. Exposed
+    * for the spec to exercise the collision branch deterministically. */
   private[jobs] def commitAdds(
       spark: SparkSession, root: String, adds: Seq[String],
       txn: Option[Long], startV: Long, addSchema: Option[StructType] = None,
       stats: Map[String, graft.core.Skipping.FileStats] = Map.empty,
       expectProps: Map[String, String] = Map.empty,
-      patchProps: Map[String, String] = Map.empty): Long = {
+      patchProps: Map[String, String] = Map.empty,
+      op: String = "append", copied: Seq[String] = Nil): Long = {
+    def stale(msg: String): Nothing = {
+      val (fs, qroot) = fsOf(spark, root)
+      adds.foreach(f => fs.delete(new Path(qroot, f), false))
+      throw new StaleStage(s"$msg — retry the whole $op")
+    }
     var v = startV
     var attempts = 0
     var committed = false
     while (!committed) {
       val prevDelta = readDelta(spark, root, v - 1)
-      // stamped state cannot rebase — identity ids and bucket ids are
-      // already in the written files' bytes/names; a winner that moved
-      // the hwm (or the bucket layout) makes them stale
       expectProps.foreach { case (k, want) =>
         val got = prevDelta.props.getOrElse(k, "")
-        if (got != want) {
-          val kind =
-            if (k.startsWith(identityPrefix)) "identity allocation race"
-            else "bucket layout race"
-          throw new IllegalStateException(
-            s"$kind on $k (allocated against '$want', " +
-              s"head now carries '$got') — retry the whole append")
-        }
+        if (got != want) stale(
+          (if (k.startsWith(identityPrefix)) "identity allocation race"
+           else "bucket layout race") +
+            s" on $k (allocated against '$want', head now carries '$got')")
       }
       val schema = addSchema.map(s =>
         mergedSchema(prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType]), s).json)
@@ -3010,15 +3049,21 @@ object Snapshots {
         writeDelta(spark, root, v,
           Delta(adds, Nil, txn, schema = schema,
             props = prevDelta.props ++ patchProps,
-            stats = stats, op = Some("append"), dv = prevDelta.dv))
+            stats = stats, op = Some(op), dv = prevDelta.dv, copied = copied))
         committed = true
       } catch {
         case e: IllegalArgumentException if e.getMessage.contains("commit race") =>
+          val head = latestVersion(spark, root)
+          val mine = copied.toSet
+          (v to head).find(w => readDelta(spark, root, w).copied.exists(mine)).foreach { w =>
+            stale(s"copy race at version $w (a concurrent COPY INTO ingested " +
+              "some of the same source files)")
+          }
           attempts += 1
           if (attempts >= maxCommitRetries)
             throw new IllegalStateException(
-              s"append lost $maxCommitRetries commit races at $root — writer storm?", e)
-          v = math.max(v + 1, latestVersion(spark, root) + 1)
+              s"$op lost $maxCommitRetries commit races at $root — writer storm?", e)
+          v = math.max(v + 1, head + 1)
       }
     }
     maybeCheckpoint(spark, root, v)
@@ -3220,64 +3265,20 @@ object Snapshots {
         val allNull = declared.filter(c => counts.getLong(counts.fieldIndex(c)) == 0L)
         if (allNull.isEmpty) df0 else df0.drop(allNull: _*)
       }
-    val up = upcastTo(df1, Some(tableSchema)) // widened columns up-cast
-    mergedSchema(Some(tableSchema), up.schema) // refuse type changes loudly
-    val (df, idExpect, injected) =
-      withIdentity(withGenerated(up, props), props)
-    checkConstraints(df, props)
-    val assigned = assignPhysical(Some(tableSchema), df.schema, props)
-    val physOf = physicalMap(assigned)
-    val (fs, qroot) = fsOf(spark, root)
-    val (adds, stats) = writeCommitFiles(spark, root, base + 1, df, props, Some(assigned))
-    val idPatch = identityPatch(stats, injected, c => physOf.getOrElse(c, c))
-    val rows = adds.flatMap(stats.get).map(_.rows).sum
-    var v = base + 1
-    var committed = false
-    while (!committed) {
-      val prevDelta = readDelta(spark, root, v - 1)
-      idExpect.foreach { case (k, want) =>
-        val got = prevDelta.props.getOrElse(k, "")
-        if (got != want) throw new IllegalStateException(
-          s"identity allocation race on $k — retry the COPY INTO")
-      }
-      // bucket-layout race: the staged files carry bucket stamps from
-      // the layout read at `base` — a concurrent REBUCKET makes them
-      // stale; abandon the stage and re-plan from the new head (same
-      // self-healing shape as the racing-COPY replan below)
-      if (Seq(bucketByProp, bucketCountProp)
-          .exists(k => prevDelta.props.get(k) != props.get(k))) {
-        adds.foreach(f => fs.delete(new Path(qroot, f), false))
+    val st = stage(spark, root, baseDelta, base + 1, df1)
+    try {
+      val v = commitAdds(spark, root, st.adds, None, base + 1, Some(st.batchSchema),
+        st.stats, st.expect, st.patch, op = "copy", copied = freshIds)
+      CopyResult(v, fresh.size.toLong, skipped, st.adds.flatMap(st.stats.get).map(_.rows).sum)
+    } catch {
+      // a winner moved the stamped state or landed some of the same
+      // source files: the staged batch is gone, re-plan from the new head
+      case e: StaleStage =>
         require(attemptsLeft > 1,
-          s"COPY INTO lost ${4 - attemptsLeft} bucket-layout races at $root")
-        return copyInto(spark, root, from, format, pattern,
-          formatOptions, force, attemptsLeft - 1)
-      }
-      try {
-        writeDelta(spark, root, v,
-          Delta(adds, Nil, None,
-            schema = Some(mergedSchema(
-              prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType]),
-              assigned).json),
-            props = prevDelta.props ++ idPatch, stats = stats, op = Some("copy"),
-            dv = prevDelta.dv, copied = freshIds))
-        committed = true
-      } catch {
-        case e: IllegalArgumentException if e.getMessage.contains("commit race") =>
-          val head = latestVersion(spark, root)
-          if (freshIds.exists(copiedUpTo(spark, root, head).contains)) {
-            // a racing COPY ingested (some of) the same source files —
-            // abandon this staged batch and re-plan from the new head
-            adds.foreach(f => fs.delete(new Path(qroot, f), false))
-            require(attemptsLeft > 1,
-              s"COPY INTO lost ${4 - attemptsLeft} replan races at $root — scheduler storm?")
-            return copyInto(spark, root, from, format, pattern,
-              formatOptions, force, attemptsLeft - 1)
-          }
-          v = math.max(v + 1, head + 1)
-      }
+          s"COPY INTO lost ${4 - attemptsLeft} replan races at $root — scheduler storm? " +
+            s"(last: ${e.getMessage})")
+        copyInto(spark, root, from, format, pattern, formatOptions, force, attemptsLeft - 1)
     }
-    maybeCheckpoint(spark, root, v)
-    CopyResult(v, fresh.size.toLong, skipped, rows)
   }
 
   /** Replace the table's entire live content with `df` as ONE commit —
@@ -3298,15 +3299,13 @@ object Snapshots {
     // identity columns (incl. row tracking's `_row_id`) survive a full
     // replace: absent columns inject fresh ids ABOVE the existing hwm —
     // replaced rows' ids are never reused (Delta's overwrite admission)
-    val (df, _, injected) =
-      withIdentity(withGenerated(df0, prevDelta.props), prevDelta.props)
-    checkConstraints(df, prevDelta.props)
-    val removes = versionFileList(spark, root, base)
-    val (adds, stats) = writeCommitFiles(spark, root, base + 1, df, prevDelta.props)
+    val st = stage(spark, root, prevDelta, base + 1, df0, replace = true)
+    // every live file is replaced, so the base's deletion vectors go
+    // with them
     commitRewrite(spark, root, base + 1,
-      Delta(adds, removes, schema = Some(nullable(df.schema).json),
-        props = prevDelta.props ++ identityPatch(stats, injected, identity),
-        stats = stats, op = Some("overwrite")))
+      Delta(st.adds, versionFileList(spark, root, base), schema = Some(st.schema.json),
+        props = prevDelta.props ++ st.patch, stats = st.stats, op = Some("overwrite")),
+      dvDropped = prevDelta.dv, staged = st.adds)
   }
 
   /** The live files of `version` with their TYPED partition values as a
@@ -3375,27 +3374,21 @@ object Snapshots {
       spark: SparkSession, root: String, df0: DataFrame, predicateSql: String): Long = {
     val base = latestVersion(spark, root)
     val prevDelta = readDelta(spark, root, base)
+    val removes = filesMatchingPartitionPredicate(spark, root, base, predicateSql)
     // partition-scoped replaces are still an INGEST path: absent
     // identity columns (incl. row tracking's `_row_id`) inject fresh
     // ids above the hwm — without this, tracked rows landed NULL ids
-    val (df, _, injected) =
-      withIdentity(withGenerated(df0, prevDelta.props), prevDelta.props)
-    checkConstraints(df, prevDelta.props)
-    val bad = df.where(coalesce(expr(predicateSql), lit(false)) === false).take(1)
-    require(bad.isEmpty,
-      s"replaceWhere($predicateSql): batch rows outside the predicate, " +
-        s"e.g. ${bad.headOption.getOrElse("")}")
-    val prevSchema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val merged = mergedSchema(prevSchema,
-      assignPhysical(prevSchema, df.schema, prevDelta.props))
-    val removes = filesMatchingPartitionPredicate(spark, root, base, predicateSql)
-    val (adds, stats) = writeCommitFiles(
-      spark, root, base + 1, conform(df, merged), prevDelta.props, Some(merged))
+    val st = stage(spark, root, prevDelta, base + 1, df0, admit = { df =>
+      val bad = df.where(coalesce(expr(predicateSql), lit(false)) === false).take(1)
+      require(bad.isEmpty,
+        s"replaceWhere($predicateSql): batch rows outside the predicate, " +
+          s"e.g. ${bad.headOption.getOrElse("")}")
+    })
     commitRewrite(spark, root, base + 1,
-      Delta(adds, removes, schema = Some(merged.json),
-        props = prevDelta.props ++
-          identityPatch(stats, injected, c => physicalMap(merged).getOrElse(c, c)),
-        stats = stats, op = Some("overwrite"), dv = prevDelta.dv))
+      Delta(st.adds, removes, schema = Some(st.schema.json),
+        props = prevDelta.props ++ st.patch,
+        stats = st.stats, op = Some("overwrite"), dv = prevDelta.dv),
+      staged = st.adds)
   }
 
   /** Dynamic partition overwrite as ONE commit (Spark's
@@ -3412,24 +3405,17 @@ object Snapshots {
     require(partCols.nonEmpty, s"$root is not a partitioned table " +
       s"(no ${graft.core.HivePartitions.prop} property)")
     // same identity admission as replaceWhere: dynamic overwrite ingests
-    val (df, _, injected) =
-      withIdentity(withGenerated(df0, prevDelta.props), prevDelta.props)
-    checkConstraints(df, prevDelta.props)
-    val prevSchema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val merged = mergedSchema(prevSchema,
-      assignPhysical(prevSchema, df.schema, prevDelta.props))
-    val touched = df.select(partCols.map(col): _*).distinct().alias("t")
+    val st = stage(spark, root, prevDelta, base + 1, df0)
+    val touched = st.frame.select(partCols.map(col): _*).distinct().alias("t")
     val fileDf = filePartitionsFrame(spark, root, base).alias("f")
     val cond = partCols.map(c => col(s"f.$c") <=> col(s"t.$c")).reduce(_ && _)
     val removes = fileDf.join(touched, cond, "left_semi")
       .select(col("__file")).collect().map(_.getString(0)).toSeq.sorted
-    val (adds, stats) = writeCommitFiles(
-      spark, root, base + 1, conform(df, merged), prevDelta.props, Some(merged))
     commitRewrite(spark, root, base + 1,
-      Delta(adds, removes, schema = Some(merged.json),
-        props = prevDelta.props ++
-          identityPatch(stats, injected, c => physicalMap(merged).getOrElse(c, c)),
-        stats = stats, op = Some("overwrite"), dv = prevDelta.dv))
+      Delta(st.adds, removes, schema = Some(st.schema.json),
+        props = prevDelta.props ++ st.patch,
+        stats = st.stats, op = Some("overwrite"), dv = prevDelta.dv),
+      staged = st.adds)
   }
 
   /** A COW rewrite commit (removes + adds computed against a base
@@ -4529,13 +4515,15 @@ object Snapshots {
   /** Project `df` onto `target`: columns in order, absent ones
     * null-filled (types of present columns already validated by
     * `mergedSchema`). Identity when the shapes agree. */
-  private def conform(df: DataFrame, target: StructType): DataFrame = {
-    val have = df.columns.toSet
-    df.select(target.fields.toSeq.map { f =>
-      if (have(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
+  private def conform(df: DataFrame, target: StructType): DataFrame =
+    if (df.columns.toSeq == target.fieldNames.toSeq) df
+    else {
+      val have = df.columns.toSet
+      df.select(target.fields.toSeq.map { f =>
+        if (have(f.name)) df.col(s"`${f.name.replace("`", "``")}`")
+        else lit(null).cast(f.dataType).as(f.name)
+      }: _*)
+    }
 
   /** Copy-on-write whole-row MERGE (update-else-insert, the Merge
     * semantics): `mergeClauses` with `WHEN MATCHED THEN UPDATE SET *
@@ -4721,11 +4709,13 @@ object Snapshots {
       .map(DataType.fromJson(_).asInstanceOf[StructType])
       .getOrElse(readVersion(spark, root, prev).schema)
     // Delta's evolution rule: star actions widen the table by the
-    // source's new columns; a clause-only merge keeps the shape
+    // source's new columns, through the ingest's schema step (a source
+    // column still carrying a pre-widening type is up-cast); a
+    // clause-only merge keeps the shape
     val hasStar = (matched ++ notMatched).exists(_.kind.endsWith("*"))
     val merged =
-      if (hasStar) mergedSchema(Some(prevSchema),
-        assignPhysical(Some(prevSchema), src.select(starCols.map(col): _*).schema, props))
+      if (hasStar) evolvedSchema(Some(prevSchema),
+        upcastTo(src.select(starCols.map(col): _*), Some(prevSchema)).schema, props)._2
       else prevSchema
     val tgtNames = merged.fieldNames.toSeq
     val tracked = rowTrackingOn(props) && tgtNames.contains(rowIdCol)
@@ -5194,9 +5184,8 @@ object Snapshots {
       case _ => ()
     }
     val newFields = cols.map(_._1.copy(nullable = true))
-    val widened = mergedSchema(Some(schema),
-      assignPhysical(Some(schema), StructType(schema.fields ++ newFields),
-        prevDelta.props))
+    val (_, widened) = evolvedSchema(Some(schema),
+      StructType(schema.fields ++ newFields), prevDelta.props)
     val defaultProps = cols.collect { case (f, Some(sql)) =>
       (defaultPrefix + f.name) -> s"${f.dataType.catalogString}|$sql" }
     commitRewrite(spark, root, head + 1,
@@ -5330,8 +5319,11 @@ object Snapshots {
     * metadata-only commit, zero file rewrites: every existing file
     * keeps its narrower physical type and the vectorized reader
     * up-casts at scan time; new commits write the wide type. Batches
-    * still carrying the OLD (narrower) type keep appending — the
-    * ingest path up-casts them (`upcastTo`). Old integral stats
+    * still carrying the OLD (narrower) type keep landing through every
+    * ingest route — append, COPY INTO, replaceWhere, dynamic partition
+    * overwrite, streaming batches and MERGE's star actions up-cast them
+    * (`upcastTo`); only `overwrite`, which replaces the schema, keeps
+    * the batch's own types. Old integral stats
     * envelopes stay valid for integral widening; a widen into the
     * double/decimal family leaves old files envelope-less for the new
     * comparison space — conservatively scanned, never mis-pruned. */
@@ -5374,8 +5366,12 @@ object Snapshots {
 
   /** Up-cast batch columns whose type WIDENS to the table's — so a
     * producer still emitting the pre-widening type keeps working after
-    * `alterColumnType` (Delta's behavior). Non-widenable mismatches
-    * pass through untouched and fail loudly in `mergedSchema`. */
+    * `alterColumnType` (Delta's behavior). Every ingest route up-casts:
+    * `stage` runs it first (init, append, streaming batches, COPY INTO,
+    * replaceWhere, dynamic partition overwrite) and MERGE's star
+    * actions run it before the shared schema step. Non-widenable
+    * mismatches pass through untouched and fail loudly in
+    * `mergedSchema`. */
   private def upcastTo(df: DataFrame, table: Option[StructType]): DataFrame =
     table match {
       case None => df
@@ -5930,14 +5926,10 @@ object Snapshots {
     * Prior versions keep reading their own files. */
   def optimizeCow(
       spark: SparkSession, root: String, clusterBy: Seq[String], numFiles: Int,
-      where: Option[String] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val (scopeRead, scopeFiles) = scopedRead(spark, root, prev, where)
-    val clustered = scopeRead
-      .repartitionByRange(numFiles, clusterBy.map(col): _*)
-      .sortWithinPartitions(clusterBy.map(col): _*)
-    commitOptimized(spark, root, prev, clustered, scopeFiles)
-  }
+      where: Option[String] = None): Long =
+    commitOptimized(spark, root, where)(
+      _.repartitionByRange(numFiles, clusterBy.map(col): _*)
+        .sortWithinPartitions(clusterBy.map(col): _*))
 
   /** OPTIMIZE for a CLUSTERED table (`graft.clusterBy` set): Delta's
     * clustered-table behavior — plain OPTIMIZE re-clusters by the
@@ -6005,24 +5997,6 @@ object Snapshots {
     if (overlapping) rewrite() else -1L
   }
 
-  /** The (frame, rel-file-list) an OPTIMIZE variant rewrites: the whole
-    * version, or — with `where`, on a partitioned table — exactly the
-    * partitions matching the predicate. Files outside the scope are not
-    * read, not planned, and carry over as untouched manifest entries. */
-  private def scopedRead(
-      spark: SparkSession, root: String, prev: Long,
-      where: Option[String]): (DataFrame, Seq[String]) = where match {
-    case None =>
-      (readVersion(spark, root, prev), versionFileList(spark, root, prev))
-    case Some(p) =>
-      val (_, qroot) = fsOf(spark, root)
-      val prevDelta = readDelta(spark, root, prev)
-      val files = filesMatchingPartitionPredicate(spark, root, prev, p)
-      (readFilesAs(spark, qroot, files.map(f => new Path(qroot, f).toString),
-        prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType]),
-        prevDelta.props, prevDelta.dv), files)
-  }
-
   /** OPTIMIZE ZORDER BY as a commit: rewrite the current version laid out
     * by explicit Morton cell over TWO integral columns, so min/max file
     * skipping prunes range predicates on EITHER dimension afterwards
@@ -6034,29 +6008,44 @@ object Snapshots {
   def optimizeZorderCow(
       spark: SparkSession, root: String, colA: String, colB: String,
       cellDiv: Long = 4096L, numFiles: Int = 16,
-      where: Option[String] = None): Long = {
-    val prev = latestVersion(spark, root)
-    val (cur, scopeFiles) = scopedRead(spark, root, prev, where)
-    val clustered = cur
-      .withColumn("__zcell",
+      where: Option[String] = None): Long =
+    commitOptimized(spark, root, where)(
+      _.withColumn("__zcell",
         graft.functions.ZOrder.interleave16(col(colA), col(colB))
           .divide(lit(cellDiv)).cast("long"))
-      .repartition(numFiles, col("__zcell"))
-      .sortWithinPartitions(col("__zcell"), col(colA), col(colB))
-      .drop("__zcell")
-    commitOptimized(spark, root, prev, clustered, scopeFiles)
-  }
+        .repartition(numFiles, col("__zcell"))
+        .sortWithinPartitions(col("__zcell"), col(colA), col(colB))
+        .drop("__zcell"))
 
+  /** Rewrite the head laid out by `layout` as one OPTIMIZE commit: the
+    * whole version, or — with `where`, on a partitioned table — exactly
+    * the partitions matching the predicate. Files outside the scope are
+    * not read, not planned, and carry over as untouched manifest
+    * entries, with their deletion vectors. A whole-version rewrite reads
+    * through the vectors, so its commit drops them (`rebucket`'s rule). */
   private def commitOptimized(
-      spark: SparkSession, root: String, prev: Long, clustered: DataFrame,
-      removes: Seq[String]): Long = {
+      spark: SparkSession, root: String, where: Option[String])(
+      layout: DataFrame => DataFrame): Long = {
+    val prev = latestVersion(spark, root)
     val v = prev + 1
+    val (_, qroot) = fsOf(spark, root)
     val prevDelta = readDelta(spark, root, prev)
-    val (newFiles, stats) = writeCommitFiles(spark, root, v, clustered, prevDelta.props,
-      prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType]))
+    val schema = prevDelta.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+    val (cur, removes) = where match {
+      case None =>
+        (readVersion(spark, root, prev), versionFileList(spark, root, prev))
+      case Some(p) =>
+        val files = filesMatchingPartitionPredicate(spark, root, prev, p)
+        (readFilesAs(spark, qroot, files.map(f => new Path(qroot, f).toString),
+          schema, prevDelta.props, prevDelta.dv), files)
+    }
+    val (newFiles, stats) =
+      writeCommitFiles(spark, root, v, layout(cur), prevDelta.props, schema)
+    val whole = where.isEmpty
     commitRewrite(spark, root, v,
       Delta(newFiles, removes, schema = prevDelta.schema, props = prevDelta.props,
-        stats = stats, op = Some("optimize"), dv = prevDelta.dv))
+        stats = stats, op = Some("optimize"), dv = if (whole) Nil else prevDelta.dv),
+      dvDropped = if (whole) prevDelta.dv else Nil)
   }
 
   /** Highest streaming batch id at-or-below version `upTo`, scanning

@@ -352,4 +352,39 @@ class DeletionVectorsSpec extends AnyFunSuite {
     assert(got.select("fp").distinct().as[String].collect()
       .forall(_.contains("/data/")), "file_path resolves to real data files")
   }
+
+  test("a whole-version OPTIMIZE drops the vectors its read applied; a scoped one keeps them") {
+    val root = tmp()
+    Snapshots.init(spark, root,
+      (1L to 100L).map(i => (i, i * 1.0)).toDF("k", "v").repartition(4))
+    Snapshots.deleteWhereMor(spark, root, "k <= 10")
+    assert(Snapshots.liveDeletionVectors(spark, root).nonEmpty)
+    Snapshots.optimizeCow(spark, root, Seq("k"), 2)
+    assert(Snapshots.liveDeletionVectors(spark, root).isEmpty,
+      "every live file was rewritten from a vector-applied read")
+    assert(Snapshots.readVersion(spark, root).select("k").as[Long].collect().sorted.toSeq
+      == (11L to 100L))
+    val front = spark.read.format("graft.sources.SnapshotSource").load(root)
+    val antiJoins = front.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    }
+    assert(antiJoins.isEmpty, front.queryExecution.optimizedPlan)
+    assert(front.agg(sum("k")).head().getLong(0) == (11L to 100L).sum)
+    assert(Snapshots.rowCount(spark, root).contains(90L), "COUNT(*) from the log again")
+    Snapshots.dropFeature(spark, root, "deletionVectors")
+    assert(Snapshots.readVersion(spark, root).count() == 90)
+
+    // a partition-scoped rewrite leaves files outside its scope, with
+    // their vectors
+    val proot = tmp()
+    Snapshots.init(spark, proot,
+      (1L to 100L).map(i => (i, i % 2)).toDF("k", "p"), Map("graft.partitionBy" -> "p"))
+    Snapshots.deleteWhereMor(spark, proot, "k <= 10")
+    val dv = Snapshots.liveDeletionVectors(spark, proot)
+    Snapshots.optimizeCow(spark, proot, Seq("k"), 1, where = Some("p = 0"))
+    assert(Snapshots.liveDeletionVectors(spark, proot) == dv)
+    assert(Snapshots.readVersion(spark, proot).select("k").as[Long].collect().sorted.toSeq
+      == (11L to 100L))
+  }
 }
